@@ -1,4 +1,4 @@
-"""JDBC sink: DDL generation, batched inserts, upsert, key read-back.
+"""JDBC sink: per-dialect DDL and upsert SQL, and one write flow.
 
 Reference parity (``writers/DatabaseWriterActor.scala``):
 
@@ -6,43 +6,58 @@ Reference parity (``writers/DatabaseWriterActor.scala``):
   (``createSchemaAndStatements`` :862-1130; type tables
   ``helpers/DatabaseHelpers.scala:252-690``) → :func:`generate_ddl`.
   The reference's DFASDL ``length`` / ``max-length`` attributes map to
-  ``CHAR(n)`` / ``VARCHAR(n)`` per dialect; unbounded strings fall back
-  to each dialect's large-text type (CLOB / TEXT / LONGTEXT / …).
+  ``CHAR(n)`` / ``VARCHAR(n)`` below each dialect's width limit; wider
+  or unbounded strings take the dialect's large-text type (CLOB / TEXT
+  / LONGTEXT / …).
 - **Upsert** — the reference decides Insert/Update/Ignore per row via a
-  PK count statement (``:269-348,763-860``). Row-at-a-time round trips
-  cannot scale; we emit the set-wise dialect-native statement instead
-  (``INSERT … ON CONFLICT`` / ``ON DUPLICATE KEY`` / ``MERGE INTO`` /
-  Firebird ``UPDATE OR INSERT``) → :func:`upsert_statement`, executed
-  either batch-wise per partition or via a staging table + one MERGE.
+  PK count statement (``:269-348,763-860``). Here one builder per
+  statement family emits the dialect-native statement: ``MERGE`` (ANSI,
+  Derby, H2, HSQLDB, Oracle, SQL Server, Firebird), ``INSERT … ON
+  CONFLICT`` (Postgres, SQLite, DuckDB) and ``INSERT … ON DUPLICATE
+  KEY`` (MySQL). A dialect's row-wise ``upsert`` and its set-wise
+  ``merge_from_staging`` differ only in the source: one ``VALUES (?, …)``
+  row or the staging table. H2's ``MERGE … KEY`` and Firebird's
+  ``UPDATE OR INSERT`` are their native row forms.
 - **Custom db-insert / db-update SQL** override (``:1114-1134``) →
-  ``options["insert_sql"]``.
+  ``options["insert_sql"]`` on the DB-API route.
 - **Batched writes** with autocommit off (``:350,502,557``) →
-  ``batchsize`` on the Spark JDBC writer / ``executemany`` batches.
+  ``_BATCH``-row batches on every route.
 - **Generated-key harvest** (``:555-710`` + AutoIncrementValueBuffer)
-  → :func:`read_key_map`: re-read ``(natural_key, generated_key)``
-  after the parent write; the executor joins it against child FKs
-  (see ``operators/joins.remap_foreign_keys``).
+  → :func:`read_key_map` re-reads ``(natural_key, generated_key)``
+  pairs from a written table. ``run_pipeline`` does not need it: it
+  generates surrogate keys with ``sequential_id`` before the write and
+  remaps child FKs from those.
 
-Two execution paths:
+One write flow (:func:`write_jdbc`). On ``overwrite`` the target is
+dropped; it is then created from our dialect DDL, so Spark's generic
+type mapping never decides the schema. Both steps tolerate only the
+one harmless error: "no such table" on the drop, and "already exists"
+on the create where the dialect has no ``IF NOT EXISTS``. The rows are
+then drained or pushed, and an upsert ends in its upsert statement.
 
-1. **Spark JDBC** (scale path): distributed ``df.write.jdbc`` inserts;
-   upsert = distributed insert into a staging table, then one
-   driver-side MERGE (the JVM already holds the JDBC driver). This
-   path is exercised for real against the Derby embedded driver that
-   ships in Spark's own jars directory (tests/test_jdbc_live_derby.py)
-   — Derby is one of the reference's integration dialects
-   (``src/it/scala/databases/derby``).
-2. **DBAPI** (driver-side fallback; also the no-driver-jar test path,
-   exercised against DuckDB): ``options["dbapi_connect"]`` is a
-   zero-arg callable returning a DB-API connection; rows stream via
-   ``toLocalIterator`` in executemany batches. This funnels every row
-   through the driver, so it is gated by ``dbapi_max_rows`` (default
-   :data:`DBAPI_MAX_ROWS`) — above the gate it refuses and points at
-   path 1 instead of silently becoming a driver bottleneck.
+1. **JVM route** (default): DDL and MERGE run over one connection from
+   the driver JVM's DriverManager (:func:`jvm_execute`; the JDBC jar is
+   already on the Spark classpath). The push step appends rows to a
+   table. An embedded Derby lives inside this driver JVM, so its rows
+   go through :func:`jvm_write_rows` on one driver-side connection;
+   every other database gets Spark's distributed JDBC writer. Upsert
+   pushes into a staging table, then runs one set-wise
+   ``merge_from_staging``. Exercised for real against embedded Derby,
+   which ships in Spark's jars (tests/test_jdbc_live_derby.py), and
+   DuckDB's JDBC jar (tests/test_jdbc_live_duckdb.py).
+2. **DB-API route** (``options["dbapi_connect"]``, a zero-arg callable
+   returning a DB-API connection; also the streaming upsert sink):
+   rows are drained to the driver and sent in ``executemany`` batches.
+   Upsert stays row-wise, because a streaming micro-batch can repeat a
+   key: the row form keeps the last row, where a set-wise
+   ``INSERT … SELECT`` rejects the repeat. Every row funnels through
+   the driver, so the route refuses inputs above ``dbapi_max_rows``
+   (default :data:`DBAPI_MAX_ROWS`) and points at route 1 instead.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Iterable
 from dataclasses import replace
 
@@ -68,251 +83,188 @@ from . import register
 
 # --- dialect layer ---------------------------------------------------------
 
+# Spark type → the Dialect attribute naming its column type.
+_TYPE_ATTR = {
+    LongType: "bigint",
+    IntegerType: "integer",
+    ShortType: "smallint",
+    DoubleType: "double",
+    FloatType: "real",
+    BooleanType: "boolean",
+    DateType: "date",
+    TimestampType: "timestamp",
+    BinaryType: "binary",
+}
+
 
 class Dialect:
-    """Generic ANSI dialect; subclasses override the divergent bits
-    (≙ the per-driver branches of ``helpers/DatabaseHelpers.scala:252-690``)."""
+    """Generic ANSI dialect, upserting with MERGE. Subclasses state only
+    what differs (≙ the per-driver branches of
+    ``helpers/DatabaseHelpers.scala:252-690``)."""
 
     name = "ansi"
     auto_increment_clause = "GENERATED BY DEFAULT AS IDENTITY"
-    # Derby / Oracle / Firebird have no CREATE TABLE IF NOT EXISTS;
-    # callers there attempt the create and tolerate "already exists".
+    # Derby / Oracle / Firebird have no CREATE TABLE IF NOT EXISTS (nor
+    # DROP TABLE IF EXISTS); callers there run the plain statement and
+    # tolerate "already exists" / "no such table".
     supports_if_not_exists = True
+
+    bigint, integer, smallint, real = "BIGINT", "INTEGER", "SMALLINT", "REAL"
+    double, boolean, date = "DOUBLE PRECISION", "BOOLEAN", "DATE"
+    timestamp, binary = "TIMESTAMP", "BLOB"
+    # String sizing ≙ DFASDL length/max-length: fixed width → char(n),
+    # bounded → varchar(n), each only below its limit; else large text.
+    char, varchar, text = "CHAR({})", "VARCHAR({})", "VARCHAR(254)"
+    char_below = varchar_below = math.inf
+
+    # MERGE syntax.
+    merge_as = " AS "  # before the tgt / src correlation names
+    merge_hint = ""  # after the target table
+    merge_on = "{}"  # wraps the ON condition
+    merge_set = ""  # prefixes each updated column
+    merge_row = "(VALUES ({marks})) AS src({cols})"  # the one-row source
+    merge_end = ""  # statement terminator
 
     def sql_type(self, t: DataType, f: Field | None = None) -> str:
         if isinstance(t, StringType):
             return self.string_type(f)
-        if isinstance(t, LongType):
-            return self.long_type()
-        if isinstance(t, IntegerType):
-            return "INTEGER"
-        if isinstance(t, ShortType):
-            return "SMALLINT"
-        if isinstance(t, DoubleType):
-            return self.double_type()
-        if isinstance(t, FloatType):
-            return "REAL"
         if isinstance(t, DecimalType):
             return f"DECIMAL({t.precision},{t.scale})"
-        if isinstance(t, BooleanType):
-            return self.boolean_type()
-        if isinstance(t, DateType):
-            return "DATE"
-        if isinstance(t, TimestampType):
-            return self.timestamp_type()
-        if isinstance(t, BinaryType):
-            return self.binary_type()
-        raise ValueError(f"{self.name}: unmapped Spark type {t}")
+        if type(t) not in _TYPE_ATTR:
+            raise ValueError(f"{self.name}: unmapped Spark type {t}")
+        return getattr(self, _TYPE_ATTR[type(t)])
 
-    # String sizing ≙ DFASDL length/max-length: fixed width → CHAR(n),
-    # bounded → VARCHAR(n), unbounded → dialect large-text type.
     def string_type(self, f: Field | None = None) -> str:
-        if f is not None and f.length is not None:
-            return f"CHAR({f.length})"
-        if f is not None and f.max_length is not None:
-            return f"VARCHAR({f.max_length})"
-        return self.text_type()
-
-    def text_type(self) -> str:
-        return "VARCHAR(254)"  # the reference's default string width
-
-    def long_type(self) -> str:
-        return "BIGINT"
-
-    def double_type(self) -> str:
-        return "DOUBLE PRECISION"
-
-    def boolean_type(self) -> str:
-        return "BOOLEAN"
-
-    def timestamp_type(self) -> str:
-        return "TIMESTAMP"
-
-    def binary_type(self) -> str:
-        return "BLOB"
+        if f is not None and f.length is not None and f.length < self.char_below:
+            return self.char.format(f.length)
+        if f is not None and f.max_length is not None and f.max_length < self.varchar_below:
+            return self.varchar.format(f.max_length)
+        return self.text
 
     def quote(self, ident: str) -> str:
         return f'"{ident}"'
 
-    def upsert(self, table: str, cols: list[str], keys: list[str]) -> str:
-        """Set-wise upsert statement with ? placeholders (per-row batch).
+    def _list(self, cols: Iterable[str]) -> str:
+        return ", ".join(map(self.quote, cols))
 
-        Emulation order mirrors the reference's Insert/Update decision:
-        UPDATE where the key matches, INSERT where no row matched.
-        """
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        placeholders = ", ".join("?" for _ in cols)
-        return (
-            f"MERGE INTO {q(table)} USING (VALUES ({placeholders})) "
-            f"AS src({collist}) ON {' AND '.join(f'{q(table)}.{q(k)} = src.{q(k)}' for k in keys)} "
-            f"WHEN MATCHED THEN UPDATE SET "
-            f"{', '.join(f'{q(c)} = src.{q(c)}' for c in cols if c not in keys)} "
-            f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({collist})"
+    def _insert(self, table: str, cols: list[str], staging: str | None = None) -> str:
+        """INSERT INTO table (cols) from one ``?`` row, or from ``staging``."""
+        source = (
+            f"SELECT {self._list(cols)} FROM {self.quote(staging)}"
+            if staging
+            else f"VALUES ({', '.join('?' * len(cols))})"
         )
+        return f"INSERT INTO {self.quote(table)} ({self._list(cols)}) {source}"
+
+    def upsert(self, table: str, cols: list[str], keys: list[str]) -> str:
+        """Row-wise upsert with ``?`` placeholders (executemany batches)."""
+        return self._upsert(table, cols, keys)
 
     def merge_from_staging(
         self, table: str, staging: str, cols: list[str], keys: list[str]
     ) -> str:
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        srccols = ", ".join(f"src.{q(c)}" for c in cols)
+        """Set-wise upsert of every row of the ``staging`` table."""
+        return self._upsert(table, cols, keys, staging)
+
+    def _upsert(self, table, cols, keys, staging=None) -> str:
+        """The MERGE family. Emulation order mirrors the reference's
+        Insert/Update decision: UPDATE where the key matches, INSERT
+        where no row matched."""
+        q, a = self.quote, self.merge_as
+        source = f"{q(staging)}{a}src" if staging else self.merge_row.format(
+            marks=", ".join("?" * len(cols)),
+            cols=self._list(cols),
+            named=", ".join(f"? {q(c)}" for c in cols),
+        )
         on = " AND ".join(f"tgt.{q(k)} = src.{q(k)}" for k in keys)
         updates = ", ".join(
-            f"{q(c)} = src.{q(c)}" for c in cols if c not in keys
+            f"{self.merge_set}{q(c)} = src.{q(c)}" for c in cols if c not in keys
         )
         return (
-            f"MERGE INTO {q(table)} AS tgt USING {q(staging)} AS src ON {on} "
+            f"MERGE INTO {q(table)}{self.merge_hint}{a}tgt USING {source} "
+            f"ON {self.merge_on.format(on)} "
             + (f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else "")
-            + f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({srccols})"
+            + f"WHEN NOT MATCHED THEN INSERT ({self._list(cols)}) "
+            f"VALUES ({', '.join(f'src.{q(c)}' for c in cols)}){self.merge_end}"
         )
 
 
 class PostgresDialect(Dialect):
-    """≙ ``DatabaseHelpers.scala`` PostgreSql branch: CHARACTER(n) /
-    CHARACTER VARYING(n) / TEXT, BYTEA, TIMESTAMPTZ, BIGSERIAL."""
+    """≙ ``DatabaseHelpers.scala`` PostgreSql branch: CHARACTER(<256) /
+    CHARACTER VARYING(<65536) / TEXT, BYTEA; ``INSERT … ON CONFLICT``."""
 
     name = "postgresql"
-    auto_increment_clause = "GENERATED BY DEFAULT AS IDENTITY"
+    binary = "BYTEA"
+    char, varchar, text = "CHARACTER({})", "CHARACTER VARYING({})", "TEXT"
+    char_below, varchar_below = 256, 65536
 
-    def binary_type(self) -> str:
-        return "BYTEA"
-
-    def string_type(self, f: Field | None = None) -> str:
-        # Reference bounds: CHAR only below 256, VARCHAR only below 65536.
-        if f is not None and f.length is not None and f.length < 256:
-            return f"CHARACTER({f.length})"
-        if f is not None and f.max_length is not None and f.max_length < 65536:
-            return f"CHARACTER VARYING({f.max_length})"
-        return "TEXT"
-
-    def text_type(self) -> str:
-        return "TEXT"
-
-    def upsert(self, table, cols, keys):
+    def _upsert(self, table, cols, keys, staging=None):
         q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        placeholders = ", ".join("?" for _ in cols)
         updates = ", ".join(f"{q(c)} = EXCLUDED.{q(c)}" for c in cols if c not in keys)
-        conflict = ", ".join(q(k) for k in keys)
         action = f"DO UPDATE SET {updates}" if updates else "DO NOTHING"
         return (
-            f"INSERT INTO {q(table)} ({collist}) VALUES ({placeholders}) "
-            f"ON CONFLICT ({conflict}) {action}"
-        )
-
-    def merge_from_staging(self, table, staging, cols, keys):
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        updates = ", ".join(f"{q(c)} = EXCLUDED.{q(c)}" for c in cols if c not in keys)
-        conflict = ", ".join(q(k) for k in keys)
-        action = f"DO UPDATE SET {updates}" if updates else "DO NOTHING"
-        return (
-            f"INSERT INTO {q(table)} ({collist}) SELECT {collist} FROM {q(staging)} "
-            f"ON CONFLICT ({conflict}) {action}"
+            f"{self._insert(table, cols, staging)} "
+            f"ON CONFLICT ({self._list(keys)}) {action}"
         )
 
 
 class MySQLDialect(Dialect):
     """≙ MySql branch: CHAR(<256) / VARCHAR(<65536) / LONGTEXT, LONGBLOB,
-    DATETIME, AUTO_INCREMENT."""
+    DATETIME, AUTO_INCREMENT; ``INSERT … ON DUPLICATE KEY UPDATE``."""
 
     name = "mysql"
     auto_increment_clause = "AUTO_INCREMENT"
+    double, timestamp, binary, text = "DOUBLE", "DATETIME", "LONGBLOB", "LONGTEXT"
+    char_below, varchar_below = 256, 65536
 
     def quote(self, ident):
         return f"`{ident}`"
 
-    def string_type(self, f: Field | None = None):
-        if f is not None and f.length is not None and f.length < 256:
-            return f"CHAR({f.length})"
-        if f is not None and f.max_length is not None and f.max_length < 65536:
-            return f"VARCHAR({f.max_length})"
-        return "LONGTEXT"
-
-    def text_type(self):
-        return "VARCHAR(254)"
-
-    def binary_type(self):
-        return "LONGBLOB"
-
-    def timestamp_type(self):
-        return "DATETIME"
-
-    def double_type(self):
-        return "DOUBLE"
-
-    def upsert(self, table, cols, keys):
+    def _upsert(self, table, cols, keys, staging=None):
         q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        placeholders = ", ".join("?" for _ in cols)
         updates = ", ".join(
             f"{q(c)} = VALUES({q(c)})" for c in cols if c not in keys
         ) or f"{q(keys[0])} = {q(keys[0])}"
-        return (
-            f"INSERT INTO {q(table)} ({collist}) VALUES ({placeholders}) "
-            f"ON DUPLICATE KEY UPDATE {updates}"
-        )
-
-    def merge_from_staging(self, table, staging, cols, keys):
-        # MySQL has no MERGE; set-wise upsert = INSERT…SELECT ON DUP KEY.
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        updates = ", ".join(
-            f"{q(c)} = VALUES({q(c)})" for c in cols if c not in keys
-        ) or f"{q(keys[0])} = {q(keys[0])}"
-        return (
-            f"INSERT INTO {q(table)} ({collist}) SELECT {collist} FROM {q(staging)} "
-            f"ON DUPLICATE KEY UPDATE {updates}"
-        )
+        return f"{self._insert(table, cols, staging)} ON DUPLICATE KEY UPDATE {updates}"
 
 
 class SQLiteDialect(PostgresDialect):
-    """≙ SQLite branch: everything is TEXT/INTEGER/REAL/BLOB affinity."""
+    """≙ SQLite branch: everything is TEXT/INTEGER/REAL/BLOB affinity;
+    declared string widths are ignored."""
 
     name = "sqlite"
     auto_increment_clause = "PRIMARY KEY AUTOINCREMENT"
-
-    def string_type(self, f: Field | None = None):
-        return "TEXT"  # SQLite ignores declared widths (type affinity)
-
-    def text_type(self):
-        return "TEXT"
-
-    def binary_type(self):
-        return "BLOB"
+    binary = "BLOB"
+    char = varchar = text = "TEXT"
 
 
 class DuckDBDialect(PostgresDialect):
     name = "duckdb"
-
-    def binary_type(self):
-        return "BLOB"
+    binary = "BLOB"
 
 
 class DerbyDialect(Dialect):
-    """≙ Derby branch: CHAR(n)/VARCHAR(n)/CLOB, BLOB, identity columns.
-    Derby has no CREATE TABLE IF NOT EXISTS and its MERGE source must be
-    a base table — so row-wise upsert is staging-only (matches the
-    reference driving Derby through plain INSERT/UPDATE,
+    """≙ Derby branch: CHAR(n)/VARCHAR(≤32672)/CLOB, BLOB, identity
+    columns. Derby has no CREATE TABLE IF NOT EXISTS and its MERGE source
+    must be a base table — so row-wise upsert is staging-only (matches
+    the reference driving Derby through plain INSERT/UPDATE,
     ``src/it/scala/databases/derby``). BY DEFAULT, not ALWAYS: the
     executor's FK pipeline may supply explicit surrogate-key values
     (sequential_id), which ALWAYS rejects (SQLState 42Z23)."""
 
     name = "derby"
-    auto_increment_clause = "GENERATED BY DEFAULT AS IDENTITY"
     supports_if_not_exists = False
-
-    def text_type(self):
-        return "CLOB"
+    text = "CLOB"
+    varchar_below = 32673
+    merge_as = " "  # correlation names without AS only
 
     def string_type(self, f=None):
         # Derby rejects VARCHAR above 32672. The reference emits
         # VARCHAR(max-length) unconditionally (DatabaseHelpers.scala:
         # 285-290) and would fail DDL on e.g. the WordPress 65535-wide
-        # text columns; degrade those to CLOB instead.
-        if f is not None and f.max_length is not None and f.max_length > 32672:
-            return "CLOB"
+        # text columns; those degrade to CLOB, even with a length set.
+        if f is not None and f.max_length is not None and f.max_length >= self.varchar_below:
+            return self.text
         return super().string_type(f)
 
     def upsert(self, table, cols, keys):
@@ -322,19 +274,6 @@ class DerbyDialect(Dialect):
             "(write_jdbc with mode='upsert')."
         )
 
-    def merge_from_staging(self, table, staging, cols, keys):
-        # Derby accepts correlation names without AS only.
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        srccols = ", ".join(f"src.{q(c)}" for c in cols)
-        on = " AND ".join(f"tgt.{q(k)} = src.{q(k)}" for k in keys)
-        updates = ", ".join(f"{q(c)} = src.{q(c)}" for c in cols if c not in keys)
-        return (
-            f"MERGE INTO {q(table)} tgt USING {q(staging)} src ON {on} "
-            + (f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else "")
-            + f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({srccols})"
-        )
-
 
 class H2Dialect(Dialect):
     """≙ H2 branch: NCHAR(n)/NVARCHAR2(n)/NCLOB (sic — the reference
@@ -342,26 +281,13 @@ class H2Dialect(Dialect):
     ``MERGE INTO … KEY (…)`` row upsert."""
 
     name = "h2"
-    auto_increment_clause = "GENERATED BY DEFAULT AS IDENTITY"
-
-    def string_type(self, f: Field | None = None):
-        if f is not None and f.length is not None:
-            return f"NCHAR({f.length})"
-        if f is not None and f.max_length is not None:
-            return f"NVARCHAR2({f.max_length})"
-        return "NCLOB"
-
-    def double_type(self):
-        return "DOUBLE"
+    double = "DOUBLE"
+    char, varchar, text = "NCHAR({})", "NVARCHAR2({})", "NCLOB"
 
     def upsert(self, table, cols, keys):
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        placeholders = ", ".join("?" for _ in cols)
-        keylist = ", ".join(q(k) for k in keys)
         return (
-            f"MERGE INTO {q(table)} ({collist}) KEY ({keylist}) "
-            f"VALUES ({placeholders})"
+            f"MERGE INTO {self.quote(table)} ({self._list(cols)}) "
+            f"KEY ({self._list(keys)}) VALUES ({', '.join('?' * len(cols))})"
         )
 
 
@@ -370,128 +296,40 @@ class HsqldbDialect(Dialect):
     MERGE with a VALUES source."""
 
     name = "hsqldb"
-    auto_increment_clause = "GENERATED BY DEFAULT AS IDENTITY"
-
-    def string_type(self, f: Field | None = None):
-        if f is not None and f.length is not None:
-            return f"CHAR({f.length})"
-        if f is not None and f.max_length is not None:
-            return f"LONGVARCHAR({f.max_length})"
-        return "LONGVARCHAR"
+    varchar, text = "LONGVARCHAR({})", "LONGVARCHAR"
 
 
 class OracleDialect(Dialect):
     """≙ Oracle branch: NCHAR(≤2000)/NVARCHAR2(≤4000)/NCLOB, NUMBER,
     TIMESTAMP WITH TIME ZONE, ``GENERATED BY DEFAULT AS IDENTITY``
     (12c+, as the reference notes). Table aliases must NOT use AS; the
-    MERGE source is ``SELECT … FROM dual``."""
+    one-row MERGE source is ``SELECT … FROM dual``."""
 
     name = "oracle"
-    auto_increment_clause = "GENERATED BY DEFAULT AS IDENTITY"
     supports_if_not_exists = False
-
-    def string_type(self, f: Field | None = None):
-        if f is not None and f.length is not None and f.length <= 2000:
-            return f"NCHAR({f.length})"
-        if f is not None and f.max_length is not None and f.max_length <= 4000:
-            return f"NVARCHAR2({f.max_length})"
-        return "NCLOB"
-
-    def long_type(self):
-        return "NUMBER(19)"
-
-    def double_type(self):
-        return "BINARY_DOUBLE"
-
-    def boolean_type(self):
-        return "NUMBER(1)"
-
-    def timestamp_type(self):
-        return "TIMESTAMP WITH TIME ZONE"
-
-    def upsert(self, table, cols, keys):
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        srcsel = ", ".join(f"? {q(c)}" for c in cols)
-        on = " AND ".join(f"tgt.{q(k)} = src.{q(k)}" for k in keys)
-        updates = ", ".join(f"tgt.{q(c)} = src.{q(c)}" for c in cols if c not in keys)
-        srccols = ", ".join(f"src.{q(c)}" for c in cols)
-        return (
-            f"MERGE INTO {q(table)} tgt USING (SELECT {srcsel} FROM dual) src "
-            f"ON ({on}) "
-            + (f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else "")
-            + f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({srccols})"
-        )
-
-    def merge_from_staging(self, table, staging, cols, keys):
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        srccols = ", ".join(f"src.{q(c)}" for c in cols)
-        on = " AND ".join(f"tgt.{q(k)} = src.{q(k)}" for k in keys)
-        updates = ", ".join(f"tgt.{q(c)} = src.{q(c)}" for c in cols if c not in keys)
-        return (
-            f"MERGE INTO {q(table)} tgt USING {q(staging)} src ON ({on}) "
-            + (f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else "")
-            + f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({srccols})"
-        )
+    bigint, double, boolean = "NUMBER(19)", "BINARY_DOUBLE", "NUMBER(1)"
+    timestamp = "TIMESTAMP WITH TIME ZONE"
+    char, varchar, text = "NCHAR({})", "NVARCHAR2({})", "NCLOB"
+    char_below, varchar_below = 2001, 4001
+    merge_as, merge_on, merge_set = " ", "({})", "tgt."
+    merge_row = "(SELECT {named} FROM dual) src"
 
 
 class SQLServerDialect(Dialect):
-    """≙ SqlServer branch: NCHAR(n)/NVARCHAR(n)/NTEXT, VARBINARY,
-    DATETIME2, FLOAT, ``IDENTITY``; MERGE takes WITH (HOLDLOCK) to be
-    upsert-race-safe and requires a terminating semicolon."""
+    """≙ SqlServer branch: NCHAR(n)/NVARCHAR(n)/NVARCHAR(MAX) (NTEXT is
+    deprecated; the reference used it), VARBINARY, DATETIME2, FLOAT,
+    ``IDENTITY``; MERGE takes WITH (HOLDLOCK) to be upsert-race-safe and
+    requires a terminating semicolon."""
 
     name = "sqlserver"
     auto_increment_clause = "IDENTITY(1,1)"
+    double, boolean, timestamp, binary = "FLOAT", "BIT", "DATETIME2", "VARBINARY(MAX)"
+    char, varchar, text = "NCHAR({})", "NVARCHAR({})", "NVARCHAR(MAX)"
+    merge_hint, merge_set, merge_end = " WITH (HOLDLOCK)", "tgt.", ";"
+    merge_row = "(VALUES ({marks})) AS src ({cols})"
 
     def quote(self, ident):
         return f"[{ident}]"
-
-    def string_type(self, f: Field | None = None):
-        if f is not None and f.length is not None:
-            return f"NCHAR({f.length})"
-        if f is not None and f.max_length is not None:
-            return f"NVARCHAR({f.max_length})"
-        return "NVARCHAR(MAX)"  # NTEXT is deprecated; reference used NTEXT
-
-    def binary_type(self):
-        return "VARBINARY(MAX)"
-
-    def timestamp_type(self):
-        return "DATETIME2"
-
-    def double_type(self):
-        return "FLOAT"
-
-    def boolean_type(self):
-        return "BIT"
-
-    def upsert(self, table, cols, keys):
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        placeholders = ", ".join("?" for _ in cols)
-        on = " AND ".join(f"tgt.{q(k)} = src.{q(k)}" for k in keys)
-        updates = ", ".join(f"tgt.{q(c)} = src.{q(c)}" for c in cols if c not in keys)
-        srccols = ", ".join(f"src.{q(c)}" for c in cols)
-        return (
-            f"MERGE INTO {q(table)} WITH (HOLDLOCK) AS tgt "
-            f"USING (VALUES ({placeholders})) AS src ({collist}) ON {on} "
-            + (f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else "")
-            + f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({srccols});"
-        )
-
-    def merge_from_staging(self, table, staging, cols, keys):
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        srccols = ", ".join(f"src.{q(c)}" for c in cols)
-        on = " AND ".join(f"tgt.{q(k)} = src.{q(k)}" for k in keys)
-        updates = ", ".join(f"tgt.{q(c)} = src.{q(c)}" for c in cols if c not in keys)
-        return (
-            f"MERGE INTO {q(table)} WITH (HOLDLOCK) AS tgt "
-            f"USING {q(staging)} AS src ON {on} "
-            + (f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else "")
-            + f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({srccols});"
-        )
 
 
 class FirebirdDialect(Dialect):
@@ -501,37 +339,13 @@ class FirebirdDialect(Dialect):
     supports the SQL-standard clause, which we emit."""
 
     name = "firebirdsql"
-    auto_increment_clause = "GENERATED BY DEFAULT AS IDENTITY"
     supports_if_not_exists = False
-
-    def string_type(self, f: Field | None = None):
-        if f is not None and f.length is not None and f.length < 32767:
-            return f"CHAR({f.length})"
-        if f is not None and f.max_length is not None and f.max_length < 32767:
-            return f"VARCHAR({f.max_length})"
-        return "BLOB SUB_TYPE TEXT"
+    text = "BLOB SUB_TYPE TEXT"
+    char_below = varchar_below = 32767
+    merge_as, merge_set = " ", "tgt."
 
     def upsert(self, table, cols, keys):
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        placeholders = ", ".join("?" for _ in cols)
-        keylist = ", ".join(q(k) for k in keys)
-        return (
-            f"UPDATE OR INSERT INTO {q(table)} ({collist}) "
-            f"VALUES ({placeholders}) MATCHING ({keylist})"
-        )
-
-    def merge_from_staging(self, table, staging, cols, keys):
-        q = self.quote
-        collist = ", ".join(q(c) for c in cols)
-        srccols = ", ".join(f"src.{q(c)}" for c in cols)
-        on = " AND ".join(f"tgt.{q(k)} = src.{q(k)}" for k in keys)
-        updates = ", ".join(f"tgt.{q(c)} = src.{q(c)}" for c in cols if c not in keys)
-        return (
-            f"MERGE INTO {q(table)} tgt USING {q(staging)} src ON {on} "
-            + (f"WHEN MATCHED THEN UPDATE SET {updates} " if updates else "")
-            + f"WHEN NOT MATCHED THEN INSERT ({collist}) VALUES ({srccols})"
-        )
+        return f"UPDATE OR {self._insert(table, cols)} MATCHING ({self._list(keys)})"
 
 
 DIALECTS: dict[str, Dialect] = {
@@ -599,7 +413,7 @@ def generate_ddl(
     # PK MUST still be emitted — upsert's ON CONFLICT (k) needs a
     # matching PK/UNIQUE constraint or SQLite rejects the statement.
     constraint = (
-        [f"PRIMARY KEY ({', '.join(q(c) for c in pk)})"]
+        [f"PRIMARY KEY ({dialect._list(pk)})"]
         if pk and not (dialect.name == "sqlite" and has_auto)
         else []
     )
@@ -611,14 +425,7 @@ def generate_ddl(
     )
 
 
-def upsert_statement(
-    url_or_dialect: str | Dialect, table: str, cols: list[str], keys: list[str]
-) -> str:
-    d = url_or_dialect if isinstance(url_or_dialect, Dialect) else dialect_for(url_or_dialect)
-    return d.upsert(table, cols, keys)
-
-
-# --- execution paths -------------------------------------------------------
+# --- the shared write steps ------------------------------------------------
 
 _BATCH = 1000  # ≙ the reference's batch/flush granularity
 
@@ -626,12 +433,6 @@ _BATCH = 1000  # ≙ the reference's batch/flush granularity
 #: rows that is a driver bottleneck → refuse and demand the Spark JDBC
 #: path (or an explicit higher limit).
 DBAPI_MAX_ROWS = 1_000_000
-
-
-def _dbapi_rows(df: DataFrame):
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        yield tuple(row)
-
 
 # "Table already exists" signatures per dialect (Derby SQLState X0Y32,
 # Oracle ORA-00955, generic "already exists"). Deliberately NOT a bare
@@ -647,19 +448,78 @@ _NOT_EXISTS = (
 )
 
 
-def _matches(exc: Exception, signatures: tuple[str, ...]) -> bool:
-    msg = str(exc).lower()
-    return any(s in msg for s in signatures)
-
-
-def _ensure_table(cur, ddl: str, dialect: Dialect) -> None:
-    """Execute CREATE TABLE, tolerating pre-existence for dialects
-    without IF NOT EXISTS (Derby SQLState X0Y32, Oracle ORA-00955)."""
+def _tolerant(execute: Callable[[str], object], sql: str, signatures) -> None:
     try:
-        cur.execute(ddl)
-    except Exception as exc:  # noqa: BLE001 - DBAPI errors are driver-specific
-        if dialect.supports_if_not_exists or not _matches(exc, _ALREADY_EXISTS):
+        execute(sql)
+    except Exception as exc:  # noqa: BLE001 - DB-API and py4j errors are driver-specific
+        if not any(s in str(exc).lower() for s in signatures):
             raise
+
+
+def _create(execute, dialect: Dialect, schema, table: str, fields=()) -> None:
+    """CREATE TABLE from our dialect DDL, tolerating pre-existence for
+    dialects without IF NOT EXISTS (Derby X0Y32, Oracle ORA-00955)."""
+    ddl = generate_ddl(schema, table, dialect, fields)
+    if dialect.supports_if_not_exists:
+        execute(ddl)
+    else:
+        _tolerant(execute, ddl, _ALREADY_EXISTS)
+
+
+def _drop(execute, dialect: Dialect, table: str) -> None:
+    """DROP TABLE tolerating ONLY 'no such table' errors. Any other
+    failure (dependent view, held lock, permissions) propagates —
+    swallowing it would silently turn an overwrite into an append, or
+    MERGE stale staging rows from a crashed prior run. ``IF EXISTS``
+    where the dialect has it, so a missing table never aborts an open
+    DB-API transaction (Postgres)."""
+    exists = "IF EXISTS " if dialect.supports_if_not_exists else ""
+    _tolerant(execute, f"DROP TABLE {exists}{dialect.quote(table)}", _NOT_EXISTS)
+
+
+def _drain(df: DataFrame, size: int = _BATCH):
+    """The frame's rows as tuples, in lists of up to ``size``.
+
+    ``collect()``, not ``toLocalIterator()``: a local iterator never
+    completes a ``DataFrame.observe`` Observation, so
+    ``run_pipeline(metrics=...)`` blocked on it forever. Both hand the
+    connectors the same Python values (None, Decimal, date, naive
+    datetime, bytearray). Holding the rows is bounded: the DB-API route
+    is gated by ``max_rows``, and an embedded database keeps them in
+    this JVM anyway.
+    """
+    rows = df.collect()
+    for i in range(0, len(rows), size):
+        yield [tuple(r) for r in rows[i : i + size]]
+
+
+def _jvm_executor(spark, url: str, driver: str | None) -> Callable[[str], object]:
+    return lambda sql: jvm_execute(spark, url, [sql], driver)
+
+
+def _push(df: DataFrame, url: str, table: str, dialect: Dialect, driver, opts) -> None:
+    """Append the rows to ``table``. An embedded Derby (``jdbc:derby:path``;
+    the network form is ``jdbc:derby://host``) lives inside this driver
+    JVM — cluster executors could never reach it — so its rows go
+    through :func:`jvm_write_rows`; every other database gets Spark's
+    distributed JDBC writer."""
+    if dialect.name == "derby" and not url.startswith("jdbc:derby://"):
+        jvm_write_rows(df.sparkSession, url, table, df, dialect, driver)
+        return
+    df.write.format("jdbc").options(
+        **{
+            "url": url,
+            # Quote: case-folding DBs (Derby uppercases unquoted names)
+            # must resolve to the table OUR quoted DDL created.
+            "dbtable": dialect.quote(table),
+            "batchsize": str(_BATCH),
+            "isolationLevel": "READ_COMMITTED",
+            **{k: str(v) for k, v in opts.items()},
+        }
+    ).mode("append").save()
+
+
+# --- DB-API route ----------------------------------------------------------
 
 
 def _adapt_paramstyle(sql: str, conn) -> str:
@@ -690,8 +550,8 @@ def dbapi_write(
 ) -> None:
     """Driver-side DB-API write: DDL + executemany batches (+ upsert).
 
-    The no-jar test path and the small-table path; rows stream through
-    the driver in _BATCH chunks (autocommit off, like the reference).
+    The no-jar test path and the small-table path; rows go through the
+    driver in _BATCH chunks (autocommit off, like the reference).
     Refuses DataFrames above ``max_rows`` — use the distributed
     ``write_jdbc`` Spark-JDBC path for big tables.
     """
@@ -707,27 +567,18 @@ def dbapi_write(
         )
     conn = connect()
     cur = conn.cursor()
-    q = dialect.quote
-    cols = df.columns
     try:
         if mode == "overwrite":
-            cur.execute(f"DROP TABLE IF EXISTS {q(table)}")
-        _ensure_table(cur, generate_ddl(df.schema, table, dialect, fields), dialect)
-        if mode == "upsert":
-            sql = insert_sql or dialect.upsert(table, cols, key_cols or [])
-        else:
-            placeholders = ", ".join("?" for _ in cols)
-            collist = ", ".join(q(c) for c in cols)
-            sql = insert_sql or f"INSERT INTO {q(table)} ({collist}) VALUES ({placeholders})"
+            _drop(cur.execute, dialect, table)
+        _create(cur.execute, dialect, df.schema, table, fields)
+        sql = insert_sql or (
+            dialect.upsert(table, df.columns, key_cols or [])
+            if mode == "upsert"
+            else dialect._insert(table, df.columns)
+        )
         sql = _adapt_paramstyle(sql, conn)
-        batch: list[tuple] = []
-        for row in _dbapi_rows(df):
-            batch.append(row)
-            if len(batch) >= _BATCH:
-                cur.executemany(sql, batch)
-                batch.clear()
-        if batch:
-            cur.executemany(sql, batch)
+        for chunk in _drain(df):
+            cur.executemany(sql, chunk)
         conn.commit()
     except BaseException:
         # Release locks held by the open uncommitted transaction before
@@ -772,7 +623,7 @@ def read_key_map(
             pass
 
 
-# --- Spark JDBC (scale) path ----------------------------------------------
+# --- JVM route -------------------------------------------------------------
 
 
 def _jvm_connection(spark, url: str, driver: str | None = None):
@@ -836,62 +687,49 @@ def jvm_write_rows(
     the implicit CLOB→VARCHAR parameter assignment, so any row with a
     NULL string aimed at a VARCHAR column kills the job. This path
     binds NULLs with the COLUMN'S OWN type from ParameterMetaData.
-
-    Architecturally honest, not a downgrade: an embedded Derby lives
-    inside this driver JVM — cluster executors could never reach it —
-    so its writes are driver-side by construction. Network-addressed
-    databases keep the distributed Spark writer.
     """
     import datetime as _dt
     from decimal import Decimal as _Dec
 
-    q = dialect.quote
     cols = df.columns
-    sql = (
-        f"INSERT INTO {q(table)} ({', '.join(q(c) for c in cols)}) "
-        f"VALUES ({', '.join('?' for _ in cols)})"
-    )
     jvm = spark._jvm
     conn = _jvm_connection(spark, url, driver)
     try:
         conn.setAutoCommit(False)
-        ps = conn.prepareStatement(sql)
+        ps = conn.prepareStatement(dialect._insert(table, cols))
         ptypes = [
             ps.getParameterMetaData().getParameterType(i + 1)
             for i in range(len(cols))
         ]
-        n = 0
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            for i, v in enumerate(row):
-                if v is None:
-                    ps.setNull(i + 1, ptypes[i])
-                elif isinstance(v, bool):  # before int: bool is an int
-                    ps.setBoolean(i + 1, v)
-                elif isinstance(v, int):
-                    ps.setLong(i + 1, v)
-                elif isinstance(v, float):
-                    ps.setDouble(i + 1, v)
-                elif isinstance(v, _Dec):
-                    ps.setBigDecimal(i + 1, jvm.java.math.BigDecimal(str(v)))
-                elif isinstance(v, _dt.datetime):
-                    ps.setTimestamp(
-                        i + 1,
-                        jvm.java.sql.Timestamp.valueOf(
-                            v.strftime("%Y-%m-%d %H:%M:%S")
-                            + f".{v.microsecond:06d}"
-                        ),
-                    )
-                elif isinstance(v, _dt.date):
-                    ps.setDate(i + 1, jvm.java.sql.Date.valueOf(v.isoformat()))
-                elif isinstance(v, (bytes, bytearray)):
-                    ps.setBytes(i + 1, bytes(v))
-                else:
-                    ps.setString(i + 1, str(v))
-            ps.addBatch()
-            n += 1
-            if n % batch == 0:
-                ps.executeBatch()
-        ps.executeBatch()
+        for chunk in _drain(df, batch):
+            for row in chunk:
+                for i, v in enumerate(row):
+                    if v is None:
+                        ps.setNull(i + 1, ptypes[i])
+                    elif isinstance(v, bool):  # before int: bool is an int
+                        ps.setBoolean(i + 1, v)
+                    elif isinstance(v, int):
+                        ps.setLong(i + 1, v)
+                    elif isinstance(v, float):
+                        ps.setDouble(i + 1, v)
+                    elif isinstance(v, _Dec):
+                        ps.setBigDecimal(i + 1, jvm.java.math.BigDecimal(str(v)))
+                    elif isinstance(v, _dt.datetime):
+                        ps.setTimestamp(
+                            i + 1,
+                            jvm.java.sql.Timestamp.valueOf(
+                                v.strftime("%Y-%m-%d %H:%M:%S")
+                                + f".{v.microsecond:06d}"
+                            ),
+                        )
+                    elif isinstance(v, _dt.date):
+                        ps.setDate(i + 1, jvm.java.sql.Date.valueOf(v.isoformat()))
+                    elif isinstance(v, (bytes, bytearray)):
+                        ps.setBytes(i + 1, bytes(v))
+                    else:
+                        ps.setString(i + 1, str(v))
+                ps.addBatch()
+            ps.executeBatch()
         conn.commit()
         ps.close()
     except BaseException:
@@ -904,42 +742,9 @@ def jvm_write_rows(
         conn.close()
 
 
-def _embedded_jvm_db(dialect: Dialect, url: str) -> bool:
-    """True when the database engine runs inside this driver JVM
-    (embedded Derby: ``jdbc:derby:path`` — the network form is
-    ``jdbc:derby://host``)."""
-    return dialect.name == "derby" and not url.startswith("jdbc:derby://")
-
-
-def ensure_table_jvm(
-    spark,
-    url: str,
-    schema: StructType,
-    table: str,
-    dialect: Dialect,
-    fields: Iterable[Field] = (),
-    driver: str | None = None,
-) -> None:
-    """CREATE TABLE via the JVM, tolerating pre-existence for dialects
-    without IF NOT EXISTS (same contract as :func:`_ensure_table`)."""
-    ddl = generate_ddl(schema, table, dialect, fields)
-    try:
-        jvm_execute(spark, url, [ddl], driver)
-    except Exception as exc:  # noqa: BLE001 - py4j wraps SQLExceptions
-        if dialect.supports_if_not_exists or not _matches(exc, _ALREADY_EXISTS):
-            raise
-
-
 def drop_table_jvm(spark, url: str, table: str, dialect: Dialect, driver) -> None:
-    """DROP TABLE tolerating ONLY 'no such table' errors. Any other
-    failure (dependent view, held lock, permissions) propagates —
-    swallowing it would silently turn an overwrite into an append, or
-    MERGE stale staging rows from a crashed prior run."""
-    try:
-        jvm_execute(spark, url, [f"DROP TABLE {dialect.quote(table)}"], driver)
-    except Exception as exc:  # noqa: BLE001 - py4j wraps SQLExceptions
-        if not _matches(exc, _NOT_EXISTS):
-            raise
+    """DROP TABLE through the JVM, tolerating only 'no such table'."""
+    _drop(_jvm_executor(spark, url, driver), dialect, table)
 
 
 @register("jdbc")
@@ -961,65 +766,30 @@ def write_jdbc(df: DataFrame, spec: TargetSpec) -> None:
         )
         return
 
-    spark = df.sparkSession
-    driver = opts.get("driver")
-    batchsize = str(opts.pop("batchsize", _BATCH))
-
+    spark, url, driver = df.sparkSession, spec.uri, opts.get("driver")
+    execute = _jvm_executor(spark, url, driver)
+    if spec.mode == "overwrite":
+        _drop(execute, dialect, table)
+    _create(execute, dialect, df.schema, table, spec.fields)
     if spec.mode in ("append", "overwrite"):
-        # Pre-create the target with OUR dialect DDL (PK / identity /
-        # CHAR-width semantics) so Spark's generic type mapping never
-        # decides the schema; then append distributed.
-        if spec.mode == "overwrite":
-            drop_table_jvm(spark, spec.uri, table, dialect, driver)
-        ensure_table_jvm(spark, spec.uri, df.schema, table, dialect, spec.fields, driver)
-        if _embedded_jvm_db(dialect, spec.uri):
-            jvm_write_rows(spark, spec.uri, table, df, dialect, driver)
-            return
-        writer = (
-            df.write.format("jdbc")
-            .option("url", spec.uri)
-            # Quote: case-folding DBs (Derby uppercases unquoted names)
-            # must resolve to the table OUR quoted DDL created.
-            .option("dbtable", dialect.quote(table))
-            .option("batchsize", batchsize)
-            .option("isolationLevel", "READ_COMMITTED")
-        )
-        for k, v in opts.items():
-            writer = writer.option(k, str(v))
-        writer.mode("append").save()
+        _push(df, url, table, dialect, driver, opts)
         return
 
-    # Upsert: distributed insert into a staging table, then ONE set-wise
-    # MERGE executed through the driver JVM's DriverManager (the JDBC
-    # driver jar is already on the Spark classpath for the staging write).
-    staging = f"{table}__stage"
-    drop_table_jvm(spark, spec.uri, staging, dialect, driver)
-    # Staging columns reuse the spec's TYPE hints (length/max_length)
+    # Upsert: push into a staging table, then ONE set-wise MERGE. The
+    # staging columns reuse the spec's TYPE hints (length/max_length)
     # minus constraints: bare fields=() would type string keys as the
     # dialect's large-text (CLOB) and the MERGE equality on them fails
     # on Derby/Oracle ('comparisons between CLOB not supported').
-    staging_fields = tuple(
-        replace(f, unique=False, auto_increment=False) for f in spec.fields
+    staging = f"{table}__stage"
+    _drop(execute, dialect, staging)
+    _create(
+        execute, dialect, df.schema, staging,
+        tuple(replace(f, unique=False, auto_increment=False) for f in spec.fields),
     )
-    ensure_table_jvm(
-        spark, spec.uri, df.schema, staging, dialect, staging_fields, driver
-    )
-    ensure_table_jvm(spark, spec.uri, df.schema, table, dialect, spec.fields, driver)
-    if _embedded_jvm_db(dialect, spec.uri):
-        jvm_write_rows(spark, spec.uri, staging, df, dialect, driver)
-    else:
-        writer = (
-            df.write.format("jdbc")
-            .option("url", spec.uri)
-            .option("dbtable", dialect.quote(staging))
-            .option("batchsize", batchsize)
-        )
-        for k, v in opts.items():
-            writer = writer.option(k, str(v))
-        writer.mode("append").save()
+    _push(df, url, staging, dialect, driver, opts)
     jvm_execute(
         spark,
-        spec.uri,
+        url,
         [
             dialect.merge_from_staging(table, staging, df.columns, key_cols),
             f"DROP TABLE {dialect.quote(staging)}",

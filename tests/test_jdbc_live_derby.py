@@ -334,3 +334,68 @@ def test_overwrite_drop_failure_propagates(spark, derby_url):
         assert [int(r[0]) for r in rows] == [1]
     finally:
         jvm_execute(spark, derby_url, ['DROP VIEW "LIVE_VIEWED_V"'], DRIVER)
+
+
+def test_run_metrics_complete_on_embedded_derby(spark, derby_url):
+    """``run_pipeline(metrics=...)`` returns on an embedded-Derby target
+    and reports every row. The driver-side row drain must complete the
+    write job's ``DataFrame.observe`` Observation; a ``toLocalIterator``
+    drain never did, and ``Observation.get`` blocked forever. NULL,
+    decimal, date and timestamp cells travel the same drain."""
+    import threading
+
+    from tensei_agent_spark.plans import (
+        ColumnRef, Mapping, Pipeline, Recipe, run_pipeline,
+    )
+
+    src = spark.range(1000).selectExpr(
+        "id",
+        "IF(id % 7 = 0, NULL, concat('n', id)) AS name",
+        "CAST(id / 4 AS DECIMAL(12,2)) AS amount",
+        "date_add(DATE'2020-01-01', CAST(id AS INT)) AS born",
+        "timestamp_seconds(id * 3600) AS seen",
+    )
+    cols = src.columns
+    p = Pipeline(
+        name="derby-metrics",
+        sources=(SourceSpec("src", "csv", "unused"),),
+        targets=(
+            _spec(
+                derby_url, "LIVE_METRICS", "overwrite",
+                (Field("id", "long", unique=True, nullable=False),
+                 Field("name", max_length=16), Field("amount", "decimal(12,2)"),
+                 Field("born", "date"), Field("seen", "timestamp")),
+            ),
+        ),
+        recipes=(
+            Recipe(
+                "copy", "LIVE_METRICS",
+                mappings=tuple(Mapping((ColumnRef("src", c),), (c,)) for c in cols),
+            ),
+        ),
+    )
+    metrics: dict[str, dict] = {}
+    errors: list[BaseException] = []
+
+    def run():
+        try:
+            run_pipeline(spark, p, source_frames={"src": src}, metrics=metrics)
+        except BaseException as exc:  # noqa: BLE001 - asserted below
+            errors.append(exc)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=90)
+    assert not t.is_alive(), "run_pipeline(metrics=...) still blocked after 90 s"
+    assert not errors, errors
+    assert metrics["copy"]["rows_processed"] == 1000
+    assert metrics["copy"]["null_cells"] == 143
+    rows = jvm_query(
+        spark, derby_url,
+        'SELECT COUNT(*), COUNT("name"), SUM("amount"), COUNT("born"), '
+        'COUNT("seen") FROM "LIVE_METRICS"',
+        DRIVER,
+    )
+    assert [tuple(str(v) for v in r) for r in rows] == [
+        ("1000", "857", "124875.00", "1000", "1000")
+    ]

@@ -1,7 +1,7 @@
 """LIVE JDBC round trips against DuckDB through the REAL java driver.
 
 Complements test_jdbc_live_derby.py: Derby exercises the embedded-JVM
-write path (`_embedded_jvm_db` routes rows through one driver-side
+write path (the push step routes its rows through one driver-side
 connection), while DuckDB via its JDBC jar exercises the NON-embedded
 branch of ``write_jdbc`` — the exact code a remote Postgres/MySQL would
 hit: our dialect DDL via DriverManager, then Spark's distributed

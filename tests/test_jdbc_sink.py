@@ -29,7 +29,6 @@ from tensei_agent_spark.sinks.jdbc import (
     dialect_for,
     generate_ddl,
     read_key_map,
-    upsert_statement,
 )
 
 SCHEMA = StructType(
@@ -74,11 +73,11 @@ def test_ddl_auto_increment_mysql():
 
 def test_upsert_statements_per_dialect():
     cols, keys = ["id", "name", "balance", "updated"], ["id"]
-    pg = upsert_statement("jdbc:postgresql://h/db", "accounts", cols, keys)
+    pg = dialect_for("jdbc:postgresql://h/db").upsert("accounts", cols, keys)
     assert 'ON CONFLICT ("id") DO UPDATE SET "name" = EXCLUDED."name"' in pg
-    my = upsert_statement("jdbc:mysql://h/db", "accounts", cols, keys)
+    my = dialect_for("jdbc:mysql://h/db").upsert("accounts", cols, keys)
     assert "ON DUPLICATE KEY UPDATE `name` = VALUES(`name`)" in my
-    ansi = upsert_statement("jdbc:weird://h/db", "accounts", cols, keys)
+    ansi = dialect_for("jdbc:weird://h/db").upsert("accounts", cols, keys)
     assert "MERGE INTO" in ansi and "WHEN NOT MATCHED THEN INSERT" in ansi
 
 
@@ -195,6 +194,60 @@ def test_dbapi_write_gate_trips(spark):
     # Under the gate it succeeds.
     dbapi_write(df, lambda: con.cursor(), "gated", DIALECTS["duckdb"], max_rows=100)
     assert con.execute("SELECT count(*) FROM gated").fetchone()[0] == 10
+
+
+class _DerbyLikeConnection:
+    """A DB-API connection that answers DDL like Derby 10.16: no
+    ``IF [NOT] EXISTS``, and errors on dropping a missing table or
+    creating a present one. Records every statement."""
+
+    def __init__(self):
+        self.tables: set[str] = set()
+        self.log: list[str] = []
+        self.rows: list[tuple] = []
+
+    def cursor(self):
+        return self
+
+    def execute(self, sql):
+        self.log.append(sql)
+        if " EXISTS " in sql:
+            raise RuntimeError('Syntax error: Encountered "EXISTS" at line 1, column 15.')
+        name = sql.split('"')[1]
+        if sql.startswith("DROP TABLE "):
+            if name not in self.tables:
+                raise RuntimeError(
+                    f"'DROP TABLE' cannot be performed on '{name}' because it does not exist."
+                )
+            self.tables.remove(name)
+        elif sql.startswith("CREATE TABLE "):
+            if name in self.tables:
+                raise RuntimeError(f"Table/View '{name}' already exists in Schema 'APP'.")
+            self.tables.add(name)
+
+    def executemany(self, sql, rows):
+        self.log.append(sql)
+        self.rows.extend(rows)
+
+    def commit(self):
+        pass
+
+    rollback = close = commit
+
+
+def test_dbapi_overwrite_on_dialect_without_if_exists(spark):
+    """Overwrite on Derby issues a plain DROP TABLE (Derby rejects
+    ``IF EXISTS``), tolerates the missing table on the first write and
+    the existing one on the second, like the JVM route."""
+    conn = _DerbyLikeConnection()
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
+    fields = (Field("id", "long", unique=True), Field("name", max_length=8))
+    for _ in range(2):
+        dbapi_write(df, lambda: conn, "t", DIALECTS["derby"], fields, mode="overwrite")
+    ddl = generate_ddl(df.schema, "t", DIALECTS["derby"], fields)
+    insert = 'INSERT INTO "t" ("id", "name") VALUES (?, ?)'
+    assert conn.log == ['DROP TABLE "t"', ddl, insert] * 2
+    assert conn.rows == [(1, "a"), (2, "b")] * 2
 
 
 def test_dbapi_insert_upsert_roundtrip(spark):
