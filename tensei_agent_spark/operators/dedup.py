@@ -250,6 +250,35 @@ def shingle_sets(
     )
 
 
+# Sampled-df tuning (ngram_jaccard_pairs). The sample must resolve the
+# df band that actually drives candidate blowup, and that band is
+# corpus-dependent: on web-shaped corpora (long rare tail + hot
+# boilerplate head) a few hundred thousand sampled postings suffice,
+# but on NEAR-DUP-DENSE corpora every shingle sits in a mid band
+# (df ≈ cluster size, 2-64) that a starved sample cannot see — prefix
+# selection then degrades toward random order among unresolved
+# shingles. Measured on the x8 derived near-dup corpus (46 M postings,
+# every doc in an 8-clone cluster), interleaved variants in one
+# session: frac ≤0.05 +28% over the exact df; frac 0.25 consistently
+# ~5-8% behind (estimates quantized to multiples of 4 collapse the df
+# 8-64 cluster band); frac 0.5 statistically indistinguishable from
+# the exact df across two interleaved sessions (quantization 2 ≈
+# exact). Hence a FRACTION FLOOR of 0.5: near-exact pruning at any
+# scale, the df groupBy shuffles 2× less than an exact df would, and
+# the capped BROADCAST rank table — which deletes the shuffled rank
+# JOIN entirely — is unconditional. Tiny corpora (hint ≤ ~32 KiB of
+# Catalyst estimate, ≲300 K postings) and unknown-stats inputs use
+# frac 1.0 (exact df). All knobs trade pruning sharpness for sample
+# cost, NEVER correctness — the pair set is exact under any consistent
+# order (pinned against brute force down to a forced ~0.3% sample).
+# _DF_TABLE_CAP bounds the broadcast rank table (~16 B/entry → ~16 MB
+# at the cap) so it broadcasts at any corpus size.
+_DF_SAMPLE_TARGET_BYTES = 32 * 1024
+_DF_MIN_FRAC = 0.5
+_DF_TABLE_CAP = 1 << 20
+_DF_SAMPLE_SEED = 91765431
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -260,83 +289,12 @@ def ngram_jaccard_pairs(
     max_shingle_df: int | None = None,
     size_hint_bytes: int | None = None,
     stats: dict | None = None,
-    df_rank: str = "sampled",
 ) -> DataFrame:
     """Near-dup pairs by EXACT n-gram Jaccard, via prefix filtering
     (the SSJoin/PPJoin candidate-pruning lemma).
 
     Emits (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold;
     J = |A∩B| / (|A| + |B| - |A∩B|).
-
-    ``max_shingle_df``: candidate-stage safety valve for boilerplate-
-    heavy shards. Prefix shingles whose document frequency exceeds the
-    cap are EXCLUDED from candidate generation — a shingle shared by d
-    docs expands to O(d²) candidate pairs, so one templated n-gram that
-    survives into prefixes can blow the join output quadratically at
-    scale. The cap is LOSSY above itself: a pair whose only shared
-    prefix shingles are hot is missed. With the EXACT df
-    (``df_rank="full"``, or sampled with frac 1.0 — tiny corpora,
-    unknown-stats inputs, caps ≤ 50) the cap decision is exact and
-    deterministic, and below the cap the output is bit-identical to
-    the uncapped run (pinned by test). Under ``df_rank="sampled"``
-    with frac < 1 the compared df is the scaled sample estimate
-    ``ceil(sdf/frac)`` — quantized to multiples of 1/frac with noise
-    σ ≈ √(df/frac) — so shingles within a ±~4·√(cap/frac) band of the
-    cap (±~250 at cap 2000, frac 0.5) can flip sides run-to-layout:
-    the below-cap-parity guarantee weakens to "exact outside the
-    band", and the lossy set is deterministic only for a fixed seed
-    AND input layout. A frac floor of min(1, 50/cap) keeps the band
-    proportionally narrow; callers needing the exact contract at
-    frac < 1 should pass ``df_rank="full"``. Below the cap the output is bit-identical to the
-    uncapped run (pinned by test). Never silent: engaging it logs, and
-    ``stats`` (pass a dict) receives ``stats["truncation"]`` — a LAZY
-    one-row frame (hot_shingles, dropped_postings) over the already-
-    persisted prefix table, so observability costs no extra lineage.
-    On the sampled path the estimate comparison is additionally
-    BACKSTOPPED by an exact prefix fan-out valve (r11): shingles whose
-    materialized prefix postings exceed the cap are anti-joined away
-    regardless of what the estimate said (prefix-count ≤ corpus df, so
-    every drop is licensed by this same contract; under
-    ``df_rank="full"`` the _df filter is already exact and the valve
-    would be empty, so it is skipped — likewise below 2·cap corpus
-    bytes, where the table provably cannot saturate;
-    ``stats["prefix_truncation"]`` quantifies it). This closes the saturated-rank-table blind spot —
-    a hotter-than-table shingle reading df 0 lands in every holder's
-    prefix and would otherwise expand to O(df²) candidates with no
-    bound at all (measured: 80 GB of spill from one overflowing hot
-    band on a 300k-doc synthetic; see tools/sat_drop_bench.py).
-    Default None = exact, uncapped (the oracle-compared queries).
-
-    ``size_hint_bytes``: estimated input size steering the broadcast
-    hints below. Default None reads Catalyst's plan-level estimate
-    (file sizes × selectivity) — pure driver-side metadata, NO job —
-    so explain-only builds never pay a corpus scan. Derived inputs
-    whose stats degrade to "unknown" (JDBC, RDD-backed) fall back to
-    the shuffle path, which AQE upgrades back to broadcast at runtime
-    from actual shuffle sizes.
-
-    ``df_rank``: how the document-frequency rarity order is computed.
-    ``"sampled"`` (default) estimates df from a deterministic sample
-    and broadcasts a capped (shingle → df) table, so the rank join is
-    a map-side probe at any corpus size — the 100 TB path. The sample
-    fraction floors at 0.5 ONLY in the calibrated regime where the
-    df≥2 band fits the rank table; past ``_DF_SAT_PROBE_BYTES`` a
-    bounded probe detects table saturation and drops the fraction to
-    a fixed ~``_DF_SAT_TARGET_BYTES`` sample (scale-independent cost;
-    calibration + regime analysis at the ``_DF_MIN_FRAC`` constants). ``"full"`` ranks the complete postings stream (df
-    groupBy + shuffled rank join over every posting) — kept for the
-    sampled-vs-full parity pin. BOTH
-    produce the exact pair set: the order only steers candidate
-    pruning, and the prefix lemma holds for any consistent total
-    order on shingles (ties always break on the shingle value).
-
-    ``bit_screen=True`` inserts a probabilistic OPH bit-signature
-    pre-screen between candidate generation and the exact verify chain
-    — a large constant-factor win on low-entropy corpora (see the
-    inline analysis at the screen) at a quantified ~6e-4 drop risk for
-    pairs sitting exactly at the threshold. The default (False) keeps
-    every stage exact; oracle-compared registry queries use the
-    default, the rows-only ``dedup_ngram_jaccard_fast`` twin opts in.
 
     The naive inverted index (bucket every shingle, explode in-bucket
     pairs) is quadratic in bucket size and melts down on hot shingles —
@@ -354,7 +312,116 @@ def ngram_jaccard_pairs(
     — which would make prefixes map-side-computable — measured 13×
     more candidates and 5× the wall clock, because mid-frequency
     shingles land in prefixes.)
+
+    The rarity order comes from a SAMPLED document frequency: a
+    deterministic sample of the token table (fraction floored at
+    ``_DF_MIN_FRAC``; 1.0 — the exact df — on tiny corpora and
+    unknown-stats inputs) feeds a capped (shingle → df) table that is
+    broadcast, so the rank join is a map-side probe at any corpus
+    size. The order only steers candidate pruning, and the prefix
+    lemma holds for any consistent total order on shingles (ties
+    always break on the shingle value), so the pair set is exact
+    whatever the sample saw.
+
+    Five stages, each DataFrame in and DataFrame out: token sets and
+    the OPH signature (``_ngram_token_sets``), the df rank and prefix
+    slice with its valves (``_ngram_prefixes``), the PPJoin candidate
+    self-join (``_ngram_candidates``), the bit and token screen
+    (``_ngram_screen``) and the exact string verify
+    (``_ngram_verify``).
+
+    ``max_shingle_df``: candidate-stage safety valve for boilerplate-
+    heavy shards. Prefix shingles whose document frequency exceeds the
+    cap are EXCLUDED from candidate generation — a shingle shared by d
+    docs expands to O(d²) candidate pairs, so one templated n-gram that
+    survives into prefixes can blow the join output quadratically at
+    scale. The cap is LOSSY above itself: a pair whose only shared
+    prefix shingles are hot is missed. With the exact df (frac 1.0 —
+    tiny corpora, unknown-stats inputs, and every cap ≤ 50, which the
+    valve-resolution floor forces to frac 1.0) the cap decision is
+    exact and deterministic, and below the cap the output is
+    bit-identical to the uncapped run (pinned by test). With frac < 1
+    the compared df is the scaled sample estimate ``ceil(sdf/frac)`` —
+    quantized to multiples of 1/frac with noise σ ≈ √(df/frac) — so
+    shingles within a ±~4·√(cap/frac) band of the cap (±~250 at cap
+    2000, frac 0.5) can flip sides run-to-layout: the below-cap-parity
+    guarantee weakens to "exact outside the band", and the lossy set
+    is deterministic only for a fixed seed AND input layout. A frac
+    floor of min(1, 50/cap) keeps the band proportionally narrow.
+    Never silent: engaging it logs, and ``stats`` (pass a dict)
+    receives ``stats["truncation"]`` — a LAZY one-row frame
+    (hot_shingles, dropped_postings) over the already-persisted prefix
+    table, so observability costs no extra lineage — plus the chosen
+    ``stats["df_frac"]`` and the lazy rank-table frame
+    ``stats["df_table"]``. The estimate comparison is BACKSTOPPED by an
+    exact prefix fan-out valve: shingles whose materialized prefix
+    postings exceed the cap are anti-joined away regardless of what
+    the estimate said (prefix-count ≤ corpus df, so every drop is
+    licensed by this same contract; ``stats["prefix_truncation"]``
+    quantifies it). This closes the saturated-rank-table blind spot —
+    a hotter-than-table shingle reading df 0 lands in every holder's
+    prefix and would otherwise expand to O(df²) candidates with no
+    bound at all. Default None = exact, uncapped (the oracle-compared
+    queries).
+
+    ``size_hint_bytes``: estimated input size steering the sample
+    fraction, the rank-table cut and the broadcast hints. Default None
+    reads Catalyst's plan-level estimate (file sizes × selectivity) —
+    pure driver-side metadata, NO job — so explain-only builds never
+    pay a corpus scan. Derived inputs whose stats degrade to "unknown"
+    (JDBC, RDD-backed) fall back to the exact df and the shuffle path,
+    which AQE upgrades back to broadcast at runtime from actual
+    shuffle sizes.
+
+    ``bit_screen=True`` inserts a probabilistic OPH bit-signature
+    pre-screen between candidate generation and the exact verify chain
+    — a large constant-factor win on low-entropy corpora (see the
+    analysis at ``_ngram_screen``) at a quantified ~6e-4 drop risk for
+    pairs sitting exactly at the threshold. The default (False) keeps
+    every stage exact; oracle-compared registry queries use the
+    default, the rows-only ``dedup_ngram_jaccard_fast`` twin opts in.
     """
+    # The screen engages only when the adaptive cutoff can bite for
+    # typical pairs (see the margin math at the screen; 3.3/√both
+    # ≈ 0.21 at the both ≈ 250 a 256-bucket signature yields on
+    # ~1k-token docs); below that the signature columns would be dead
+    # weight in the cache, so they are only added when used.
+    use_bit_screen = bit_screen and threshold - 0.21 > 0.05
+    tok_sets = _ngram_token_sets(docs, text_col, id_col, k, use_bit_screen)
+    # Size estimate steering the sample and the broadcast hints — ZERO
+    # jobs: Catalyst's optimized-plan sizeInBytes is driver-side
+    # metadata (file sizes × filter selectivity), so a build that never
+    # executes (explain, plan audits) costs nothing.
+    if size_hint_bytes is None:
+        try:
+            size_hint_bytes = int(
+                docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            )
+        except Exception:  # unknown stats → exact df, shuffle path
+            size_hint_bytes = 1 << 60
+    pfx = _ngram_prefixes(
+        tok_sets, id_col, threshold, max_shingle_df, size_hint_bytes, stats
+    )
+    cand = _ngram_candidates(pfx, id_col, threshold)
+    # The row estimate bounds the corpus text bytes, hence ~8 bytes of
+    # 64-bit token per text char bounds the per-doc token payload the
+    # screen attaches. Parquet compression makes the estimate read LOW
+    # relative to raw chars (~2-3×), so the 64 MB gate flips to the
+    # shuffle path a little early at scale — the conservative
+    # direction, and AQE re-promotes a provably-small side at runtime.
+    small = size_hint_bytes * 8 < 64 * 1024 * 1024
+    screened = _ngram_screen(
+        cand, tok_sets, id_col, threshold, use_bit_screen, small
+    )
+    return _ngram_verify(screened, docs, text_col, id_col, k, threshold)
+
+
+def _ngram_token_sets(
+    docs: DataFrame, text_col: str, id_col: str, k: int, use_bit_screen: bool
+) -> DataFrame:
+    """Stage 1: per-doc sorted 64-bit token set (``_ts``, ``n_sh``)
+    plus, when the bit screen is on, its OPH signature (``_m0..3`` bucket
+    masks, ``_g0..3`` sign bits) — persisted and hash(id)-partitioned."""
     # Candidate generation runs ENTIRELY on 64-bit xxhash TOKENS — the
     # corpus-wide string shingle arrays are never materialized (strings
     # are re-shingled later for the handful of surviving docs only).
@@ -403,15 +470,9 @@ def ngram_jaccard_pairs(
                 ELSE a END)"""
         )
 
-    # The screen engages only when the adaptive cutoff can bite for
-    # typical pairs (see the margin math at the screen; 3.3/√both
-    # ≈ 0.21 at the both ≈ 250 a 256-bucket signature yields on
-    # ~1k-token docs); below that the signature columns would be dead
-    # weight in the cache, so they are only added when used.
-    use_bit_screen = bit_screen and threshold - 0.21 > 0.05
     # The shingle+OPH map is the single most CPU-expensive stage —
     # spread it across cores even when the input is one parquet split
-    # (da/db below keep the raw `docs`: their scans are passthrough).
+    # (the verify stage keeps the raw `docs`: its scans are passthrough).
     tok_sets = spread_for_cpu_map(
         docs.select(F.col(id_col), F.col(text_col))
     ).select(F.col(id_col), tok_arr.alias("_ts")).withColumn(
@@ -436,439 +497,124 @@ def ngram_jaccard_pairs(
     # included) reads shuffle files instead of re-hashing. The extra
     # shuffle moves the ~10 KB/doc token arrays one hop — noise against
     # a 5x map recompute at any scale.
-    tok_sets = track(
+    return track(
         tok_sets.repartition(
             docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
         )
     )
-    postings = tok_sets.select(
-        F.col(id_col), "n_sh", F.explode("_ts").alias("shingle")
-    )
+
+
+def _ngram_prefixes(
+    tok_sets: DataFrame,
+    id_col: str,
+    threshold: float,
+    max_shingle_df: int | None,
+    size_hint_bytes: int,
+    stats: dict | None,
+) -> DataFrame:
+    """Stage 2: sampled df rank, then each doc's PPJoin prefix in rarity
+    order — (id, n_sh, pos, shingle), persisted — with the estimate
+    valve and the exact prefix fan-out valve when ``max_shingle_df``
+    is set."""
     # Document frequency by hash-aggregate + hash-join, then per-doc
     # rarity order by collect_list + array_sort. Deliberately NOT window
     # functions: a count-over-shingle / row_number-over-id pair moves
     # the same stream through two full SORTS (WindowExec sorts within
     # every partition), measured 2× slower than this hash-only shape.
-    # Size estimate steering the broadcast hints below — ZERO jobs:
-    # Catalyst's optimized-plan sizeInBytes is driver-side metadata
-    # (file sizes × filter selectivity), so a build that never executes
-    # (explain, plan audits) costs nothing. The row estimate bounds the
-    # corpus text bytes, hence ~8 bytes of 64-bit token per text char
-    # bounds BOTH the distinct-shingle table (freq) and the per-doc
-    # token payload (screen). Parquet compression makes the estimate
-    # read LOW relative to raw chars (~2-3×), so the 64 MB gate flips
-    # to the shuffle path a little early at scale — the conservative
-    # direction, and AQE re-promotes a provably-small side at runtime.
-    if size_hint_bytes is None:
-        try:
-            size_hint_bytes = int(
-                docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:  # unknown stats → conservative shuffle path
-            size_hint_bytes = 1 << 60
-    small = size_hint_bytes * 8 < 64 * 1024 * 1024
-    hint = F.broadcast if small else (lambda d: d)
-
-    if df_rank == "sampled":
-        # SAMPLED document-frequency order (r10) — kills the operator's
-        # only full-corpus shuffle. The rarity order steers PRUNING
-        # only: the prefix lemma holds for ANY consistent total order
-        # on shingles, so the final pair set is exact no matter how df
-        # is estimated (pinned by the sampled-vs-full parity test in
-        # tests/test_dedup_fast.py). That licenses three bounds:
-        #
-        # 1. df comes from a deterministic Bernoulli SAMPLE of the
-        #    persisted token table — the groupBy shuffles frac·|tokens|
-        #    longs, never the full postings stream. frac is floored at
-        #    _DF_MIN_FRAC = 0.5 (see the calibration note at the
-        #    constants: a starved sample cannot resolve the near-dup
-        #    mid band and pruning degrades, measured +28% at x8);
-        #    tiny corpora degenerate to frac = 1.0, where the estimate
-        #    IS the exact df.
-        # 2. Shingles sampled ONCE are dropped (df >= 2): a singleton's
-        #    rank ties on the shingle value either way, and the long
-        #    tail is almost all singletons — the table keeps only the
-        #    head of the distribution, where order actually matters.
-        # 3. The table is capped to the hottest _DF_TABLE_CAP entries
-        #    ((df desc, shingle) — a deterministic TakeOrdered, ~16 MB
-        #    at the cap), so it broadcasts at ANY corpus size. Absent
-        #    shingles read df 0 (rare → sort first, tie-break on the
-        #    shingle value). ORDER-wise the cut is sound: a shingle
-        #    only falls off when 2^20 others are hotter, i.e. it IS
-        #    relatively rare in that corpus. VALVE-wise it is sound
-        #    only while the table is not saturated above the cap
-        #    (min kept df ≤ max_shingle_df ⟹ every absent shingle's
-        #    estimate is below the cap and passes legitimately); a
-        #    table whose 2^20-th entry still exceeds the cap could
-        #    hide hotter-than-cap shingles as df 0 — detectable, so
-        #    ``stats["df_table"]`` exposes (n_entries, min_df) and the
-        #    saturation predicate as a lazy 1-row frame.
-        #
-        # The rank join is then a map-side broadcast probe at ANY
-        # corpus size. Of the full path's three full-corpus shuffles
-        # (df groupBy, rank join, per-doc regroup) NONE survives at
-        # runtime (r11): tok_sets is hash(id)-partitioned, explode +
-        # broadcast-join preserve that, and Spark 4.1's AQE wraps the
-        # cache scan in a TableCacheQueryStage whose materialized
-        # partitioning re-plans the regroup EXCHANGE-FREE — partial
-        # and final ObjectHashAggregate run back-to-back on the
-        # cache's own hash(id) layout (the r10 note that AQE's cache
-        # boundary forces a re-shuffle described the INITIAL plan
-        # only; the final plan elides it — asserted at runtime by
-        # tests/test_plan_quality.py and the plan-audit runtime leg).
-        # The df-sample groupBy above is the only remaining postings-
-        # derived shuffle, and the saturation-aware frac bounds it.
-        # Unknown stats (JDBC/RDD-backed inputs report ~Long.MaxValue,
-        # and the except-branch above pins 2^60) must NOT be read as
-        # "huge corpus": that starves the sample to ~zero rows, which
-        # leaves pruning on raw token order AND — worse — makes the
-        # max_shingle_df valve inert (an empty rank table reads every
-        # shingle as df 0). Degrade to frac 1.0 — the exact df, same
-        # conservative convention as the unknown-stats shuffle
-        # fallback in the broadcast gate below.
-        #
-        # SATURATION-AWARE floor (r11): the 0.5 fraction floor was
-        # calibrated on corpora whose whole df≥2 band FITS the capped
-        # rank table — there the extra resolution sharpens pruning
-        # (frac 0.25 measured −5-8%, 0.05 −28%; constants note). Once
-        # the df≥2 table SATURATES _DF_TABLE_CAP, that resolution is
-        # paid for and thrown away: shingles that can't crack the
-        # top-2^20 head read df 0 and tie-break on value NO MATTER
-        # WHAT frac is, and the head itself is hot enough for a small
-        # sample to rank. So for corpora past _DF_SAT_PROBE_BYTES a
-        # bounded PROBE decides the regime: sample a fixed
-        # ~_DF_SAT_TARGET_BYTES of the token table (scale-independent
-        # cost), count its df≥2 groups, and if they already reach the
-        # cap — a SUFFICIENT condition for the 0.5-sample's table to
-        # saturate, since detection is monotone in frac — keep the
-        # probe fraction instead of the half-corpus floor. The probe
-        # is one bounded build-time job (same convention as the
-        # documented eagerly-trained operators) and never fires below
-        # the size gate, so explain-only builds at test SFs still run
-        # ZERO jobs. Under-detection errs toward 0.5 — the calibrated
-        # quality/cost direction, never correctness: frac steers
-        # pruning only and the pair set stays exact (parity pin).
-        frac = (
-            1.0
-            if size_hint_bytes >= (1 << 59)
-            else max(
-                _DF_MIN_FRAC,
-                min(1.0, _DF_SAMPLE_TARGET_BYTES / max(size_hint_bytes, 1)),
-            )
+    postings = tok_sets.select(
+        F.col(id_col), "n_sh", F.explode("_ts").alias("shingle")
+    )
+    # The order steers PRUNING only, which licenses three bounds:
+    #
+    # 1. df comes from a deterministic Bernoulli SAMPLE of the
+    #    persisted token table — the groupBy shuffles frac·|tokens|
+    #    longs, never the full postings stream. frac is floored at
+    #    _DF_MIN_FRAC (calibration note at the constants). Unknown
+    #    stats (JDBC/RDD-backed inputs report ~Long.MaxValue, and the
+    #    caller pins 2^60 when the estimate fails) must NOT be read as
+    #    "huge corpus": that would starve the sample, leaving pruning
+    #    on raw token order AND making the max_shingle_df valve inert
+    #    (an empty rank table reads every shingle as df 0). They use
+    #    frac 1.0 — the exact df — as do tiny corpora.
+    # 2. Shingles sampled ONCE are dropped (df >= 2): a singleton's
+    #    rank ties on the shingle value either way, and the long
+    #    tail is almost all singletons — the table keeps only the
+    #    head of the distribution, where order actually matters.
+    # 3. The table is capped to the hottest _DF_TABLE_CAP entries
+    #    ((df desc, shingle) — a deterministic TakeOrdered), so it
+    #    broadcasts at ANY corpus size. Absent shingles read df 0
+    #    (rare → sort first, tie-break on the shingle value).
+    #    ORDER-wise the cut is sound: a shingle only falls off when
+    #    2^20 others are hotter, i.e. it IS relatively rare in that
+    #    corpus. VALVE-wise it is sound only while the table is not
+    #    saturated above the cap (min kept df ≤ max_shingle_df ⟹
+    #    every absent shingle's estimate is below the cap); a table
+    #    whose 2^20-th entry still exceeds the cap hides hotter-than-
+    #    cap shingles as df 0 — the exact fan-out valve below bounds
+    #    that, and ``stats["df_table"]`` exposes it.
+    #
+    # The rank join is then a map-side broadcast probe, and the per-doc
+    # regroup runs exchange-free at runtime: tok_sets is
+    # hash(id)-partitioned, explode + broadcast-join preserve that, and
+    # AQE's TableCacheQueryStage exposes the cache's partitioning, so
+    # partial and final ObjectHashAggregate run back-to-back on it
+    # (asserted by tests/test_plan_quality.py). The df-sample groupBy
+    # is the only postings-derived shuffle.
+    frac = (
+        1.0
+        if size_hint_bytes >= (1 << 59)
+        else max(
+            _DF_MIN_FRAC,
+            min(1.0, _DF_SAMPLE_TARGET_BYTES / max(size_hint_bytes, 1)),
         )
-        # Tri-state: True/False = the probe RAN and answered; None =
-        # not probed (tiny corpus below the gate, or the valve floor
-        # made the probe's frac outcome moot) — saturation is then
-        # UNKNOWN at build and only the lazy stats["df_table"]
-        # predicate can answer it (code review r11: a plain False here
-        # misread "not probed" as "known unsaturated").
-        saturated = None
-        # Valve-resolution floor (applied unconditionally further down;
-        # code review r10): caps need the sample fine enough that ~50
-        # expected hits land at the cap boundary. Computed HERE too
-        # (code review r11) because it bounds what the saturation probe
-        # could ever win: when the valve floor already holds frac at or
-        # above _DF_MIN_FRAC (any cap ≤ 50/_DF_MIN_FRAC = 100), the
-        # probe's outcome cannot lower frac — skip the probe job
-        # entirely rather than running it, logging "dropping the
-        # floor", and then silently overriding its result.
-        valve_frac = (
-            min(1.0, 50.0 / max_shingle_df)
-            if max_shingle_df is not None
-            else 0.0
+    )
+    if max_shingle_df is not None:
+        # Valve-resolution floor: the valve compares the SCALED
+        # estimate ceil(sdf/frac) to the cap, and that estimate is
+        # quantized to multiples of 1/frac with sampling noise
+        # σ ≈ √(df/frac). A cap below the estimator's resolution would
+        # turn the valve into nonsense (cap=3 at frac=0.5 would drop
+        # every shingle the sample saw twice, est ≥ 4), so force the
+        # sample fine enough that ~50 expected hits land at the cap
+        # boundary — caps ≤ 50 therefore use the exact df.
+        frac = max(frac, min(1.0, 50.0 / max_shingle_df))
+    if stats is not None:
+        stats["df_frac"] = frac
+    samp = tok_sets if frac >= 1.0 else tok_sets.sample(
+        fraction=frac, seed=_DF_SAMPLE_SEED
+    )
+    freq = (
+        samp.select(F.explode("_ts").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("_sdf"))
+        .filter(F.col("_sdf") >= 2)
+        # Scale sampled counts back to corpus estimates so the
+        # max_shingle_df valve keeps its corpus-df meaning. ceil:
+        # never under-read a hot shingle (the valve's lossy side).
+        .select(
+            "shingle",
+            F.ceil(F.col("_sdf") / F.lit(frac)).cast("long").alias("_df"),
         )
-        if (
-            frac < 1.0
-            and valve_frac >= _DF_MIN_FRAC
-            and size_hint_bytes < (1 << 59)
-            and size_hint_bytes >= _DF_SAT_PROBE_BYTES
-        ):
-            # Probe skipped on a corpus large enough to saturate: the
-            # valve's blind spot (hotter-than-cap shingles reading df
-            # 0) is now UNPROBED, not absent — the eager r10 warning
-            # must still fire, conditionally phrased (code review r11:
-            # small caps are exactly where the valve matters most, so
-            # they must not be the one regime that never warns).
-            logger.warning(
-                "ngram_jaccard_pairs: max_shingle_df=%d on a corpus "
-                "past the saturation-probe gate, but the valve floor "
-                "(frac %.3f) binds the sample fraction so the probe "
-                "was skipped — IF the df-rank table saturates its "
-                "%d-entry cap, shingles hotter than the table's floor "
-                "read df 0 and bypass the ESTIMATE valve (ranking "
-                "noise only: the exact prefix fan-out valve still "
-                "bounds the candidate join); collect "
-                "stats['df_table'] to check valve_blind_spot",
-                max_shingle_df, valve_frac, _DF_TABLE_CAP,
-            )
-        if (
-            frac < 1.0
-            and valve_frac < _DF_MIN_FRAC
-            and size_hint_bytes < (1 << 59)
-            and size_hint_bytes >= _DF_SAT_PROBE_BYTES
-        ):
-            # ESCALATING probe ladder (r11): one probe at the fixed
-            # byte-target fraction answers saturation, but it cannot
-            # always answer head CERTIFICATION — at 100 TB the 64 MiB
-            # target is frac ~6e-7, where even a genuinely hot cap-th
-            # shingle (df ~4e5 under Zipf) expects < 1 sampled
-            # occurrence, so a single fixed probe would read every
-            # huge corpus as "uncertifiable" and the 0.5 floor (a
-            # half-corpus scan) would ALWAYS run at exactly the scale
-            # the saturation logic was built for. The ladder grows the
-            # probe fraction geometrically (×_DF_PROBE_ESCALATION,
-            # capped at _DF_PROBE_FRAC_CAP) until the probe either
-            # certifies a rankable head (drop) or exhausts the budget
-            # (keep 0.5). Costs are bounded by the geometric sum:
-            # Σ rungs ≤ cap·(E/(E-1)) ≈ 1.9% of the corpus — against
-            # the 50% scan it replaces when it certifies, and a ≤1.9%
-            # overhead when it doesn't. Rungs after the first read the
-            # persisted tok_sets cache, not the source. Same seed at
-            # every rung → Bernoulli samples are NESTED (a row kept at
-            # frac f is kept at every f' > f), so saturation detection
-            # is monotone in the rung DETERMINISTICALLY: unsaturated
-            # at rung 1 ⟹ unsaturated at the 0.5 floor's table too...
-            # (within the rung-1 resolution; under-detection errs
-            # toward keeping 0.5, the calibrated direction).
-            frac0 = min(
-                1.0, _DF_SAT_TARGET_BYTES / max(size_hint_bytes, 1)
-            )
-            frac_probe = frac0
-            rounds = 0
-            droppable = False
-            head_share = 1.0
-            min_head_df = 0.0
-            head_lo = 0
-            while True:
-                rounds += 1
-                probe = (
-                    tok_sets.sample(
-                        fraction=frac_probe, seed=_DF_SAMPLE_SEED
-                    )
-                    .select(F.explode("_ts").alias("shingle"))
-                    .groupBy("shingle")
-                    .agg(F.count(F.lit(1)).alias("_sdf"))
-                    .filter(F.col("_sdf") >= 2)
-                ).persist()
-                # Each rung answers BOTH predicates (r11, measured —
-                # see _DF_SAT_HEAD_SHARE): saturation (df≥2 vocabulary
-                # reaches the cap) AND head concentration (the top-cap
-                # entries' share of sampled df≥2 postings mass). The
-                # floor drops only when the table saturates AND the
-                # rung certifies a head it can rank; a flat saturated
-                # band stays uncertified at every rung and keeps the
-                # calibrated 0.5 — dropping there measured 1.4× SLOWER
-                # with identical output.
-                try:
-                    row = probe.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum("_sdf").alias("mass"),
-                    ).collect()[0]
-                    n_probe, mass_total = row["n"], row["mass"] or 0
-                    saturated = n_probe >= _DF_TABLE_CAP
-                    if saturated and mass_total:
-                        top = (
-                            probe.orderBy(F.desc("_sdf"), "shingle")
-                            .limit(_DF_TABLE_CAP)
-                            .agg(
-                                F.sum("_sdf").alias("m"),
-                                F.min("_sdf").alias("lo"),
-                            )
-                            .collect()[0]
-                        )
-                        head_share = top["m"] / mass_total
-                        head_lo = top["lo"]
-                        # Corpus-df estimate of the COOLEST head entry
-                        # — the detectability anchor for the drop
-                        # fraction below. Reliable only when this rung
-                        # itself saw that entry ≥ _DF_HEAD_LO_MIN
-                        # times: a 2-count table entry is as likely a
-                        # fluke of a df-8 shingle as a real head
-                        # member, and scaling a fluke OVER-estimates
-                        # min_head_df, under-flooring the drop.
-                        min_head_df = head_lo / frac_probe
-                finally:
-                    # A failed rung collect must not strand the probe
-                    # in MEMORY_AND_DISK for the session's lifetime
-                    # (code review r11) — this persist is outside
-                    # cache.track by design (rung-local lifetime).
-                    probe.unpersist()
-                if not saturated:
-                    # Nested samples: only reachable at rung 1 (later
-                    # rungs see a superset of df≥2 groups).
-                    break
-                droppable = (
-                    head_share >= _DF_SAT_HEAD_SHARE
-                    and head_lo >= _DF_HEAD_LO_MIN
-                )
-                if droppable or frac_probe >= min(1.0, _DF_PROBE_FRAC_CAP):
-                    break
-                frac_probe = min(
-                    _DF_PROBE_FRAC_CAP, frac_probe * _DF_PROBE_ESCALATION
-                )
-            if stats is not None:
-                # head_share is a MEASUREMENT only under saturation —
-                # unsaturated rungs never rank a head, so the 1.0
-                # initializer must not leak out as "head holds 100%"
-                # (code review r11).
-                stats["df_head_share"] = head_share if saturated else None
-                stats["df_probe_rounds"] = rounds
-                stats["df_probe_frac"] = frac_probe
-            if saturated and not droppable:
-                logger.info(
-                    "ngram_jaccard_pairs: df-rank table saturates the "
-                    "%d-entry cap but no probe rung up to frac %.2e "
-                    "(%d rung(s), budget %.2e) could certify a "
-                    "RANKABLE head (top-cap mass share %.1f%% vs "
-                    "threshold %.0f%%; coolest head entry sampled "
-                    "%d time(s) vs %d needed) — keeping the "
-                    "calibrated 0.5 floor; dropping on an uncertified "
-                    "head measured 1.4x slower (pruning-only either "
-                    "way)", _DF_TABLE_CAP, frac_probe, rounds,
-                    # the effective budget: rung 1 may already start
-                    # above the ladder cap when the byte-target frac
-                    # exceeds it (256 MiB - 4 GiB corpora)
-                    max(_DF_PROBE_FRAC_CAP, frac_probe),
-                    100 * head_share,
-                    100 * _DF_SAT_HEAD_SHARE, head_lo, _DF_HEAD_LO_MIN,
-                )
-            if droppable:
-                # HEAD-DETECTABILITY floor (r11, measured): the drop
-                # fraction must still CATCH the head — a head shingle
-                # missed by the sample (saw it ≤1 time) reads df 0,
-                # sorts as "rare", and lands in PREFIXES, exploding
-                # the candidate join on exactly the hottest shingles.
-                # The first cut dropped straight to frac_probe and
-                # measured 1.4× slower on the forced-cap x8 corpus for
-                # this reason (the head existed — share ≥ 0.3 — but at
-                # frac 1e-3 a df-500 head shingle had a 91% miss
-                # rate). Anchor on the COOLEST head entry: at frac f a
-                # df-d shingle is seen ≥2 times w.h.p. once f·d ≥ ~8,
-                # so floor the drop at 8/min_head_df (≥2 Poisson events
-                # at mean 8 is >99.7%). At a real 2^20 cap over a
-                # Zipf corpus min_head_df is large → the floor is tiny
-                # and the byte-target fraction wins; it only binds
-                # when the head barely clears the detection threshold.
-                # The valve floor still binds below _DF_MIN_FRAC (the
-                # skip above only guarantees it can't restore the 0.5
-                # floor) — fold it in HERE so the logged fraction is
-                # the one actually used (code review r11).
-                detect_frac = (
-                    min(1.0, 8.0 / min_head_df) if min_head_df > 0 else 1.0
-                )
-                frac = min(
-                    _DF_MIN_FRAC, max(frac0, detect_frac, valve_frac)
-                )
-                logger.info(
-                    "ngram_jaccard_pairs: df-rank table saturates the "
-                    "%d-entry cap (certified at frac %.2e, rung %d: "
-                    "%d df>=2 shingles, head share %.2f); dropping "
-                    "the 0.5 sample floor to %.2e — sub-head shingles "
-                    "read df 0 at any fraction, so the extra "
-                    "resolution buys nothing (pruning-only; pair set "
-                    "exact regardless)",
-                    _DF_TABLE_CAP, frac_probe, rounds, n_probe,
-                    head_share, frac,
-                )
-            if saturated and max_shingle_df is not None:
-                # ADVICE r10: the valve's blind spot (hotter-than-cap
-                # shingles reading df 0) is only REACHABLE in the
-                # saturated regime — warn eagerly at build instead of
-                # relying on callers to collect the lazy
-                # stats["df_table"] predicate. Fires on EITHER side of
-                # the head-share decision: the blind spot depends on
-                # saturation, not on which fraction was kept.
-                logger.warning(
-                    "ngram_jaccard_pairs: max_shingle_df=%d under "
-                    "a SATURATED df-rank table — shingles hotter "
-                    "than the table's floor read df 0 and bypass "
-                    "the ESTIMATE valve (ranking noise only: the "
-                    "exact prefix fan-out valve still bounds the "
-                    "candidate join); collect stats['df_table'] to "
-                    "check valve_blind_spot", max_shingle_df,
-                )
-        if max_shingle_df is not None:
-            # Valve-resolution guard (code review r10): the valve
-            # compares the SCALED estimate ceil(sdf/frac) to the cap,
-            # and that estimate is quantized to multiples of 1/frac
-            # with sampling noise σ ≈ √(df/frac). A cap below the
-            # estimator's resolution would turn the valve into
-            # nonsense (cap=3 at frac=0.5 would drop every shingle
-            # the sample saw twice, est ≥ 4), so force the sample
-            # fine enough that ~50 expected hits land at the cap
-            # boundary — caps ≤ 50 therefore use the exact df.
-            # (Already folded into the saturated branch above; this is
-            # the unconditional invariant for every other path.)
-            frac = max(frac, valve_frac)
-        if stats is not None:
-            # Observability for the saturation-aware floor: the chosen
-            # sample fraction and which regime picked it (plain Python
-            # scalars — the decision is made at build time).
-            # df_saturated is TRI-STATE: True/False = probed and
-            # answered; None = not probed (below the size gate, or the
-            # valve floor made the probe moot) — collect
-            # stats["df_table"] for the lazy answer.
-            stats["df_frac"] = frac
-            stats["df_saturated"] = saturated
-        samp = tok_sets if frac >= 1.0 else tok_sets.sample(
-            fraction=frac, seed=_DF_SAMPLE_SEED
+    )
+    # The _DF_TABLE_CAP head cut only has anything to cut once the
+    # df≥2 vocabulary CAN exceed the cap, and below 2·cap corpus bytes
+    # it provably cannot (every df≥2 shingle costs ≥2 postings ≥2 text
+    # bytes) — the same provable-no-op gate as the prefix fan-out
+    # valve. Skipping the no-op sort+limit removes the TakeOrdered pass
+    # from every sub-2·cap build with a bit-identical freq row set.
+    if size_hint_bytes >= 2 * _DF_TABLE_CAP:
+        freq = freq.orderBy(F.desc("_df"), "shingle").limit(_DF_TABLE_CAP)
+    ranked = (
+        postings.join(F.broadcast(freq), "shingle", "left")
+        .na.fill({"_df": 0})
+        .groupBy(id_col)
+        .agg(
+            F.min("n_sh").alias("n_sh"),
+            F.array_sort(
+                F.collect_list(F.struct(F.col("_df"), F.col("shingle")))
+            ).alias("_ranked"),
         )
-        freq = (
-            samp.select(F.explode("_ts").alias("shingle"))
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_sdf"))
-            .filter(F.col("_sdf") >= 2)
-            # Scale sampled counts back to corpus estimates so the
-            # max_shingle_df valve keeps its corpus-df meaning. ceil:
-            # never under-read a hot shingle (the valve's lossy side).
-            .select(
-                "shingle",
-                F.ceil(F.col("_sdf") / F.lit(frac)).cast("long").alias("_df"),
-            )
-        )
-        # The _DF_TABLE_CAP head cut only has anything to cut once the
-        # df≥2 vocabulary CAN exceed the cap, and below 2·cap corpus
-        # bytes it provably cannot (every df≥2 shingle costs ≥2
-        # postings ≥2 text bytes) — the same provable-no-op gate as
-        # the prefix fan-out valve. Skipping the no-op sort+limit
-        # removes the TakeOrdered pass from every sub-2·cap build
-        # (r12 job-count pass, guide §1.2/§2.4) with a bit-identical
-        # freq row set; past the gate the deterministic (df desc,
-        # shingle) head cut is unchanged.
-        if size_hint_bytes >= 2 * _DF_TABLE_CAP:
-            freq = freq.orderBy(F.desc("_df"), "shingle").limit(_DF_TABLE_CAP)
-        ranked = (
-            postings.join(F.broadcast(freq), "shingle", "left")
-            .na.fill({"_df": 0})
-            .groupBy(id_col)
-            .agg(
-                F.min("n_sh").alias("n_sh"),
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("_df"), F.col("shingle")))
-                ).alias("_ranked"),
-            )
-        )
-    elif df_rank == "full":
-        # Exact full-corpus df (the pre-r10 path, kept for the parity
-        # pin): one groupBy over the whole postings stream, then a rank
-        # join. Broadcasting the (shingle → df) table when provably
-        # small turns the rank join into a map-side probe — the
-        # postings stream skips a full exchange (measured 4.1 s → 2.0 s
-        # at sf0.1). At scale the distinct-shingle table outgrows the
-        # hint and this reverts to a shuffle join on its own.
-        freq = postings.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        ranked = (
-            postings.join(hint(freq), "shingle")
-            .groupBy(id_col)
-            .agg(
-                F.min("n_sh").alias("n_sh"),
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("_df"), F.col("shingle")))
-                ).alias("_ranked"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown df_rank {df_rank!r} (sampled | full)")
+    )
     pfx = ranked.select(
         F.col(id_col),
         F.col("n_sh"),
@@ -885,117 +631,94 @@ def ngram_jaccard_pairs(
         # The document frequency rides along only when the cap needs it.
         *([F.col("col._df").alias("_df")] if max_shingle_df is not None else []),
     )
-    # pfx feeds BOTH sides of the candidate self-join below — without a
+    # pfx feeds BOTH sides of the candidate self-join — without a
     # persist the whole postings→freq-join→collect→posexplode pipeline
     # executes twice (Spark does not share subplans across join sides).
     pfx = track(pfx)
-    if max_shingle_df is not None:
-        # No-silent-caps: engaging the valve always logs, and the exact
-        # drop volume is exposed as a lazy aggregate over the persisted
-        # prefix table (one extra cache read when actioned, no new
-        # lineage). Hot shingles sort LAST in rarity order, so in
-        # healthy corpora the prefix slice already excludes them and
-        # both counters read 0.
-        logger.info(
-            "ngram_jaccard_pairs: candidate stage capped at shingle df "
-            "<= %d; pairs linked only through hotter shingles are "
-            "dropped (stats['truncation'] quantifies)", max_shingle_df,
+    if max_shingle_df is None:
+        return pfx
+    # No-silent-caps: engaging the valve always logs, and the exact
+    # drop volume is exposed as a lazy aggregate over the persisted
+    # prefix table (one extra cache read when actioned, no new
+    # lineage). Hot shingles sort LAST in rarity order, so in healthy
+    # corpora the prefix slice already excludes them and both counters
+    # read 0.
+    logger.info(
+        "ngram_jaccard_pairs: candidate stage capped at shingle df "
+        "<= %d against df sampled at frac %.3g (below 1, shingles within "
+        "the sampling-noise band of the cap may flip sides "
+        "run-to-layout); pairs linked only through hotter shingles are "
+        "dropped (stats['truncation'] quantifies)", max_shingle_df, frac,
+    )
+    if stats is not None:
+        stats["truncation"] = pfx.filter(
+            F.col("_df") > max_shingle_df
+        ).agg(
+            F.count_distinct("shingle").alias("hot_shingles"),
+            F.count(F.lit(1)).alias("dropped_postings"),
         )
-        if df_rank == "sampled":
-            # ADVICE r10: a cap under sampled df compares the cap to a
-            # quantized noisy ESTIMATE — the lossy set near the cap
-            # band is seed- and layout-dependent. Surface that at the
-            # call site instead of only in the docstring.
-            logger.info(
-                "ngram_jaccard_pairs: cap evaluated against SAMPLED df "
-                "estimates (quantized to 1/frac) — shingles within the "
-                "sampling-noise band of the cap may flip sides "
-                "run-to-layout; pass df_rank='full' for the exact "
-                "deterministic cap contract"
-            )
+        # Valve soundness: absent-from-table shingles read df 0, which
+        # is sound only while the capped table is NOT saturated above
+        # the cap — a lazy 1-row frame over the broadcast-sized table.
+        stats["df_table"] = freq.agg(
+            F.count(F.lit(1)).alias("n_entries"),
+            F.min("_df").alias("min_df"),
+            (
+                (F.count(F.lit(1)) == F.lit(_DF_TABLE_CAP))
+                & (F.min("_df") > F.lit(max_shingle_df))
+            ).alias("valve_blind_spot"),
+        )
+    pfx = pfx.filter(F.col("_df") <= max_shingle_df).drop("_df")
+    # EXACT prefix fan-out valve: the estimate filter above has a
+    # catastrophic blind spot at saturation — a shingle HOTTER than the
+    # capped rank table's floor is absent from the table, reads df 0,
+    # sorts as the RAREST shingle in every holder's rarity order, lands
+    # in every holder's prefix, and detonates the candidate self-join
+    # (measured: a 2.9k-shingle hot band overflowing a forced 8k cap on
+    # a 300k-doc corpus produced ~3.6e10 candidate rows and filled
+    # 80 GB of spill before dying). At a real 2^20 cap the 2^20+1-th
+    # hottest shingle of a large enough corpus has df far above any
+    # useful cap, and the same failure is guaranteed. So the valve is
+    # re-checked EXACTLY on the materialized prefix stream: count
+    # postings per shingle (map-side partial agg on the persisted pfx
+    # cache — one row per distinct PREFIX shingle, a small fraction of
+    # the postings), and anti-join away shingles whose prefix fan-out
+    # exceeds the cap. prefix-count ≤ corpus df, so prefix-count > cap
+    # ⟹ corpus df > cap — every drop is licensed by the existing lossy
+    # valve contract, and the join fan-out is bounded by cap² per
+    # shingle UNCONDITIONALLY. The anti-join keys by shingle — the
+    # exact partitioning the candidate join needs — so its exchange
+    # replaces (not adds to) the join's own; AQE broadcasts the
+    # hot-shingle side when it is small (≤ |pfx|/cap rows).
+    # ZERO-JOB gate: the blind spot requires the rank table to
+    # SATURATE, which needs > _DF_TABLE_CAP distinct df≥2 shingles;
+    # every df≥2 shingle costs ≥ 2 postings and postings ≤ k-gram count
+    # ≤ text chars ≤ size_hint, so a corpus under 2·cap bytes CANNOT
+    # saturate the table and the estimate filter above already dropped
+    # the hot ones. Below the gate (every test SF and the bench corpus)
+    # the valve would be a provable no-op costing a groupBy + anti-join,
+    # measured +1.2 s on the 2.6 s bench query. Unknown stats read huge
+    # (2^60) and conservatively ENGAGE the valve.
+    if size_hint_bytes >= 2 * _DF_TABLE_CAP:
+        pfx_hot = (
+            pfx.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("_pdf"))
+            .filter(F.col("_pdf") > max_shingle_df)
+        )
         if stats is not None:
-            stats["truncation"] = pfx.filter(
-                F.col("_df") > max_shingle_df
-            ).agg(
-                F.count_distinct("shingle").alias("hot_shingles"),
-                F.count(F.lit(1)).alias("dropped_postings"),
+            # The grouped frame already holds the counts: hot_shingles
+            # = its row count, dropped postings = its _pdf sum.
+            stats["prefix_truncation"] = pfx_hot.agg(
+                F.count(F.lit(1)).alias("hot_shingles"),
+                F.coalesce(F.sum("_pdf"), F.lit(0)).alias("dropped_postings"),
             )
-            if df_rank == "sampled":
-                # Valve-soundness observability (code review r10): the
-                # valve sees absent-from-table shingles as df 0, which
-                # is sound only while the capped table is NOT
-                # saturated above the cap (min kept df ≤ cap ⟹ every
-                # absent shingle's estimate is genuinely below the
-                # cap). Expose the predicate as a lazy 1-row frame
-                # over the broadcast-sized freq table.
-                stats["df_table"] = freq.agg(
-                    F.count(F.lit(1)).alias("n_entries"),
-                    F.min("_df").alias("min_df"),
-                    (
-                        (F.count(F.lit(1)) == F.lit(_DF_TABLE_CAP))
-                        & (F.min("_df") > F.lit(max_shingle_df))
-                    ).alias("valve_blind_spot"),
-                )
-        pfx = pfx.filter(F.col("_df") <= max_shingle_df).drop("_df")
-        # EXACT prefix fan-out valve (r11): the estimate filter above
-        # has a catastrophic blind spot at saturation — a shingle
-        # HOTTER than the capped rank table's floor is absent from the
-        # table, reads df 0, sorts as the RAREST shingle in every
-        # holder's rarity order, lands in every holder's prefix, and
-        # detonates the candidate self-join (measured: a 2.9k-shingle
-        # hot band overflowing a forced 8k cap on a 300k-doc corpus
-        # produced ~3.6e10 candidate rows and filled 80 GB of spill
-        # before dying — tools/sat_drop_bench.py found it). At 100 TB
-        # the 2^20+1-th hottest shingle has df ~4e5 and the same
-        # failure is guaranteed. So the valve is re-checked EXACTLY on
-        # the materialized prefix stream: count postings per shingle
-        # (map-side partial agg on the persisted pfx cache — the
-        # output is one row per distinct PREFIX shingle, a small
-        # fraction of the postings), and anti-join away shingles whose
-        # prefix fan-out exceeds the cap. prefix-count ≤ corpus df, so
-        # prefix-count > cap ⟹ corpus df > cap — every drop is
-        # licensed by the existing lossy valve contract, and the join
-        # fan-out is now bounded by cap² per shingle UNCONDITIONALLY,
-        # estimates be damned. The anti-join keys by shingle — the
-        # exact partitioning the candidate join needs — so its
-        # exchange replaces (not adds to) the join's own; AQE
-        # broadcasts the hot-shingle side when it is small (it is by
-        # construction ≤ |pfx|/cap rows).
-        # Gated to the sampled path: under df_rank="full" the _df
-        # filter above already compared the EXACT df, and
-        # prefix-count ≤ df makes this valve empty by construction —
-        # no reason to charge the exact path a groupBy + anti-join
-        # for it (code review r11). Second, ZERO-JOB gate: the blind
-        # spot requires the rank table to SATURATE, and saturation
-        # needs > _DF_TABLE_CAP distinct df≥2 shingles; every df≥2
-        # shingle costs ≥ 2 postings and postings ≤ k-gram count ≤
-        # text chars ≤ size_hint, so a corpus under 2·cap bytes
-        # CANNOT saturate the table — every df≥2 shingle is in it and
-        # the estimate filter above already dropped the hot ones.
-        # Below the gate (every test SF and the bench corpus) the
-        # valve would be a provable no-op costing a groupBy + anti-
-        # join, measured +1.2 s on the 2.6 s bench query. Unknown
-        # stats read huge (2^60) and conservatively ENGAGE the valve.
-        if df_rank == "sampled" and size_hint_bytes >= 2 * _DF_TABLE_CAP:
-            pfx_hot = (
-                pfx.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("_pdf"))
-                .filter(F.col("_pdf") > max_shingle_df)
-            )
-            if stats is not None:
-                # The grouped frame already holds the counts — no
-                # second pfx scan or semi-join needed (code review
-                # r11): hot_shingles = its row count, dropped
-                # postings = its _pdf sum.
-                stats["prefix_truncation"] = pfx_hot.agg(
-                    F.count(F.lit(1)).alias("hot_shingles"),
-                    F.coalesce(F.sum("_pdf"), F.lit(0)).alias(
-                        "dropped_postings"
-                    ),
-                )
-            pfx = pfx.join(
-                pfx_hot.select("shingle"), "shingle", "left_anti"
-            )
+        pfx = pfx.join(pfx_hot.select("shingle"), "shingle", "left_anti")
+    return pfx
+
+
+def _ngram_candidates(pfx: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Stage 3: candidate (id_a, id_b) pairs, oriented small→large, from
+    the PPJoin self-join of the prefix postings (duplicates kept)."""
     # Candidate generation = SELF-EQUI-JOIN of the prefix postings on
     # the shingle, with PPJoin positional + length pruning inline: at
     # the pair's first shared prefix shingle, overlap ≤ 1 + min of the
@@ -1034,7 +757,7 @@ def ngram_jaccard_pairs(
         F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"),
         F.col("pos").alias("pos_b"), "shingle",
     )
-    cand = (
+    return (
         pa.join(pb, "shingle")
         .filter(
             (F.col("n_a") < F.col("n_b"))
@@ -1050,117 +773,100 @@ def ngram_jaccard_pairs(
         .filter(F.col("n_a") >= F.lit(threshold) * F.col("n_b"))
         .select("id_a", "id_b")
     )
-    # Two-phase verification. Phase 1 screens the candidate pairs by
-    # intersecting the 64-bit TOKEN arrays — long-typed intersection is
-    # several times cheaper than intersecting k-char string arrays, and
-    # candidates outnumber true pairs by orders of magnitude (measured
-    # 198k → 256 at sf0.1; the string-side verify was 30s of a 25s+5s
-    # total before this split). A token collision shifts token-Jaccard
-    # by at most ~1/|smaller set| per colliding shingle, so screening at
-    # threshold − 0.05 cannot drop a true pair unless >0.05·|set| of a
-    # pair's shingles collide simultaneously (vanishingly unlikely, and
-    # the margin is tunable). Phase 2 computes EXACT string-set Jaccard
-    # on the screen's survivors only — the reported numbers are exactly
-    # the naive definition, bit-identical to the SQL oracle.
+
+
+def _ngram_screen(
+    cand: DataFrame,
+    tok_sets: DataFrame,
+    id_col: str,
+    threshold: float,
+    use_bit_screen: bool,
+    small: bool,
+) -> DataFrame:
+    """Stage 4: distinct candidates that pass the optional OPH bit
+    screen and the token-Jaccard screen at threshold − 0.05."""
+    # Two-phase verification. Phase 1 (this stage) screens the candidate
+    # pairs by intersecting the 64-bit TOKEN arrays — long-typed
+    # intersection is several times cheaper than intersecting k-char
+    # string arrays, and candidates outnumber true pairs by orders of
+    # magnitude (measured 198k → 256 at sf0.1; the string-side verify
+    # was 30s of a 25s+5s total before this split). A token collision
+    # shifts token-Jaccard by at most ~1/|smaller set| per colliding
+    # shingle, so screening at threshold − 0.05 cannot drop a true pair
+    # unless >0.05·|set| of a pair's shingles collide simultaneously
+    # (vanishingly unlikely, and the margin is tunable). Phase 2
+    # (_ngram_verify) computes EXACT string-set Jaccard on the screen's
+    # survivors only — the reported numbers are exactly the naive
+    # definition, bit-identical to the SQL oracle.
     #
-    # Join strategy + dedup placement: a pair sharing several prefix
-    # shingles appears several times in `cand`, and every duplicate
-    # that reaches the screen re-pays an O(|A|+|B|) array intersect —
-    # re-measured at sf0.1/t=0.8 (1.4× duplication, 276k raw vs 199k
-    # distinct): screen-raw 8.4s vs distinct 2.5s + screen 3.2s. The
-    # duplication factor only grows as the threshold drops (prefix
-    # length ≈ (1−t)·n), and the at-scale non-broadcast path also
-    # wants duplicates off BOTH token-attach shuffles, so distinct
-    # first unconditionally. (An earlier revision deferred the
-    # distinct for small corpora based on a stale 198k-candidate
-    # measurement; the hash-relation probes were never the cost —
-    # the redundant intersects were.)
+    # Dedup placement: a pair sharing several prefix shingles appears
+    # several times in `cand`, and every duplicate that reaches the
+    # screen re-pays an O(|A|+|B|) array intersect — measured at
+    # sf0.1/t=0.8 (1.4× duplication, 276k raw vs 199k distinct):
+    # screen-raw 8.4s vs distinct 2.5s + screen 3.2s. The duplication
+    # factor only grows as the threshold drops (prefix length ≈
+    # (1−t)·n), and the at-scale non-broadcast path also wants
+    # duplicates off BOTH token-attach shuffles, so distinct first
+    # unconditionally. When the token payload is provably `small` the
+    # screen sides are broadcast too.
     #
-    # When the token payload is provably small (the `small` estimate
-    # computed above, before the rank join) we broadcast the screen
-    # sides too.
     # Bit-signature pre-screen (engaged whenever the margin leaves a
-    # usable cutoff): the token screen below hauls two ~n_sh-long
-    # arrays to every candidate and pays an O(n) intersect each —
-    # measured 6.5 s for the 1.97 M candidates sf0.1/t=0.6 produces
-    # (prefix filtering degrades on low-entropy corpora: this one's
-    # tiny vocabulary makes every shingle common). The OPH signature
-    # decides the same question with 8 longs a side and ~20 bit ops:
-    # per both-nonempty bucket, P(sign bits match) = (1+J)/2, so
-    # est = 2·match/both − 1 estimates J with σ = 2·√(p(1−p)/both) —
-    # at most 1/√both, and √(1−t²)/√both for a pair sitting exactly
-    # at J = t. The cutoff is ADAPTIVE per pair (see the filter):
-    # est ≥ t − 3.3/√both, a uniform ≥3.3σ test that tightens
-    # automatically for pairs with many joint buckets.
+    # usable cutoff): the token screen hauls two ~n_sh-long arrays to
+    # every candidate and pays an O(n) intersect each — measured 6.5 s
+    # for the 1.97 M candidates sf0.1/t=0.6 produces (prefix filtering
+    # degrades on low-entropy corpora: this one's tiny vocabulary makes
+    # every shingle common). The OPH signature decides the same
+    # question with 8 longs a side and ~20 bit ops: per both-nonempty
+    # bucket, P(sign bits match) = (1+J)/2, so est = 2·match/both − 1
+    # estimates J with σ = 2·√(p(1−p)/both) ≤ 1/√both. Requiring
+    #   est ≥ t − 3.3/√both
+    # holds every pair to the same ≥3.3σ standard — and strictly more
+    # at the threshold itself, where p = (1+t)/2 gives
+    # σ = √(1−t²)/√both: the margin is 3.3/√(1−t²) σ, i.e. 4.1σ at
+    # t=0.6 (risk ≤ 2e-5/pair) and 5.5σ at t=0.8. A fixed t−0.30
+    # cutoff calibrated for both ≈ 120 left typical sf0.1 pairs
+    # (median both = 151, p90 = 177) ~4.6σ of unused slack — measured
+    # 319 938 → 73 802 screen survivors (−77%) on identical final
+    # output. Small both degrades gracefully: the margin widens until
+    # the cutoff falls below any possible estimate; both=0 (no joint
+    # buckets, no evidence) passes to the exact screen.
     # Honesty contract: this stage is PROBABILISTIC — a true pair
     # sitting exactly at the threshold carries ≤ Φ(−3.3/√(1−t²)) drop
     # risk, ≈2e-5 at t=0.6 and ~2e-8 at t=0.8 (zero measured at either
     # SF: sketch bias is upward for near-dups, and real near-dup pairs
-    # sit far above t). Pairs with few joint buckets keep widening
-    # margins until the cutoff falls below any possible estimate —
-    # the graded replacement for the old hard both<110 pass-through.
-    # This is also why the DEFAULT is bit_screen=False — the
-    # oracle-compared registry queries keep the strictly-exact
-    # chain, and only the declared rows-only `_fast` twin (and
-    # production callers that accept the quantified risk) turn the
-    # screen on.
-    # Measured sf0.1/t=0.6: 1.97 M → 74 k candidates (the fixed
-    # t−0.30 cutoff this replaces passed 320 k — it was calibrated
-    # for both ≈ 120 where the population median is 151).
+    # sit far above t). This is also why the DEFAULT is
+    # bit_screen=False — the oracle-compared registry queries keep the
+    # strictly-exact chain.
     #
-    # Screen runs AFTER the distinct, like the token screen: the
-    # tempting screen-before-distinct order (broadcast probes pipelined
-    # into the candidate join, distinct shrunk to the survivors) was
-    # measured SLOWER end-to-end (8.1 s vs 6.9 s at sf0.1) — each
-    # duplicated pair re-pays the 16-long probe + bit arithmetic, and
-    # that redundancy outweighs the 5.9 M→150 k distinct-input cut.
-    # ONE per-doc attach relation, joined once per pair side (r12 job/
-    # exchange-count pass, guide §2.3/§2.4). The r11 shape attached the
-    # OPH signatures and the token arrays through SEPARATE per-side
-    # relations (ga/gb then ta/tb) — four joins whose build/shuffle
-    # sides were four passes over the same per-doc stream. Fusing sig
-    # + tokens into one (id, sigs…, _ts, n_sh) relation halves that:
-    # two joins, and at scale the heavy per-doc payload (the ~n_sh-long
-    # token array; the 8 sig longs are noise next to it) crosses the
-    # wire once per side instead of the sig stream AND the token stream
-    # each crossing once per side — strictly fewer shuffled bytes. The
-    # sig cutoff still screens BEFORE any intersect runs: the fused
-    # filter is `sig_pass AND token_pass` and codegen's conjunction
-    # short-circuits, so a sig-rejected pair never evaluates the O(n)
-    # array_intersect — the same CPU order as the two-stage chain. The
-    # trade, accepted and deliberate: screen decisions now ride the
-    # token-bearing relation, so the mid-size regime where the 72 B/doc
-    # sig table alone was broadcastable but the token payload was not
-    # (sig_hint vs hint in r11) degrades to the shuffle path — AQE
-    # re-promotes at runtime from actual sizes when the estimate was
-    # conservative.
-    # ADAPTIVE sig cutoff (r9): est = 2·match/both − 1 estimates J with
-    # σ = 2·√(p(1−p)/both) ≤ 1/√both, so requiring
-    #   est ≥ t − 3.3/√both
-    # holds every pair to the same ≥3.3σ standard — and strictly
-    # more at the threshold itself, where p = (1+t)/2 gives
-    # σ = √(1−t²)/√both: the margin is 3.3/√(1−t²) σ, i.e. 4.1σ at
-    # t=0.6 (risk ≤ 2e-5/pair) and 5.5σ at t=0.8. The previous
-    # FIXED t−0.30 cutoff was calibrated for both ≈ 120 joint
-    # buckets, but the sf0.1 candidate population sits at median
-    # both = 151 (p90 = 177), so typical pairs enjoyed ~4.6σ of
-    # slack the screen never used — measured 319 938 → 73 802
-    # screen survivors (−77%) on identical final output. Small
-    # both degrades gracefully: the margin widens until the cutoff
-    # falls below any possible estimate (the old hard both<110
-    # pass-through floor, now graded instead of cliffed); both=0
-    # (no joint buckets, no evidence) passes to the exact screen.
+    # Screen runs AFTER the distinct: the tempting screen-before-
+    # distinct order (broadcast probes pipelined into the candidate
+    # join, distinct shrunk to the survivors) measured SLOWER
+    # end-to-end (8.1 s vs 6.9 s at sf0.1) — each duplicated pair
+    # re-pays the 16-long probe + bit arithmetic, and that redundancy
+    # outweighs the 5.9 M→150 k distinct-input cut.
+    #
+    # ONE per-doc attach relation (id, sigs…, _ts, n_sh), joined once
+    # per pair side: attaching signatures and token arrays through
+    # separate per-side relations costs four joins over the same
+    # per-doc stream, and at scale ships the sig stream AND the token
+    # stream once per side. The sig cutoff still screens BEFORE any
+    # intersect runs: the fused filter is `sig_pass AND token_pass` and
+    # codegen's conjunction short-circuits, so a sig-rejected pair
+    # never evaluates the O(n) array_intersect. The accepted trade:
+    # screen decisions ride the token-bearing relation, so the
+    # mid-size regime where the 72 B/doc sig table alone would be
+    # broadcastable but the token payload is not takes the shuffle
+    # path — AQE re-promotes at runtime from actual sizes when the
+    # estimate was conservative.
     sig_cols = (
         [F.col(f"_m{w}") for w in range(4)]
         + [F.col(f"_g{w}") for w in range(4)]
         if use_bit_screen
         else []
     )
-    att = hint(
-        tok_sets.select(
-            F.col(id_col).alias("_tid"), "_ts", "n_sh", *sig_cols
-        )
-    )
+    att = tok_sets.select(F.col(id_col).alias("_tid"), "_ts", "n_sh", *sig_cols)
+    if small:
+        att = F.broadcast(att)
     a_side = cand.distinct().join(
         att, F.col("id_a") == F.col("_tid")
     ).select(
@@ -1195,7 +901,7 @@ def ngram_jaccard_pairs(
                 )
             )
         )
-    screened = (
+    return (
         paired.withColumn("_tc", F.size(F.array_intersect("_ta", "_ts")))
         .filter(
             F.col("_tc") / (F.col("n_ta") + F.col("n_sh") - F.col("_tc"))
@@ -1203,11 +909,23 @@ def ngram_jaccard_pairs(
         )
         .select("id_a", "id_b")
     )
-    # Phase 2 re-derives the STRING shingle sets for the surviving pairs
-    # only, by joining each side's raw text back on and shingling on the
-    # fly — one straight-line pipeline, no corpus-wide string arrays.
-    # The text join prunes the scan to (id, text); survivors number in
-    # the hundreds, so AQE broadcasts the pair side at any corpus size.
+
+
+def _ngram_verify(
+    screened: DataFrame,
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    threshold: float,
+) -> DataFrame:
+    """Stage 5: exact string-shingle Jaccard for the screened pairs —
+    the public (id_a < id_b, jaccard rounded to 6 places) output."""
+    # Re-derive the STRING shingle sets for the surviving pairs only, by
+    # joining each side's raw text back on and shingling on the fly —
+    # one straight-line pipeline, no corpus-wide string arrays. The
+    # text join prunes the scan to (id, text); survivors number in the
+    # hundreds, so AQE broadcasts the pair side at any corpus size.
     sh_expr = (
         f"array_distinct(transform("
         f"sequence(1, greatest(length({{c}}) - {k - 1}, 1)),"
@@ -1216,11 +934,11 @@ def ngram_jaccard_pairs(
     # ONE (id, text) relation joined twice — at bench SFs AQE
     # broadcasts it and exchange reuse builds it once; at scale the
     # tiny pair side is what gets broadcast and the two docs scans
-    # stream in place, unchanged from the per-side shape.
+    # stream in place.
     dtx = docs.select(
         F.col(id_col).alias("_did"), F.col(text_col).alias("_txt")
     )
-    pairs = (
+    return (
         screened.join(dtx, F.col("id_a") == F.col("_did"))
         .select("id_a", "id_b", F.col("_txt").alias("_txa"))
         .join(dtx, F.col("id_b") == F.col("_did"))
@@ -1243,107 +961,6 @@ def ngram_jaccard_pairs(
         )
         .withColumnsRenamed({"_ia": "id_a", "_ib": "id_b"})
     )
-    return pairs
-
-
-# Sampled-df tuning (ngram_jaccard_pairs, df_rank="sampled"). The
-# sample must resolve the df band that actually drives candidate
-# blowup, and that band is corpus-dependent: on web-shaped corpora
-# (long rare tail + hot boilerplate head) a few hundred thousand
-# sampled postings suffice, but on NEAR-DUP-DENSE corpora every
-# shingle sits in a mid band (df ≈ cluster size, 2-64) that a starved
-# sample cannot see — prefix selection then degrades toward random
-# order among unresolved shingles. Measured on the x8 derived near-dup
-# corpus (46 M postings, every doc in an 8-clone cluster), interleaved
-# variants in one session: frac ≤0.05 +28% over full; frac 0.25
-# consistently ~5-8% behind full (estimates quantized to multiples of
-# 4 collapse the df 8-64 cluster band); frac 0.5 statistically
-# indistinguishable from full across two interleaved sessions
-# (quantization 2 ≈ exact). Hence a FRACTION FLOOR of 0.5: near-exact
-# pruning at any scale, the df groupBy still shuffles 2× less than
-# the full rank, and the capped BROADCAST rank table — the dominant
-# structural win, it deletes the full path's shuffled rank JOIN
-# entirely — is unconditional. Tiny corpora (hint ≤ ~32 KiB of
-# Catalyst estimate, ≲300 K postings) and unknown-stats inputs use
-# frac 1.0 (exact df). All knobs trade pruning sharpness for sample
-# cost, NEVER correctness — the pair set is exact under any
-# consistent order (parity-pinned down to a forced ~0.3% sample).
-# _DF_TABLE_CAP bounds the broadcast rank table (~16 B/entry → ~16 MB
-# at the cap) so it broadcasts at any corpus size.
-#
-# SATURATION AWARENESS (r11, VERDICT r10 #1): the 0.5 floor is kept
-# ONLY in the regime the calibration covers — a df≥2 band that fits
-# the capped rank table. The calibrated corpora sit well under
-# _DF_SAT_PROBE_BYTES, so below that gate the floor binds
-# unconditionally (zero new cost, bit-for-bit the r10 behavior).
-# Past the gate, a probe samples a fixed ~_DF_SAT_TARGET_BYTES of the
-# token table (frac = target/size — scale-INDEPENDENT cost, one
-# bounded build-time job) and counts its df≥2 groups: reaching
-# _DF_TABLE_CAP there is a sufficient condition for the 0.5 table to
-# saturate (df≥2 detection is monotone in frac), and in that regime
-# the floor's extra resolution is provably wasted — sub-head shingles
-# read df 0 at ANY fraction once 2^20 hotter ones exist — so frac
-# falls to the probe fraction and the half-corpus scan disappears.
-# The probe UNDER-detects on corpora whose df≥2 band is wide but
-# cool (every shingle df ≈ 3 at 1 TB): those keep the 0.5 floor — the
-# calibrated-quality direction, cost not correctness. In the
-# saturated path the sample resolves head df down to ≈ 2·size/target;
-# entries below that threshold tie-break on shingle value, a
-# pruning-sharpness effect only (exactness is order-independent).
-_DF_SAMPLE_TARGET_BYTES = 32 * 1024
-_DF_MIN_FRAC = 0.5
-_DF_TABLE_CAP = 1 << 20
-_DF_SAMPLE_SEED = 91765431
-_DF_SAT_PROBE_BYTES = 256 * 1024 * 1024
-_DF_SAT_TARGET_BYTES = 64 * 1024 * 1024
-# Saturation alone is NOT sufficient to drop the 0.5 floor (measured,
-# r11): the drop assumes the capped table's head is hot enough for a
-# small sample to rank, which needs the df distribution to actually
-# HAVE a head. On a FLAT saturated corpus (the x8 derived near-dup
-# corpus under a forced 2^10 cap: every shingle df ≈ clone size, no
-# head) the starved sample fills the capped table with noise-ranked
-# arbitrary entries and pruning degrades — interleaved isolated A/B
-# measured 133.6 s (frac 1e-3) vs 95.3 s (frac 0.5), identical
-# 156,384 pairs. So the probe also measures head CONCENTRATION: the
-# share of sampled df≥2 POSTINGS mass held by the top-cap entries.
-# Zipf-shaped real corpora concentrate (top 2^20 of ~10^10 shingles
-# at α≈1 holds ~60% of postings mass ≫ threshold) and drop the
-# floor; flat bands (share ≈ cap/vocab, the x8 case measured 0.3%)
-# keep the calibrated 0.5. Threshold 0.3 is a first cut anchored by
-# those two points; pruning-quality only, never correctness.
-#
-# SECOND guard (same measurement): even with a real head, the drop
-# fraction must still DETECT the head — a head shingle the drop
-# sample misses (≤1 occurrence) reads df 0, sorts as rare, and lands
-# in prefixes, exploding the candidate join on the hottest shingles
-# (the forced-cap x8 corpus had head_share ≥ 0.3 yet still measured
-# 133.6 s vs 95.3 s because frac 1e-3 missed most of the df≈500 mid
-# head). The drop is therefore allowed only when the probe CERTIFIES
-# a rankable head: the coolest top-cap entry must itself have been
-# sampled ≥ _DF_HEAD_LO_MIN times (a 2-count entry is as likely a
-# fluke of a df-8 shingle — scaling it over-estimates the head's
-# floor df). When certification fails the calibrated 0.5 stays —
-# never worse than the pre-saturation-probe behavior; the chosen
-# drop fraction is additionally floored at 8/min_head_df so the
-# certified head stays detectable at the drop fraction itself.
-_DF_SAT_HEAD_SHARE = 0.3
-_DF_HEAD_LO_MIN = 8
-# Probe-ladder bounds: certification needs the cap-th entry sampled
-# ≥ _DF_HEAD_LO_MIN times, and at 100 TB the fixed 64 MiB byte target
-# is frac ~6e-7 where a genuinely hot cap-th shingle (df ~4e5 for
-# Zipf α≈1 over ~10^13 postings) expects ~0.26 occurrences — a single
-# fixed-size probe can NEVER certify at exactly the scale the
-# saturation logic targets, leaving the half-corpus 0.5 floor as the
-# permanent at-scale behavior. The ladder multiplies the probe
-# fraction by _DF_PROBE_ESCALATION per rung until certification or
-# _DF_PROBE_FRAC_CAP; the geometric sum bounds total probe cost at
-# cap·E/(E-1) ≈ 1.9% of one corpus pass (rungs ≥ 2 read the persisted
-# tok_sets cache). A Zipf corpus certifies at frac ≈ 8/df(cap-th)
-# (~2e-5 at 100 TB — two rungs), replacing the 50% scan with a ~0.002%
-# one; a flat corpus climbs the whole ladder (≤ 1.9% overhead) and
-# keeps the calibrated 0.5.
-_DF_PROBE_ESCALATION = 8
-_DF_PROBE_FRAC_CAP = 1.0 / 64
 
 
 MINHASH_P = (1 << 31) - 1  # Mersenne prime: (a·h+b) fits signed 64-bit

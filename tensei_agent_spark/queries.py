@@ -1339,17 +1339,12 @@ def dedup_jaccard_fast(spark: SparkSession, sf: str) -> DataFrame:
     exact threshold for t=0.6, quantified inline), so
     this twin is rows-only; the exact variant above carries the oracle
     and an on/off parity test pins their agreement on the driver
-    corpus. Since r10 the rarity order comes from a SAMPLED df rank
-    (operators/dedup.py df_rank="sampled", the default): a 50%-floor
-    deterministic sample + capped broadcast table replaces the full
-    path's shuffled rank join (and 2x the df groupBy) - exact under
-    any consistent order, parity-pinned sampled-vs-full in
-    tests/test_dedup_fast.py; bench-neutral locally, floor calibrated
-    on the x8 near-dup smoke leg (SCALE.md). Past the 256 MiB gate an
-    escalating probe ladder (r11) drops the floor when it certifies a
-    rankable head - the Zipf/100 TB regime - and keeps 0.5 on flat df
-    bands where dropping measured 1.4x slower (SCALE.md; A/B tool
-    tools/sat_drop_bench.py).
+    corpus. The rarity order comes from a SAMPLED df rank
+    (operators/dedup.py): a 50%-floor deterministic sample + capped
+    broadcast table instead of a shuffled rank join over every
+    posting - exact under any consistent order, pinned against brute
+    force in tests/test_dedup_fast.py; floor calibrated on the x8
+    near-dup smoke leg (SCALE.md).
     The production path also engages the df-2000 candidate cap
     (a shingle shared by d docs expands to O(d²) pairs; max prefix df
     measured at sf0.1 is 304, so the cap is inert here and bites only

@@ -27,6 +27,29 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _brute_force_jaccard(rows, k, threshold):
+    """All-pairs exact Jaccard over distinct k-char substrings, the
+    definition of tests/test_property.py's brute-force check: {(id_a,
+    id_b): J} with id_a < id_b and J ≥ threshold, J rounded to 6 places
+    half-up as Spark's round() does."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def shingles(t):
+        return {t[p : p + k] for p in range(max(len(t) - k + 1, 1))}
+
+    sets = sorted((i, shingles(t)) for i, t in rows)
+    out = {}
+    for x, (ia, sa) in enumerate(sets):
+        for ib, sb in sets[x + 1 :]:
+            inter = len(sa & sb)
+            j = inter / (len(sa) + len(sb) - inter)
+            if j >= threshold:
+                out[(ia, ib)] = float(
+                    Decimal(repr(j)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+                )
+    return out
+
+
 def test_fast_lsh_catches_exact_and_near_dups(spark):
     docs = _corpus(spark)
     pairs = {
@@ -210,12 +233,12 @@ def test_ngram_jaccard_cap_parity_below_and_truncation_above(spark):
     t2 = stats2["truncation"].first()
     assert t2["hot_shingles"] > 0 and t2["dropped_postings"] > 0
 
-    # Valve-resolution guard (code review r10): a cap below the sample
-    # estimator's resolution must force the exact df — with a forced
-    # big hint (frac would be 0.5, min estimate ceil(2/0.5)=4 > 3,
-    # i.e. the valve would drop every twice-sampled shingle), cap=3
-    # must still produce the exact capped pair set, and the
-    # df_table soundness frame must read unsaturated.
+    # Valve-resolution floor: a cap below the sample estimator's
+    # resolution must force the exact df — with a forced big hint
+    # (frac would be 0.5, min estimate ceil(2/0.5)=4 > 3, i.e. the
+    # valve would drop every twice-sampled shingle), cap=3 must still
+    # produce the default call's capped pair set, and the df_table
+    # soundness frame must read unsaturated.
     stats3: dict = {}
     capped3 = {
         (r["id_a"], r["id_b"])
@@ -224,13 +247,14 @@ def test_ngram_jaccard_cap_parity_below_and_truncation_above(spark):
             size_hint_bytes=4 * 32 * 1024,
         ).collect()
     }
-    assert capped3 == {(0, 10), (1, 11)}
+    assert capped3 == capped2
+    assert stats3["df_frac"] == 1.0
     dft = stats3["df_table"].first()
     assert not dft["valve_blind_spot"] and dft["n_entries"] > 0
 
 
 def test_ngram_jaccard_exact_prefix_fanout_valve(spark):
-    """r11: the saturated-rank-table blind spot must not detonate the
+    """The saturated-rank-table blind spot must not detonate the
     candidate join. A hot shingle band WIDER than the capped table
     leaves its overflow off-table reading df 0 — "rarest" — so those
     df-200 shingles land in every holder's prefix and the estimate
@@ -238,7 +262,7 @@ def test_ngram_jaccard_exact_prefix_fanout_valve(spark):
     prefix fan-out valve counts the materialized prefix postings and
     anti-joins any shingle whose fan-out exceeds the cap:
     stats['prefix_truncation'] accounts the drop, the pair set matches
-    the exact-df path under the same cap, and the df_table frame
+    the unsaturated exact-df run under the same cap, and the df_table frame
     reports the blind spot it covered for."""
     import tensei_agent_spark.operators.dedup as dedup_mod
     from tensei_agent_spark.operators.dedup import ngram_jaccard_pairs
@@ -257,15 +281,16 @@ def test_ngram_jaccard_exact_prefix_fanout_valve(spark):
         rows.append((2 * p + 1, boiler + tail))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    # Reference: exact df under the same cap — boiler (df 200 > 8) is
-    # excluded from candidate generation, pairs link through tails.
-    full_capped = {
+    # Reference: the default call under the same cap. A cap ≤ 50 floors
+    # the sample fraction at 1.0, so its df is exact — boiler (df 200 >
+    # 8) is excluded from candidate generation, pairs link through tails.
+    exact_capped = {
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
-            docs, k=8, threshold=0.8, df_rank="full", max_shingle_df=8
+            docs, k=8, threshold=0.8, max_shingle_df=8
         ).collect()
     }
-    assert len(full_capped) == 100
+    assert len(exact_capped) == 100
 
     old_cap = dedup_mod._DF_TABLE_CAP
     dedup_mod._DF_TABLE_CAP = 16
@@ -274,13 +299,12 @@ def test_ngram_jaccard_exact_prefix_fanout_valve(spark):
         sampled_capped = {
             (r["id_a"], r["id_b"])
             for r in ngram_jaccard_pairs(
-                docs, k=8, threshold=0.8, df_rank="sampled",
-                max_shingle_df=8, stats=stats,
+                docs, k=8, threshold=0.8, max_shingle_df=8, stats=stats,
             ).collect()
         }
     finally:
         dedup_mod._DF_TABLE_CAP = old_cap
-    assert sampled_capped == full_capped
+    assert sampled_capped == exact_capped
     # The blind spot was live (table saturated above the cap)...
     dft = stats["df_table"].first()
     assert dft["valve_blind_spot"]
@@ -317,268 +341,75 @@ def test_ngram_fanout_valve_gated_by_corpus_size(spark):
     assert "LeftAnti" in above._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_ngram_jaccard_sampled_vs_full_df_rank_parity(spark):
+def test_ngram_jaccard_sampled_rank_matches_brute_force(spark):
     """The document-frequency rarity order only steers candidate
     pruning — the prefix lemma holds for ANY consistent total order —
-    so the sampled-df path (default, r10: bounded sample + capped
-    broadcast rank table, no full-corpus token shuffle) must emit
-    bit-identical pairs to the full-postings rank it replaced, even
-    when forced down to a tiny sample fraction."""
+    so the sampled df rank must emit exactly the brute-force pair set
+    and Jaccard values: on the driver corpus, forced down to a ~0.3%
+    sample, and when the capped rank table SATURATES (a forced 64-entry
+    cap over a df-flat clone corpus and over a corpus led by a df-200
+    boilerplate band wider than the cap)."""
+    import tensei_agent_spark.operators.dedup as dedup_mod
     from tensei_agent_spark.catalog import load
     from tensei_agent_spark.operators.dedup import ngram_jaccard_pairs
 
+    def pairs(df, threshold, **kw):
+        return {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(
+                df, k=8, threshold=threshold, **kw
+            ).collect()
+        }
+
     docs = load(spark, "/root/testdata/sf0.01", "documents")
-    full = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            docs, k=8, threshold=0.6, df_rank="full"
-        ).collect()
-    }
-    sampled = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            docs, k=8, threshold=0.6, df_rank="sampled"
-        ).collect()
-    }
+    want = _brute_force_jaccard(
+        [(r["doc_id"], r["text"]) for r in docs.collect()], 8, 0.6
+    )
+    assert len(want) == 25
+    assert pairs(docs, 0.6) == want
     # Forced ~0.3% sample (floor bypassed): the rank table degenerates
     # to a handful of entries and the order is mostly raw token order —
     # the pair set must STILL be exact (pruning quality is the only
     # thing sampling may cost; the production _DF_MIN_FRAC floor exists
     # for quality, not correctness).
-    import tensei_agent_spark.operators.dedup as dedup_mod
-
     old_floor = dedup_mod._DF_MIN_FRAC
     dedup_mod._DF_MIN_FRAC = 0.0
     try:
-        starved = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                docs, k=8, threshold=0.6, df_rank="sampled",
-                size_hint_bytes=300 * 32 * 1024,
-            ).collect()
-        }
+        starved = pairs(docs, 0.6, size_hint_bytes=300 * 32 * 1024)
     finally:
         dedup_mod._DF_MIN_FRAC = old_floor
-    assert full == sampled == starved and len(full) == 25
-
-    with pytest.raises(ValueError, match="df_rank"):
-        ngram_jaccard_pairs(docs, k=8, threshold=0.6, df_rank="bogus")
-
-
-def test_ngram_jaccard_saturation_aware_floor(spark):
-    """VERDICT r10 #1 + the r11 concentration refinement: the 0.5
-    sample floor drops to the byte-target fraction ONLY when the
-    df-rank table saturates AND the df distribution has a real head
-    the small sample can rank (top-cap share of sampled df≥2 postings
-    mass ≥ _DF_SAT_HEAD_SHARE). Three regimes, pair set identical to
-    df_rank='full' in all of them (the prefix lemma is
-    order-independent):
-
-    1. FLAT saturated (clone-dense corpus: every shingle df ≈ 8, no
-       head) → keep 0.5. Dropping here measured 1.4× SLOWER on the x8
-       corpus under a forced cap — see _DF_SAT_HEAD_SHARE.
-    2. HEADY saturated (shared boilerplate prefix: a narrow band of
-       df-200 shingles over a df-2 tail) → drop to the probe frac.
-    3. Unsaturated (huge cap) → keep 0.5 (the calibrated regime).
-    4. HEADY saturated, head too cool for the FIRST rung (the 100 TB
-       shape: byte-target frac ≪ 8/head_df) → the probe LADDER
-       escalates until a rung certifies, then drops to the
-       head-detectability fraction — still ≪ 0.5.
-
-    Constants are shrunk to exercise the at-scale branches on a unit-
-    size corpus: probe gate 1 byte (always probe), table cap 64
-    entries, byte target sized for frac ≪ 0.5."""
-    import tensei_agent_spark.operators.dedup as dedup_mod
-    from tensei_agent_spark.operators.dedup import ngram_jaccard_pairs
+    assert starved == want
 
     rng = random.Random(11)
     alphabet = "abcdefghijklmnopqrstuvwxyz "
-
-    # Regime 1 corpus — clone-dense, FLAT df: every shingle df ≈ 8,
+    # Clone-dense, FLAT df: 50 bases × 8 clones, every shingle df ≈ 8,
     # the df≥2 band is the whole vocabulary, no head.
     base = ["".join(rng.choice(alphabet) for _ in range(200)) for _ in range(50)]
     flat_rows = [(100 * b + c, t) for b, t in enumerate(base) for c in range(8)]
-    flat = spark.createDataFrame(flat_rows, "doc_id long, text string")
-
-    # Regime 2 corpus — HEADY: 200 docs in 100 identical pairs, every
-    # doc led by the same ~110-char boilerplate (a ~100-shingle band
-    # at df 200 — WIDER than the 64-entry cap, so the whole top-cap
-    # window is real head, not flukes) over a pair-unique random tail
-    # (df 2) — the head holds most of the df≥2 postings mass AND its
-    # coolest top-cap entry is sampled well past _DF_HEAD_LO_MIN.
+    # HEADY: 200 docs in 100 identical pairs, every doc led by the same
+    # ~110-char boilerplate (a ~100-shingle band at df 200, WIDER than
+    # the 64-entry cap) over a pair-unique random tail (df 2).
     boiler = "".join(rng.choice(alphabet) for _ in range(110))
     heady_rows = []
     for p in range(100):
         tail = "".join(rng.choice(alphabet) for _ in range(100))
         heady_rows.append((2 * p, boiler + tail))
         heady_rows.append((2 * p + 1, boiler + tail))
-    heady = spark.createDataFrame(heady_rows, "doc_id long, text string")
-
-    flat_full = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            flat, k=8, threshold=0.8, df_rank="full"
-        ).collect()
-    }
-    assert len(flat_full) == 50 * 28  # 8 clones each → C(8,2) per base
-    heady_full = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            heady, k=8, threshold=0.8, df_rank="full"
-        ).collect()
-    }
-    assert len(heady_full) == 100  # one identical pair per tail
-
-    hint = 1 << 20  # pretend 1 MiB of corpus
-    old = (
-        dedup_mod._DF_SAT_PROBE_BYTES,
-        dedup_mod._DF_SAT_TARGET_BYTES,
-        dedup_mod._DF_TABLE_CAP,
-    )
-    dedup_mod._DF_SAT_PROBE_BYTES = 1
-    dedup_mod._DF_SAT_TARGET_BYTES = 64 * 1024  # frac_probe = 1/16
+    old_cap = dedup_mod._DF_TABLE_CAP
     dedup_mod._DF_TABLE_CAP = 64
     try:
-        # Regime 1: saturated but FLAT → the calibrated 0.5 stays.
-        stats: dict = {}
-        flat_pairs = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                flat, k=8, threshold=0.8, df_rank="sampled",
-                size_hint_bytes=hint, stats=stats,
-            ).collect()
-        }
-        assert stats["df_saturated"] is True
-        assert stats["df_head_share"] < dedup_mod._DF_SAT_HEAD_SHARE
-        assert stats["df_frac"] == 0.5
-        assert flat_pairs == flat_full
-
-        # Regime 2: saturated AND heady → frac drops to the probe frac.
-        stats2: dict = {}
-        heady_pairs = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                heady, k=8, threshold=0.8, df_rank="sampled",
-                size_hint_bytes=hint, stats=stats2,
-            ).collect()
-        }
-        assert stats2["df_saturated"] is True
-        assert stats2["df_head_share"] >= dedup_mod._DF_SAT_HEAD_SHARE
-        assert stats2["df_frac"] == pytest.approx(64 * 1024 / hint)
-        assert stats2["df_frac"] < 0.5
-        assert heady_pairs == heady_full
-
-        # Regime 3: a cap the probe cannot fill → calibrated 0.5 floor.
-        dedup_mod._DF_TABLE_CAP = 1 << 20
-        stats3: dict = {}
-        unsat_pairs = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                flat, k=8, threshold=0.8, df_rank="sampled",
-                size_hint_bytes=hint, stats=stats3,
-            ).collect()
-        }
-        assert stats3["df_saturated"] is False
-        assert stats3["df_frac"] == 0.5
-        assert unsat_pairs == flat_full
-
-        # Regime 4: the 100 TB shape — the byte-target rung (frac
-        # 1/64) samples the df-256 boilerplate head only ~4× (< the
-        # 8-occurrence certification bar), so a single fixed probe
-        # would give up and keep 0.5; the ladder escalates ×8 and the
-        # 1/8 rung certifies (~32 sampled occurrences), dropping frac
-        # to the head-detectability fraction ≪ 0.5.
-        boiler4 = "".join(rng.choice(alphabet) for _ in range(110))
-        tall_rows = []
-        for p in range(128):
-            tail = "".join(rng.choice(alphabet) for _ in range(100))
-            tall_rows.append((2 * p, boiler4 + tail))
-            tall_rows.append((2 * p + 1, boiler4 + tail))
-        tall = spark.createDataFrame(tall_rows, "doc_id long, text string")
-        tall_full = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(
-                tall, k=8, threshold=0.8, df_rank="full"
-            ).collect()
-        }
-        assert len(tall_full) == 128
-        dedup_mod._DF_TABLE_CAP = 64
-        dedup_mod._DF_SAT_TARGET_BYTES = hint // 64  # rung-1 frac 1/64
-        old_cap = dedup_mod._DF_PROBE_FRAC_CAP
-        dedup_mod._DF_PROBE_FRAC_CAP = 0.25
-        try:
-            stats4: dict = {}
-            tall_pairs = {
-                (r["id_a"], r["id_b"]): r["jaccard"]
-                for r in ngram_jaccard_pairs(
-                    tall, k=8, threshold=0.8, df_rank="sampled",
-                    size_hint_bytes=hint, stats=stats4,
-                ).collect()
-            }
-        finally:
-            dedup_mod._DF_PROBE_FRAC_CAP = old_cap
-        assert stats4["df_saturated"] is True
-        assert stats4["df_probe_rounds"] == 2
-        assert stats4["df_probe_frac"] == pytest.approx(8 / 64)
-        assert stats4["df_head_share"] >= dedup_mod._DF_SAT_HEAD_SHARE
-        assert 1 / 64 <= stats4["df_frac"] < 0.5
-        assert tall_pairs == tall_full
+        for rows, n_pairs in ((flat_rows, 50 * 28), (heady_rows, 100)):
+            want = _brute_force_jaccard(rows, 8, 0.8)
+            assert len(want) == n_pairs
+            stats: dict = {}
+            df = spark.createDataFrame(rows, "doc_id long, text string")
+            # A 1 MiB hint samples at the 0.5 floor and opens the
+            # table-cap gate, so the 64-entry table saturates.
+            got = pairs(df, 0.8, size_hint_bytes=1 << 20, stats=stats)
+            assert stats["df_frac"] == 0.5
+            assert got == want
     finally:
-        (
-            dedup_mod._DF_SAT_PROBE_BYTES,
-            dedup_mod._DF_SAT_TARGET_BYTES,
-            dedup_mod._DF_TABLE_CAP,
-        ) = old
-
-
-def test_ngram_jaccard_probe_skipped_when_valve_floor_binds(spark):
-    """Code review r11: the valve-resolution guard floors frac at
-    min(1, 50/cap) unconditionally, so for caps ≤ 100 (floor ≥ 0.5)
-    the saturation probe's outcome could never lower frac — the probe
-    job must be SKIPPED, not run-logged-and-overridden: df_saturated
-    stays False and df_frac lands on the valve floor, with the pair
-    set still exact under the cap-inert corpus. df_saturated is None,
-    not False: saturation was NOT probed, so it is unknown at build
-    (the lazy stats['df_table'] predicate is the answer)."""
-    import tensei_agent_spark.operators.dedup as dedup_mod
-    from tensei_agent_spark.operators.dedup import ngram_jaccard_pairs
-
-    rng = random.Random(13)
-    alphabet = "abcdefghijklmnopqrstuvwxyz "
-    base = ["".join(rng.choice(alphabet) for _ in range(200)) for _ in range(30)]
-    rows = [(100 * b + c, t) for b, t in enumerate(base) for c in range(4)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    hint = 1 << 20
-    old = (dedup_mod._DF_SAT_PROBE_BYTES, dedup_mod._DF_TABLE_CAP)
-    dedup_mod._DF_SAT_PROBE_BYTES = 1  # gate open: ONLY the valve skips
-    dedup_mod._DF_TABLE_CAP = 8  # would saturate instantly if probed
-    try:
-        stats: dict = {}
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in ngram_jaccard_pairs(
-                docs, k=8, threshold=0.8, df_rank="sampled",
-                max_shingle_df=80,  # valve floor 50/80 = 0.625 ≥ 0.5
-                size_hint_bytes=hint, stats=stats,
-            ).collect()
-        }
-        assert stats["df_saturated"] is None  # probe never ran: unknown
-        assert stats["df_frac"] == pytest.approx(0.625)
-        want = {
-            (r["id_a"], r["id_b"])
-            for r in ngram_jaccard_pairs(
-                docs, k=8, threshold=0.8, df_rank="full"
-            ).collect()
-        }
-        assert got == want == {
-            (100 * b + i, 100 * b + j)
-            for b in range(30)
-            for i in range(4)
-            for j in range(i + 1, 4)
-        }
-    finally:
-        (dedup_mod._DF_SAT_PROBE_BYTES, dedup_mod._DF_TABLE_CAP) = old
+        dedup_mod._DF_TABLE_CAP = old_cap
 
 
 def test_ngram_jaccard_sampled_rank_is_layout_invariant(spark):
@@ -598,8 +429,7 @@ def test_ngram_jaccard_sampled_rank_is_layout_invariant(spark):
         out.append({
             (r["id_a"], r["id_b"]): r["jaccard"]
             for r in ngram_jaccard_pairs(
-                layout, k=8, threshold=0.6, df_rank="sampled",
-                size_hint_bytes=hint,
+                layout, k=8, threshold=0.6, size_hint_bytes=hint,
             ).collect()
         })
     assert out[0] == out[1] == out[2] and len(out[0]) == 25
@@ -607,17 +437,24 @@ def test_ngram_jaccard_sampled_rank_is_layout_invariant(spark):
 
 def test_ngram_jaccard_build_runs_no_job(spark):
     """Building (and explaining) the operator must stay driver-side:
-    broadcast steering reads Catalyst's plan stats, never count()."""
+    broadcast steering reads Catalyst's plan stats, never count(), and
+    the sample fraction is a pure function of the size hint — a hint
+    past every gate (floor fraction, rank-table cut, exact fan-out
+    valve) still runs no build-time probe."""
     from tensei_agent_spark.catalog import load
     from tensei_agent_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = load(spark, "/root/testdata/sf0.01", "documents")
     tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    df = ngram_jaccard_pairs(docs, k=8, threshold=0.6, bit_screen=True)
-    df.explain(extended=False)
-    after = set(tracker.getJobIdsForGroup())
-    assert before == after, "operator build launched Spark jobs"
+    for kw in (
+        {"bit_screen": True},
+        {"max_shingle_df": 2000, "size_hint_bytes": 1 << 30},
+    ):
+        before = set(tracker.getJobIdsForGroup())
+        df = ngram_jaccard_pairs(docs, k=8, threshold=0.6, **kw)
+        df.explain(extended=False)
+        after = set(tracker.getJobIdsForGroup())
+        assert before == after, f"operator build launched Spark jobs: {kw}"
 
 
 # ---------------------------------------------------------------------------

@@ -10,6 +10,11 @@ Usage:
     python tools/bench_ab.py TREE_A TREE_B QUERY [QUERY ...]
         [--reps N (default 3)]
 
+Results are keyed by arm ("A", "B"), each with its tree path, so an
+A/A calibration run (TREE_A == TREE_B) keeps both arms apart. A twin
+that exits non-zero stops the run with its stderr and the arm named,
+and the tool exits non-zero unless every query has N samples per arm.
+
 Per phase (tree × rep): a FRESH interpreter/session in that tree,
 sf0.001 warm of each query, then best-of-3 at $SPARK_GRAFT_SF_DIR with
 no release between the 3 reps — bench.py's exact per-query regime, so
@@ -25,6 +30,7 @@ resolve via the usual env contract.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -65,32 +71,52 @@ def probe() -> str:
     return lines[-1] if lines else "{}"
 
 
-def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 3
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1]) if "=" in a else reps
-    if len(args) < 3:
-        sys.exit(__doc__)
-    tree_a, tree_b, queries = args[0], args[1], args[2:]
-    results: dict = {t: {q: [] for q in queries} for t in (tree_a, tree_b)}
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description="Same-day interleaved A/B of bench queries between two trees."
+    )
+    ap.add_argument("tree_a")
+    ap.add_argument("tree_b")
+    ap.add_argument("queries", nargs="+", metavar="QUERY")
+    ap.add_argument("--reps", type=int, default=3)
+    args = ap.parse_args(argv)
+    arms = {"A": args.tree_a, "B": args.tree_b}
+    results: dict = {
+        arm: {"tree": tree, "queries": {q: [] for q in args.queries}}
+        for arm, tree in arms.items()
+    }
     probes = []
-    for i in range(reps):
-        for tree in (tree_a, tree_b):
+    for i in range(args.reps):
+        for arm, tree in arms.items():
             p = probe()
             probes.append(p)
-            print(f"=== rep {i + 1} tree {tree}\n{p}", flush=True)
+            print(f"=== rep {i + 1} arm {arm} tree {tree}\n{p}", flush=True)
             out = subprocess.run(
-                [sys.executable, "-c", _TWIN, *queries],
+                [sys.executable, "-c", _TWIN, *args.queries],
                 cwd=tree, capture_output=True, text=True,
             )
+            if out.returncode != 0:
+                sys.stderr.write(out.stderr)
+                sys.exit(
+                    f"arm {arm} ({tree}) rep {i + 1}: twin exited "
+                    f"{out.returncode}"
+                )
             for line in out.stdout.splitlines():
                 if line.startswith("RESULT "):
                     print(line, flush=True)
                     _, name, best, _ = line.split(None, 3)
-                    results[tree][name].append(float(best.split("=")[1]))
-    print(json.dumps({"queries": results, "steal_probes": probes}))
+                    results[arm]["queries"][name].append(
+                        float(best.split("=")[1])
+                    )
+    print(json.dumps({"arms": results, "steal_probes": probes}))
+    short = [
+        f"arm {arm} ({r['tree']}) {q}: {len(v)}/{args.reps}"
+        for arm, r in results.items()
+        for q, v in r["queries"].items()
+        if len(v) != args.reps
+    ]
+    if short:
+        sys.exit("missing samples: " + "; ".join(short))
 
 
 if __name__ == "__main__":

@@ -302,32 +302,6 @@ def main() -> None:
         print(f"relational phase FAILED: {exc!r}", flush=True)
     with open(OUT, "w") as f:
         json.dump(payload, f, indent=1)
-
-    # Forced-saturation df-rank A/B leg (VERDICT r11 #8): the
-    # saturated-regime machinery is inert at every test SF, so its
-    # driver-visible evidence lives HERE — tools/sat_drop_bench.py
-    # (shrunk constants, JVM-generated head-heavy corpus, interleaved
-    # A/B, pair-set identity asserted) run as a subprocess because it
-    # manages its own per-run SparkContexts. 120k docs keeps the leg
-    # to a few minutes while preserving the saturation geometry (the
-    # hot band still overflows the forced 8192-entry cap).
-    try:
-        spark.stop()  # free the cores; the subprocess builds its own
-        import subprocess
-
-        proc = subprocess.run(
-            [sys.executable, "tools/sat_drop_bench.py", "120000"],
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            capture_output=True, text=True, timeout=3600,
-        )
-        line = proc.stdout.strip().splitlines()[-1]
-        payload["saturated_df_rank_ab"] = json.loads(line)
-        print(f"saturation leg: {line}", flush=True)
-    except Exception as exc:
-        payload["saturated_df_rank_ab"] = {"error": repr(exc)[:300]}
-        print(f"saturation leg FAILED: {exc!r}", flush=True)
-    with open(OUT, "w") as f:
-        json.dump(payload, f, indent=1)
     print(f"wrote {OUT}", flush=True)
 
 
