@@ -21,7 +21,8 @@ Reference parity (``writers/DatabaseWriterActor.scala``):
 - **Custom db-insert / db-update SQL** override (``:1114-1134``) →
   ``options["insert_sql"]`` on the DB-API route.
 - **Batched writes** with autocommit off (``:350,502,557``) →
-  ``_BATCH``-row batches on every route.
+  ``_BATCH``-row batches on the DB-API route and in Spark's JDBC
+  writer; an embedded Derby loads each write as one bulk import.
 - **Generated-key harvest** (``:555-710`` + AutoIncrementValueBuffer)
   → :func:`read_key_map` re-reads ``(natural_key, generated_key)``
   pairs from a written table. ``run_pipeline`` does not need it: it
@@ -38,10 +39,11 @@ then drained or pushed, and an upsert ends in its upsert statement.
 1. **JVM route** (default): DDL and MERGE run over one connection from
    the driver JVM's DriverManager (:func:`jvm_execute`; the JDBC jar is
    already on the Spark classpath). The push step appends rows to a
-   table. An embedded Derby lives inside this driver JVM, so its rows
-   go through :func:`jvm_write_rows` on one driver-side connection;
-   every other database gets Spark's distributed JDBC writer. Upsert
-   pushes into a staging table, then runs one set-wise
+   table. An embedded Derby lives inside this driver JVM, so
+   :func:`jvm_write_rows` has Spark write the rows as one file in
+   Derby's import format and loads it with one ``SYSCS_IMPORT_DATA``
+   call; every other database gets Spark's distributed JDBC writer.
+   Upsert pushes into a staging table, then runs one set-wise
    ``merge_from_staging``. Exercised for real against embedded Derby,
    which ships in Spark's jars (tests/test_jdbc_live_derby.py), and
    DuckDB's JDBC jar (tests/test_jdbc_live_duckdb.py).
@@ -57,11 +59,15 @@ then drained or pushed, and an upsert ends in its upsert statement.
 
 from __future__ import annotations
 
+import glob
 import math
+import shutil
+import tempfile
 from collections.abc import Callable, Iterable
 from dataclasses import replace
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -478,15 +484,13 @@ def _drop(execute, dialect: Dialect, table: str) -> None:
 
 
 def _drain(df: DataFrame, size: int = _BATCH):
-    """The frame's rows as tuples, in lists of up to ``size``.
+    """The frame's rows as tuples, in lists of up to ``size``, for the
+    DB-API route.
 
     ``collect()``, not ``toLocalIterator()``: a local iterator never
     completes a ``DataFrame.observe`` Observation, so
-    ``run_pipeline(metrics=...)`` blocked on it forever. Both hand the
-    connectors the same Python values (None, Decimal, date, naive
-    datetime, bytearray). Holding the rows is bounded: the DB-API route
-    is gated by ``max_rows``, and an embedded database keeps them in
-    this JVM anyway.
+    ``run_pipeline(metrics=...)`` blocked on it forever. Holding the
+    rows is bounded: the DB-API route is gated by ``max_rows``.
     """
     rows = df.collect()
     for i in range(0, len(rows), size):
@@ -497,13 +501,17 @@ def _jvm_executor(spark, url: str, driver: str | None) -> Callable[[str], object
     return lambda sql: jvm_execute(spark, url, [sql], driver)
 
 
+def _embedded_derby(dialect: Dialect, url: str) -> bool:
+    return dialect.name == "derby" and not url.startswith("jdbc:derby://")
+
+
 def _push(df: DataFrame, url: str, table: str, dialect: Dialect, driver, opts) -> None:
     """Append the rows to ``table``. An embedded Derby (``jdbc:derby:path``;
     the network form is ``jdbc:derby://host``) lives inside this driver
-    JVM — cluster executors could never reach it — so its rows go
-    through :func:`jvm_write_rows`; every other database gets Spark's
-    distributed JDBC writer."""
-    if dialect.name == "derby" and not url.startswith("jdbc:derby://"):
+    JVM — cluster executors could never reach it — so it bulk-imports
+    the rows through :func:`jvm_write_rows`; every other database gets
+    Spark's distributed JDBC writer."""
+    if _embedded_derby(dialect, url):
         jvm_write_rows(df.sparkSession, url, table, df, dialect, driver)
         return
     df.write.format("jdbc").options(
@@ -670,76 +678,69 @@ def jvm_query(spark, url: str, sql: str, driver: str | None = None):
         conn.close()
 
 
+def _import_line(df: DataFrame):
+    """Each row as one line of Derby's import format. A non-NULL string
+    is quoted with inner quotes doubled (Derby trims the blanks of an
+    unquoted field, and an unquoted empty field is NULL); binary is
+    quoted hex. Timestamps print the wall clock of the JVM's default
+    zone, in which JDBC hands Derby a ``java.sql.Timestamp``, not the
+    session zone's. NULL is an empty unquoted field."""
+    session_zone = df.sparkSession.conf.get("spark.sql.session.timeZone")
+    jvm_zone = df.sparkSession._jvm.java.util.TimeZone.getDefault().getID()
+    cells = []
+    for f in df.schema.fields:
+        c = F.col("`" + f.name.replace("`", "``") + "`")
+        if isinstance(f.dataType, StringType):
+            c = F.concat(F.lit('"'), F.replace(c, F.lit('"'), F.lit('""')), F.lit('"'))
+        elif isinstance(f.dataType, BinaryType):
+            c = F.concat(F.lit('"'), F.hex(c), F.lit('"'))
+        elif isinstance(f.dataType, TimestampType):
+            c = c.cast("timestamp_ntz")  # the session zone's wall clock
+            c = F.convert_timezone(F.lit(session_zone), F.lit(jvm_zone), c)
+            c = F.date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        else:
+            c = c.cast("string")
+        cells.append(F.coalesce(c, F.lit("")))
+    return F.concat_ws(",", *cells)
+
+
+def _check_bulk_import(df: DataFrame) -> None:
+    """Refuse what one driver-side Derby import cannot load."""
+    master = df.sparkSession.sparkContext.master
+    if not master.startswith("local"):
+        raise ValueError(f"embedded Derby needs a local master, not {master!r}")
+    if any("," in c for c in df.columns):
+        raise ValueError(
+            f"embedded Derby cannot import a comma in a column name: {df.columns}"
+        )
+
+
 def jvm_write_rows(
-    spark,
-    url: str,
-    table: str,
-    df: DataFrame,
-    dialect: Dialect,
-    driver: str | None = None,
-    batch: int = _BATCH,
+    spark, url: str, table: str, df: DataFrame, dialect: Dialect, driver: str | None = None
 ) -> None:
-    """Driver-side JVM batched INSERT for embedded-in-the-driver-JVM
-    databases (Derby embedded).
-
-    Spark's JDBC writer binds every NULL string parameter with the
-    dialect's StringType null type — CLOB on Derby — and Derby refuses
-    the implicit CLOB→VARCHAR parameter assignment, so any row with a
-    NULL string aimed at a VARCHAR column kills the job. This path
-    binds NULLs with the COLUMN'S OWN type from ParameterMetaData.
-    """
-    import datetime as _dt
-    from decimal import Decimal as _Dec
-
-    cols = df.columns
-    jvm = spark._jvm
-    conn = _jvm_connection(spark, url, driver)
+    """Append the rows to ``table`` of an embedded Derby (one inside the
+    driver JVM) with one bulk import: Spark writes the rows as a single
+    file in Derby's import format (:func:`_import_line`), and one
+    ``SYSCS_IMPORT_DATA`` call loads it in one transaction, on its own
+    connection. The rows never cross into Python. Column names go into
+    the call unquoted: Derby matches them literally. :func:`write_jdbc`
+    has already refused what the import cannot load
+    (:func:`_check_bulk_import`)."""
+    lit = lambda v: "'" + v.replace("'", "''") + "'"  # noqa: E731
+    tmp = tempfile.mkdtemp(prefix="tensei_derby_")
     try:
-        conn.setAutoCommit(False)
-        ps = conn.prepareStatement(dialect._insert(table, cols))
-        ptypes = [
-            ps.getParameterMetaData().getParameterType(i + 1)
-            for i in range(len(cols))
-        ]
-        for chunk in _drain(df, batch):
-            for row in chunk:
-                for i, v in enumerate(row):
-                    if v is None:
-                        ps.setNull(i + 1, ptypes[i])
-                    elif isinstance(v, bool):  # before int: bool is an int
-                        ps.setBoolean(i + 1, v)
-                    elif isinstance(v, int):
-                        ps.setLong(i + 1, v)
-                    elif isinstance(v, float):
-                        ps.setDouble(i + 1, v)
-                    elif isinstance(v, _Dec):
-                        ps.setBigDecimal(i + 1, jvm.java.math.BigDecimal(str(v)))
-                    elif isinstance(v, _dt.datetime):
-                        ps.setTimestamp(
-                            i + 1,
-                            jvm.java.sql.Timestamp.valueOf(
-                                v.strftime("%Y-%m-%d %H:%M:%S")
-                                + f".{v.microsecond:06d}"
-                            ),
-                        )
-                    elif isinstance(v, _dt.date):
-                        ps.setDate(i + 1, jvm.java.sql.Date.valueOf(v.isoformat()))
-                    elif isinstance(v, (bytes, bytearray)):
-                        ps.setBytes(i + 1, bytes(v))
-                    else:
-                        ps.setString(i + 1, str(v))
-                ps.addBatch()
-            ps.executeBatch()
-        conn.commit()
-        ps.close()
-    except BaseException:
+        df.select(_import_line(df)).coalesce(1).write.text(f"file://{tmp}/rows")
+        [path] = glob.glob(f"{tmp}/rows/part-*")  # one, empty when no rows
+        conn = _jvm_connection(spark, url, driver)
         try:
-            conn.rollback()
-        except Exception:  # noqa: BLE001 - rollback is best-effort
-            pass
-        raise
+            conn.createStatement().execute(
+                f"CALL SYSCS_UTIL.SYSCS_IMPORT_DATA(NULL, {lit(table)}, "
+                f"{lit(','.join(df.columns))}, NULL, {lit(path)}, ',', '\"', 'UTF-8', 0)"
+            )
+        finally:
+            conn.close()
     finally:
-        conn.close()
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def drop_table_jvm(spark, url: str, table: str, dialect: Dialect, driver) -> None:
@@ -767,6 +768,8 @@ def write_jdbc(df: DataFrame, spec: TargetSpec) -> None:
         return
 
     spark, url, driver = df.sparkSession, spec.uri, opts.get("driver")
+    if _embedded_derby(dialect, url):
+        _check_bulk_import(df)  # before the DDL, so a refusal changes nothing
     execute = _jvm_executor(spark, url, driver)
     if spec.mode == "overwrite":
         _drop(execute, dialect, table)

@@ -1,10 +1,10 @@
-"""LIVE executor-side JDBC round trips against Apache Derby embedded.
+"""LIVE JDBC round trips against Apache Derby embedded.
 
 Spark ships ``derby-10.16.1.1.jar`` in its own jars directory, so the
-real ``df.write.format("jdbc")`` / ``spark.read.jdbc`` path — the one
-no test had ever executed before round 3 — runs here end-to-end:
+sink's embedded-Derby write and the real ``spark.read.jdbc`` path run
+here end-to-end:
 
-- distributed append + read-back (``sinks/jdbc.py::write_jdbc``,
+- append + read-back (``sinks/jdbc.py::write_jdbc``,
   ``sources/jdbc.py::read_jdbc``),
 - overwrite semantics,
 - staging-table + one set-wise MERGE upsert (the reference's per-row
@@ -13,14 +13,15 @@ no test had ever executed before round 3 — runs here end-to-end:
 - generated-key harvest from a Derby identity column
   (≙ getGeneratedKeys + AutoIncrementValueBuffer,
   ``DatabaseWriterActor.scala:555-710``),
-- a multi-partition parallel write (each partition opens its own
-  embedded connection inside the shared JVM).
+- a multi-partition write, which an embedded Derby loads as one bulk
+  import of a single file,
+- cell-exact values through that import, and what it refuses.
 
 Derby is one of the reference's own integration dialects
 (``src/it/scala/databases/derby``).
 
 NOTE on identifier case: Derby uppercases unquoted identifiers and
-Spark's JDBC writer passes ``dbtable`` unquoted, while our DDL quotes
+Spark's JDBC reader passes ``dbtable`` unquoted, while our DDL quotes
 it — so tests use UPPERCASE table names to make both spellings resolve
 to the same table. Column names stay lowercase: Spark quotes those.
 """
@@ -169,8 +170,8 @@ def test_generated_key_harvest(spark, derby_url):
 
 
 def test_parallel_partitioned_write(spark, derby_url):
-    """8 partitions → 8 concurrent embedded connections in the shared
-    JVM; row count and sum survive intact."""
+    """8 partitions coalesce into one import file and one bulk import;
+    row count and sum survive intact."""
     df = (
         spark.range(0, 5000)
         .selectExpr("id", "cast(id % 97 as double) w")
@@ -338,10 +339,11 @@ def test_overwrite_drop_failure_propagates(spark, derby_url):
 
 def test_run_metrics_complete_on_embedded_derby(spark, derby_url):
     """``run_pipeline(metrics=...)`` returns on an embedded-Derby target
-    and reports every row. The driver-side row drain must complete the
-    write job's ``DataFrame.observe`` Observation; a ``toLocalIterator``
-    drain never did, and ``Observation.get`` blocked forever. NULL,
-    decimal, date and timestamp cells travel the same drain."""
+    and reports every row. The write job (Spark writing the import
+    file) must complete the ``DataFrame.observe`` Observation; a
+    ``toLocalIterator`` drain never did, and ``Observation.get`` blocked
+    forever. NULL, decimal, date and timestamp cells travel the same
+    write."""
     import threading
 
     from tensei_agent_spark.plans import (
@@ -399,3 +401,183 @@ def test_run_metrics_complete_on_embedded_derby(spark, derby_url):
     assert [tuple(str(v) for v in r) for r in rows] == [
         ("1000", "857", "124875.00", "1000", "1000")
     ]
+
+
+# --- cell-exact round trip --------------------------------------------------
+
+_CELL_SCHEMA = (
+    "id long, s string, `Long Text` string, d12 decimal(12,2), "
+    "d18 decimal(18,8), ts timestamp, dt date, x double, b boolean, bin binary"
+)
+_CELL_FIELDS = (
+    Field("id", "long", unique=True, nullable=False),
+    Field("s", max_length=64),  # VARCHAR(64); "Long Text" stays CLOB
+    Field("d12", "decimal(12,2)"),
+    Field("d18", "decimal(18,8)"),
+)
+_STRINGS = [
+    None, "", "  lead", "trail  ", "   ", '"', 'say "hi"', '""', "a,b,,c",
+    "line1\nline2", "crlf\r\nend", "back\\slash", "NULL", "naïve ünïcödé 日本語 ✓",
+]
+
+
+def _cell_rows(first_id: int, strings, shift: int = 0):
+    """One row per string, cycling the other types' edge values."""
+    from datetime import date, datetime
+    from decimal import Decimal
+
+    d12 = [Decimal("1234567890.12"), Decimal("-0.01"), Decimal("0.00"), None]
+    d18 = [Decimal("0.00000001"), Decimal("-0.00000050"),
+           Decimal("1234567890.12345678"), None]
+    ts = [datetime(2024, 1, 2, 3, 4, 5, 123456), datetime(1999, 12, 31, 23, 59, 59, 999999),
+          datetime(2000, 1, 1), datetime(2021, 3, 14, 10, 30, 0, 1), None]
+    dt = [date(1970, 1, 1), date(2024, 2, 29), date(1899, 12, 31), None]
+    x = [1e-300, 0.1 + 0.2, -2.5, 1.7976931348623157e308, 0.0, None]
+    b = [True, False, None]
+    bin_ = [b"", b"\x00\x01\xfe\xff", bytes(range(256)), None, b'"a,b"\n']
+    out = []
+    for i, s in enumerate(strings):
+        k = i + shift
+
+        def pick(vals):
+            return vals[k % len(vals)]
+
+        out.append((first_id + i, s, s, pick(d12), pick(d18), pick(ts), pick(dt),
+                    pick(x), pick(b), pick(bin_)))
+    return out
+
+
+def _read_cells(spark, url, table):
+    back = read_table(spark, url, f'"{table}"', driver=DRIVER).collect()
+    return {r[0]: tuple(r) for r in back}
+
+
+def _assert_cells(actual: dict, expected: list):
+    assert sorted(actual) == sorted(r[0] for r in expected)
+    names = _CELL_SCHEMA.split(", ")
+    for row in expected:
+        got = actual[row[0]]
+        for name, want, have in zip(names, row, got):
+            assert have == want and type(have) is type(want), (row[0], name, want, have)
+
+
+def _cells_round_trip(spark, url, table):
+    first = _cell_rows(1, _STRINGS)
+    write_target(
+        spark.createDataFrame(first, _CELL_SCHEMA),
+        _spec(url, table, "overwrite", _CELL_FIELDS),
+    )
+    _assert_cells(_read_cells(spark, url, table), first)
+
+    # Upsert: rows 1-7 change every cell (NULLs become values and the
+    # reverse), rows 101-107 are new.
+    changed = _cell_rows(1, list(reversed(_STRINGS))[:7], shift=1)
+    added = _cell_rows(101, _STRINGS[7:], shift=2)
+    write_target(
+        spark.createDataFrame(changed + added, _CELL_SCHEMA),
+        _spec(url, table, "upsert", _CELL_FIELDS),
+    )
+    expected = {r[0]: r for r in first}
+    expected.update((r[0], r) for r in changed + added)
+    _assert_cells(_read_cells(spark, url, table), list(expected.values()))
+
+
+def test_cells_round_trip_exactly(spark, derby_url):
+    """Every cell written to embedded Derby by an overwrite and then an
+    upsert reads back equal to its Python input, with its Python type:
+    NULL vs '', blanks at either end, quotes, delimiters, newlines,
+    backslashes, the literal 'NULL', non-ASCII text, decimal scale (and
+    a value Java prints as 1E-8), timestamp microseconds, dates,
+    doubles down to 1e-300, booleans, and binary including empty."""
+    _cells_round_trip(spark, derby_url, "LIVE_CELLS")
+
+
+def test_cells_round_trip_non_utc_session(spark, derby_url):
+    """A non-UTC session time zone does not shift the stored wall
+    clock: Derby keeps the wall clock of the JVM's default zone, which
+    the JDBC reader reads back in that same zone."""
+    conf = "spark.sql.session.timeZone"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "America/Los_Angeles")
+    try:
+        _cells_round_trip(spark, derby_url, "LIVE_CELLS_TZ")
+    finally:
+        spark.conf.set(conf, before)
+    rows = jvm_query(
+        spark, derby_url,
+        'SELECT CAST("ts" AS VARCHAR(32)) FROM "LIVE_CELLS_TZ" WHERE "id" = 101',
+        DRIVER,
+    )
+    # id 101 is added[0]: shift 2 picks ts[2], midnight 2000-01-01.
+    assert rows == [("2000-01-01 00:00:00.0",)]
+
+
+def test_embedded_rows_never_reach_python(spark, derby_url, monkeypatch):
+    """An embedded-Derby overwrite and two upserts, the last of no
+    rows, never drain the rows into Python."""
+    from tensei_agent_spark.sinks import jdbc
+
+    def no_drain(*_args, **_kwargs):
+        raise AssertionError("rows were drained into Python")
+
+    monkeypatch.setattr(jdbc, "_drain", no_drain)
+    fields = (Field("id", "long", unique=True, nullable=False), Field("name", max_length=16))
+    schema = "id long, name string"
+    write_target(
+        spark.createDataFrame([(1, "a"), (2, None)], schema),
+        _spec(derby_url, "LIVE_NODRAIN", "overwrite", fields),
+    )
+    write_target(
+        spark.createDataFrame([(2, "b"), (3, "c")], schema),
+        _spec(derby_url, "LIVE_NODRAIN", "upsert", fields),
+    )
+    write_target(
+        spark.createDataFrame([], schema),
+        _spec(derby_url, "LIVE_NODRAIN", "upsert", fields),
+    )
+    rows = jvm_query(
+        spark, derby_url, 'SELECT "id", "name" FROM "LIVE_NODRAIN" ORDER BY "id"', DRIVER
+    )
+    assert [(int(i), n) for i, n in rows] == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_quote_in_table_name_and_temp_path(spark, derby_url, tmp_path, monkeypatch):
+    """A table named O'HARA and a temporary directory whose path holds
+    a quote both write."""
+    import tempfile
+
+    tmp = tmp_path / "it's"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    df = spark.createDataFrame([(1, "x")], "id long, `pct%` string")
+    write_target(df, _spec(derby_url, "O'HARA", "overwrite", (Field("pct%", max_length=8),)))
+    rows = jvm_query(spark, derby_url, 'SELECT "id", "pct%" FROM "O\'HARA"', DRIVER)
+    assert [(int(i), v) for i, v in rows] == [(1, "x")]
+
+
+def test_comma_column_refused_before_ddl(spark, derby_url):
+    """A column name holding a comma cannot be listed in the import
+    call: the overwrite is refused and the existing table survives."""
+    fields = (Field("id", "long", unique=True), Field("name", max_length=8))
+    write_target(
+        spark.createDataFrame([(1, "a")], "id long, name string"),
+        _spec(derby_url, "LIVE_COMMA", "append", fields),
+    )
+    bad = spark.createDataFrame([(2, "b")], "id long, `a,b` string")
+    with pytest.raises(ValueError, match="comma"):
+        write_target(bad, _spec(derby_url, "LIVE_COMMA", "overwrite", fields))
+    rows = jvm_query(spark, derby_url, 'SELECT "id", "name" FROM "LIVE_COMMA"', DRIVER)
+    assert [(int(i), n) for i, n in rows] == [(1, "a")]
+
+
+def test_non_local_master_refused(spark, derby_url, monkeypatch):
+    """An embedded database lives in the driver JVM, which a cluster's
+    executors cannot reach: a non-local master is refused before any
+    table is created."""
+    df = spark.createDataFrame([(1,)], "id long")
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://elsewhere:7077")
+    with pytest.raises(ValueError, match="local"):
+        write_target(df, _spec(derby_url, "LIVE_REMOTE", "overwrite"))
+    monkeypatch.undo()
+    with pytest.raises(Exception, match="(?i)does not exist|42X05"):
+        jvm_query(spark, derby_url, 'SELECT 1 FROM "LIVE_REMOTE"', DRIVER)
