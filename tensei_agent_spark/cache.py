@@ -8,29 +8,30 @@ cached blocks indefinitely; ``release_all()`` drops every tracked cache
 and is invoked automatically each time a new registry query is built,
 bounding live caches to at most one query's working set.
 
-**Correctness-persists and early release** (ADVICE r9): the rank/offset
-helpers (``operators/windows.py``) persist their range-partitioned
-frame as a CORRECTNESS requirement — two independent executions of one
-range exchange can sample different partition bounds and desynchronize
-the ``_pid`` positional match. Releasing that persist between build
-and execute does NOT reintroduce the corruption: ``unpersist()`` only
-drops cache entries/blocks, it never rewrites plans that were already
-built, so an executed plan still reads BOTH branches through the one
-``InMemoryRelation`` node substituted at build time — a single cached
-RDD lineage whose range partitioner is instantiated once, which pins
-one set of bounds even when every block has to be recomputed
-(empirically pinned by
+**Correctness-persists and early release**: the prefix-sum and
+prefix-max helpers (``operators/windows.py``) persist their
+range-partitioned frame as a CORRECTNESS requirement — two independent
+executions of one range exchange can sample different partition bounds
+and desynchronize the ``_pid`` positional match. Releasing that persist
+between build and execute does NOT reintroduce the corruption:
+``unpersist()`` only drops cache entries/blocks, it never rewrites
+plans that were already built, so an executed plan still reads BOTH
+branches through the one ``InMemoryRelation`` node substituted at build
+time — a single cached RDD lineage whose range partitioner is
+instantiated once, which pins one set of bounds even when every block
+has to be recomputed (empirically pinned by
 ``test_windows_ops.py::test_rank_survives_release_before_execute``:
-rank density holds after ``release_all()`` strips the persist
+prefix sums stay exact after ``release_all()`` strips the persist
 pre-execution). What the persist guards against is its *absence from
-the plan* (two independent exchange nodes — the r9 bug, now also a
-plan-audit rule); early release merely forfeits block reuse and
-recomputes.
+the plan* (two independent exchange nodes, a plan-audit rule); early
+release merely forfeits block reuse and recomputes. The row index
+(``row_index``) needs no such persist: its ``AttachDistributedSequence``
+node persists its own child for the one execution it serves.
 
 **Build-then-collect contract**: the registry's sweep/bench access
 pattern is build query → execute it → build the next. Interleaving
 (build A, build B, then execute A) stays CORRECT — including for the
-rank helpers, per the paragraph above — but recomputes A's persisted
+prefix helpers, per the paragraph above — but recomputes A's persisted
 intermediates, because building B released A's caches. The tracked
 list is also not thread-safe: concurrent builds in one session should
 each hold their own handles (call ``persist()`` directly) rather than

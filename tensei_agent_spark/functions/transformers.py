@@ -21,6 +21,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..operators.windows import row_index
+
 Builder = Callable[..., list[Column]]
 
 TRANSFORMERS: dict[str, Builder] = {}
@@ -463,13 +465,10 @@ def sequential_id(df, order_cols: Sequence[str], start: int = 1, out_col: str = 
 
     The reference uses a central mutable counter actor
     (``generators/IDGenerator.scala:40-100``); a distributed engine
-    needs an explicit total order instead. Uses the scalable row-index
-    helper (no single-partition window).
+    needs an explicit total order instead, numbered by the distributed
+    row index (no single-partition window).
     """
-    from ..operators.joins import with_row_index
-
-    out = with_row_index(df, order_cols, out_col)
-    return out.withColumn(out_col, F.col(out_col) + F.lit(start))
+    return row_index(df, order_cols, out_col, start=start)
 
 
 def drupal_vancode(df, id_col: str, article_col: str, parent_col: str, out_col: str = "vancode"):

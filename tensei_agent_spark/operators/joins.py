@@ -6,7 +6,8 @@ The reference engine has no general join; it combines sources three ways
 1. **Row-aligned merge** — rows matched by position (reference:
    ``processor/RecipeWorker.scala:332-394`` passes ``sequenceRow`` to
    every fetch). Spark: attach a global row index to each side over an
-   explicit total order, then equi-join on the index.
+   explicit total order (:func:`~.windows.row_index`, a global sort and
+   Spark's distributed sequence), then equi-join on the index.
 2. **Mapping-key lookup** — an equi left-join (reference:
    ``processor/MappingOneToOneWorker.scala:232-287`` +
    ``DataTreeDocument.FindDataContainer``).
@@ -23,70 +24,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def with_row_index(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    index_col: str = "_rn",
-) -> DataFrame:
-    """Attach a 0-based global row index over an explicit total order.
-
-    Scale note: a bare ``row_number().over(Window.orderBy(...))`` funnels
-    the whole table through ONE partition. Instead we compute a local
-    row number per partition id and add broadcast per-partition offsets.
-    The offsets are a ``groupBy(_pid)`` aggregate of the SAME
-    range-partitioned frame — one lazy plan, no driver action. That
-    frame is PERSISTED for correctness (see windows._range_partitioned):
-    the two branches match rows on the physical partition id, and
-    independent executions of a range exchange can sample different
-    bounds (AQE exchange reuse is best-effort — a collected
-    row_aligned_merge at sf0.1 showed zero ReusedExchange and emitted
-    1022 rows for a 1000-row merge before the persist, r9). The
-    cumulative pass runs in an unpartitioned window over the
-    O(num_partitions)-row counts frame, never over the input.
-
-    The local index is read out of ``monotonically_increasing_id``
-    (documented layout ``partition_id << 33 | row-in-partition``) right
-    after ``sortWithinPartitions``, so the big side needs no
-    ``Window.partitionBy(_pid)`` — avoiding a second full shuffle
-    (hashpartitioning on _pid) of already-range-partitioned data.
-    """
-    order = [F.col(c) for c in order_cols]
-    # Explicit N pins the exchange (REPARTITION_BY_NUM): AQE partition
-    # coalescing is per-read and can differ between the two branches
-    # reading this shuffle, which would desynchronize mid>>33 vs
-    # spark_partition_id() — see windows._n_shuffle.
-    from ..cache import track
-    from .windows import _n_shuffle
-
-    shuffled = track(df.repartitionByRange(_n_shuffle(df), *order))
-    # Local 0-based index within each range partition (lower 33 bits).
-    local = (
-        shuffled.sortWithinPartitions(*order)
-        .withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_pid", F.shiftright("_mid", 33).cast("int"))
-        .withColumn("_local_rn", F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
-    )
-    # Tiny per-partition row counts -> exclusive running sum = offsets.
-    # Counted on the PRE-sort frame: spark_partition_id() matches
-    # _mid >> 33 (one persisted layout), and skips a full re-sort.
-    w_prev = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offset_df = (
-        shuffled.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            "_pid",
-            F.coalesce(F.sum("_n").over(w_prev), F.lit(0).cast("long")).alias(
-                "_off"
-            ),
-        )
-    )
-    return (
-        local.join(F.broadcast(offset_df), "_pid")
-        .withColumn(index_col, F.col("_local_rn") + F.col("_off"))
-        .drop("_pid", "_mid", "_local_rn", "_off")
-    )
+from .windows import row_index
 
 
 def row_aligned_merge(
@@ -102,8 +40,8 @@ def row_aligned_merge(
     ``maxLoops = min(leftRows, rightRows)`` write cap
     (``RecipeWorker.scala:252-316``).
     """
-    lhs = with_row_index(left, left_order, index_col)
-    rhs = with_row_index(right, right_order, index_col)
+    lhs = row_index(left, left_order, index_col)
+    rhs = row_index(right, right_order, index_col)
     return lhs.join(rhs, index_col, "inner")
 
 

@@ -44,8 +44,9 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import track
 from .spread import spread_for_cpu_map
-from .windows import with_global_rank
+from .windows import row_index
 
 __all__ = [
     "Comparator",
@@ -227,19 +228,20 @@ def sorted_neighborhood_pairs(
     (include the id), or neighbor sets are nondeterministic.
 
     Distributed shape: the global rank comes from
-    :func:`~.windows.with_global_rank` — range-partition + per-
-    partition ``row_number`` + broadcast offsets, NEVER a global
-    window (the single-partition killer at 100 TB). Pair generation is
-    then an EQUI-join of each row against ranks ``i+1 … i+window`` —
-    an explode by the constant ``window`` followed by a hash join on
-    the rank, so the sliding pass is shuffle-bounded by window ×
-    corpus, with no windowed self-scan.
+    :func:`~.windows.row_index` — a global sort and Spark's distributed
+    sequence, NEVER a global window (the single-partition killer at
+    100 TB). Pair generation is then an EQUI-join of each row against
+    ranks ``i+1 … i+window`` — an explode by the constant ``window``
+    followed by a hash join on the rank, so the sliding pass is
+    shuffle-bounded by window × corpus, with no windowed self-scan.
+    The ranked frame is tracked: both join sides read it, and each
+    would otherwise plan its own sort and sequence.
     """
     if window < 1:
         # sequence(i+1, i+0) would DESCEND ([i+1, i] — Spark's default
         # step is -1 when start > stop) and emit self-pairs.
         raise ValueError(f"window must be >= 1, got {window}")
-    ranked = with_global_rank(df, [*sort_cols], out="_i")
+    ranked = track(row_index(df, sort_cols, "_i"))
     left = ranked.select(
         F.col(id_col).alias("id_a"),
         *[F.col(c).alias(f"{c}_a") for c in compare_cols],

@@ -99,10 +99,10 @@ def shuffle_shards(
     - ``pos``: rank within the shard by the md5 order key. NOT a
       window partitioned by shard — that funnels each shard through ONE
       task (8 shards of a 100 TB corpus = 8 spill-bound sorts). Instead
-      a RANGE-partitioned global rank over (shard, okey, key) — every
-      shard's rows occupy a contiguous rank interval, computed fully in
-      parallel — minus a broadcast per-shard offset (an n_shards-row
-      aggregate). Bit-equal to the per-shard row_number.
+      a distributed global row index over (shard, okey, key) — every
+      shard's rows occupy a contiguous index interval, computed fully
+      in parallel — minus a broadcast per-shard offset (an
+      n_shards-row aggregate). Bit-equal to the per-shard row_number.
 
     Shards are independently ordered; a loader interleaving them sees a
     uniform random permutation of the corpus. Write with
@@ -111,7 +111,8 @@ def shuffle_shards(
     Portable: the DuckDB twin of the order key is
     ``md5(concat(CAST(key AS VARCHAR), ':', salt))``.
     """
-    from .windows import with_global_rank
+    from ..cache import track
+    from .windows import row_index
 
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
@@ -120,18 +121,16 @@ def shuffle_shards(
     )
     shard = hash_bucket(F.col(key), buckets=n_shards, salt=salt + "#shard")
 
-    # NOT persisted (r10 rank-free audit): the helper's INTERNAL pin
-    # already makes ranks deterministic across readers (both branches
-    # recompute from the one pinned range materialization — see
-    # cache.py's release contract), so a second corpus-sized persist
-    # here bought only the re-use of cheap post-rank column arithmetic
-    # while costing a full cache write+read of the ranked corpus. The
-    # base branch now recomputes that arithmetic over the cached
-    # exchange blocks instead.
-    ranked = with_global_rank(
-        df.withColumn("_okey", okey).withColumn(shard_col, shard),
-        [shard_col, "_okey", key],
-        out="_grank",
+    # Tracked: the rows and the per-shard base aggregate both read the
+    # indexed frame, and each read would otherwise plan its own sort
+    # and sequence over the whole corpus.
+    ranked = track(
+        row_index(
+            df.withColumn("_okey", okey).withColumn(shard_col, shard),
+            [shard_col, "_okey", key],
+            "_grank",
+            start=1,
+        )
     )
     base = ranked.groupBy(shard_col).agg(
         (F.min("_grank") - 1).alias("_base")

@@ -37,7 +37,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.transformers import apply_chain, sequential_id
-from ..operators.joins import mapping_key_join, remap_foreign_keys, row_aligned_merge
+from ..operators.joins import mapping_key_join, remap_foreign_keys
+from ..operators.windows import row_index
 from .plan import CompiledPlan, compile_plan
 from .spec import Mapping, Pipeline, Recipe
 
@@ -97,16 +98,9 @@ def combine_sources(
     for src in used:
         order = recipe.order_by.get(src) or [frames[src].columns[0]]
         qdf = _qualified(frames[src], src)
-        qorder = [_qual(src, c) for c in order]
-        if out is None:
-            from ..operators.joins import with_row_index
-
-            out = with_row_index(qdf, qorder, "_rn")
-        else:
-            from ..operators.joins import with_row_index
-
-            rhs = with_row_index(qdf, qorder, "_rn")
-            out = out.join(rhs, "_rn", "inner")  # min(N,M) row cap
+        indexed = row_index(qdf, [_qual(src, c) for c in order], "_rn")
+        # Inner join on the index: the min(N,M) row cap.
+        out = indexed if out is None else out.join(indexed, "_rn", "inner")
     return out.drop("_rn"), {s: s for s in used}
 
 

@@ -19,8 +19,10 @@ Spec options: ``sheet`` (name or 0-based index, default first).
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
+import shutil
 import tempfile
 import xml.etree.ElementTree as ET
 import zipfile
@@ -178,6 +180,14 @@ def read_xlsx_rows(path: str, sheet: str | int = 0) -> list[list[str]]:
     return [r + [""] * (width - len(r)) for r in rows]
 
 
+def _staging_dir() -> str:
+    """A fresh staging directory, removed when the interpreter exits
+    (not sooner: Spark reads the staged CSV lazily)."""
+    d = tempfile.mkdtemp(prefix="tensei_excel_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def excel_to_csv(path: str, sheet: str | int = 0, out_dir: str | None = None) -> str:
     """Convert one workbook sheet to a SEPARATOR-delimited CSV file."""
     if path.lower().endswith((".xlsx", ".xlsm")):
@@ -186,7 +196,7 @@ def excel_to_csv(path: str, sheet: str | int = 0, out_dir: str | None = None) ->
         from .biff import read_xls_rows
 
         rows = read_xls_rows(path, sheet=sheet)
-    d = out_dir or tempfile.mkdtemp(prefix="tensei_excel_")
+    d = out_dir or _staging_dir()
     os.makedirs(d, exist_ok=True)
     dest = os.path.join(d, os.path.basename(path) + ".csv")
 

@@ -122,8 +122,8 @@ def test_mixed_specs_on_offsets_line_still_flag():
 
 
 def _broken_global_rank(df, order_col):
-    """The pre-92cf5aa shape: with_global_rank WITHOUT the persist —
-    both _pid branches plan their own range exchange."""
+    """The removed offsets-based global rank WITHOUT its persist — both
+    _pid branches plan their own range exchange."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -169,20 +169,21 @@ def test_unpinned_pid_range_join_flags(spark):
 
 
 def test_persisted_rank_helper_is_clean(spark):
-    """The shipped helper (persisted shared frame) must NOT flag."""
+    """The shipped positional helpers must NOT flag: the row index
+    (distributed sequence, no _pid join at all) and the prefix sum,
+    whose _pid branches read one persisted range frame."""
     from plan_audit import pid_join_unpinned_range
 
     from tensei_agent_spark.cache import release_all
-    from tensei_agent_spark.operators.windows import with_global_rank
+    from tensei_agent_spark.operators.windows import (
+        row_index,
+        with_global_prefix_sum,
+    )
 
     df = spark.range(1000).withColumnRenamed("id", "v")
-    plan = (
-        with_global_rank(df, ["v"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert pid_join_unpinned_range(plan) == []
+    for built in (row_index(df, ["v"]), with_global_prefix_sum(df, ["v"], "v")):
+        plan = built._jdf.queryExecution().executedPlan().toString()
+        assert pid_join_unpinned_range(plan) == []
     release_all()
 
 

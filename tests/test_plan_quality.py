@@ -7,6 +7,7 @@ stay correct."""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(
@@ -217,8 +218,9 @@ def _assert_windows_are_partitioned(plan: str):
 def test_global_order_queries_have_no_global_window(spark):
     """customer_balance_quartiles / part_abc_classification /
     user_activity_gini / zipf_slope formerly ran ntile/rank/cumsum
-    through ONE partition; they must now use the distributed
-    range-partition + offset formulation (operators/windows.py)."""
+    through ONE partition; they must now use the distributed row index
+    or the range-partition + offset prefix helpers
+    (operators/windows.py)."""
     for name in (
         "customer_balance_quartiles",
         "part_abc_classification",
@@ -316,14 +318,18 @@ def test_linkage_blocking_is_equi_and_single_distinct_free(spark):
 
 
 def test_sorted_neighborhood_rank_is_partitioned(spark):
-    """The neighbor join must ride the distributed rank: every window
-    spec partitioned (by _pid), the pairing itself a shuffle/broadcast
-    hash join on the rank — never a windowed self-scan or cartesian."""
+    """The neighbor join must ride the distributed row index: ONE
+    sequence node (both join sides read the one tracked frame), the
+    pairing itself a shuffle/broadcast hash join on the rank — never a
+    windowed self-scan, an unpartitioned window or a cartesian."""
+    from plan_audit import global_windows
+
     plan = _plan(spark, "linkage_sorted_neighborhood")
     assert "CartesianProduct" not in plan
-    for line in plan.splitlines():
-        if "windowspecdefinition(" in line:
-            assert "_pid" in line, line
+    assert global_windows(plan) == [], global_windows(plan)
+    seqs = set(re.findall(r"AttachDistributedSequence\[(\S+?)[,\]]", plan))
+    assert len(seqs) == 1, plan
+    assert plan.count("InMemoryTableScan") == 2, plan
 
 
 def test_salted_join_widens_shuffle_key(spark):

@@ -417,21 +417,22 @@ def test_rrf_fuse_matches_python_model(spark, ids_a, ids_b):
         max_size=60,
     )
 )
-def test_with_global_rank_equals_single_partition_window(spark, rows):
-    """The distributed rank (range-partition + local row_number +
-    persisted-offsets join — operators/windows.py) must equal Spark's
+def test_row_index_equals_single_partition_window(spark, rows):
+    """The distributed row index (global sort + distributed sequence —
+    operators/windows.py::row_index) with start=1 must equal Spark's
     own row_number() OVER (ORDER BY ...) single-partition window for
-    arbitrary data, INCLUDING under collect() — the path where the r9
-    exchange-reuse bug corrupted ranks while count() looked fine."""
+    arbitrary data, INCLUDING under collect() — the path where an
+    earlier offsets-based rank corrupted ranks while count() looked
+    fine."""
     from pyspark.sql import Window
 
-    from tensei_agent_spark.operators.windows import with_global_rank
+    from tensei_agent_spark.operators.windows import row_index
 
     rows = list({(k, u) for k, u in rows})  # total order needs unique keys
     df = spark.createDataFrame(rows, "k long, u long")
     got = {
         (r["k"], r["u"]): r["i"]
-        for r in with_global_rank(df, ["k", "u"], out="i").collect()
+        for r in row_index(df, ["k", "u"], "i", start=1).collect()
     }
     want = {
         (r["k"], r["u"]): r["i"]

@@ -5,10 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tensei_agent_spark.operators.joins import (
-    bucketed_table,
-    with_row_index,
-)
+from tensei_agent_spark.operators.joins import bucketed_table
+from tensei_agent_spark.operators.windows import row_index
 from tensei_agent_spark.operators.skew import salted_join
 
 
@@ -55,11 +53,11 @@ def test_bucketed_join_has_no_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_with_row_index_dense_and_ordered(spark):
+def test_row_index_dense_and_ordered(spark):
     df = spark.range(0, 10_000).select(
         (F.lit(9_999) - F.col("id")).alias("key")  # descending input
     ).repartition(16)
-    out = with_row_index(df, ["key"], "rn").collect()
+    out = row_index(df, ["key"], "rn").collect()
     pairs = sorted((r["rn"], r["key"]) for r in out)
     # dense 0..N-1 index, aligned with the requested total order
     assert [p[0] for p in pairs] == list(range(10_000))
@@ -189,16 +187,16 @@ def test_bucketed_aggregation_has_no_exchange(spark):
 
 
 def test_row_aligned_merge_collect_is_exact_at_sf01(spark):
-    """Regression (r9, found by the sf0.1 strict sweep): the positional
-    merge's rank and offsets branches match rows on the physical
-    partition id, and before the range-shuffle persist two independent
-    executions of the exchange sampled DIFFERENT partition bounds —
+    """Regression found by the sf0.1 strict sweep: an offsets-based
+    row index whose two branches matched rows on the physical
+    partition id, without a persist of the range shuffle, sampled
+    DIFFERENT partition bounds in two executions of the exchange —
     collect()/toPandas() of this exact composite returned 1022 rows
-    (duplicated ranks, rank 914 missing) while count() said 1000. AQE
-    exchange reuse is best-effort; the persisted frame makes the
-    single materialization structural. The sf0.1 inputs reproduce the
-    drift deterministically (supplier's 1000 rows over 32 sampled
-    range partitions); sf0.001 never tripped it."""
+    (duplicated ranks, rank 914 missing) while count() said 1000. The
+    distributed-sequence index numbers rows inside one node that
+    caches its own sorted child, so the index is dense by
+    construction; these inputs (supplier's 1000 rows over 32 sampled
+    range partitions) keep pinning it."""
     import os
 
     from tensei_agent_spark.catalog import load as cat_load

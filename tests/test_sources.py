@@ -328,6 +328,38 @@ def test_excel_source_end_to_end(spark, tmp_path):
     assert str(rows[2]["price"]) == "7.50"
 
 
+def test_excel_staging_dir_removed_at_exit(tmp_path):
+    """The staged CSV outlives excel_to_csv (Spark reads it lazily), but
+    not the process: a process that reads a workbook and exits leaves
+    no tensei_excel_* directory in its temp dir."""
+    import subprocess
+    import sys
+
+    wb = tmp_path / "wb.xlsx"
+    _write_xlsx(str(wb), [("s1", [[1, "dune"], [2, "emma"]])])
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    code = (
+        "import os, sys\n"
+        "from tensei_agent_spark.sources.excel import excel_to_csv\n"
+        "staged = excel_to_csv(sys.argv[1])\n"
+        "assert open(staged).read() == '1~~~dune\\n2~~~emma\\n'\n"
+        "print(staged)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", code, str(wb)],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp)},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert done.returncode == 0, done.stderr
+    assert done.stdout.strip().startswith(str(tmp))
+    assert list(tmp.glob("tensei_excel_*")) == []
+
+
 def test_columnar_orc_roundtrip(spark, tmp_path):
     """ORC sink → ORC source round-trip with spec schema and options;
     parquet source reads through the same registry path."""

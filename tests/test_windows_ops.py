@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from tensei_agent_spark.operators.windows import (
     ntile_from_rank,
+    row_index,
     with_global_prefix_sum,
-    with_global_rank,
 )
 
 
@@ -31,7 +31,7 @@ def skewed(spark):
 
 
 def test_global_rank_equals_row_number(skewed):
-    got = with_global_rank(skewed, ["v", "id"], out="i")
+    got = row_index(skewed, ["v", "id"], "i", start=1)
     want = skewed.select(
         "id", F.row_number().over(Window.orderBy("v", "id")).alias("i")
     )
@@ -42,13 +42,13 @@ def test_global_rank_equals_row_number(skewed):
 
 
 def test_bounded_rank_equals_global_rank(skewed):
-    """with_bounded_rank must be bit-equal to with_global_rank (and so
-    to row_number) on the same total order — it substitutes for it in
-    oracle-checked queries whose ranked frame is bounded (r11)."""
+    """with_bounded_rank must be bit-equal to row_index (and so to
+    row_number) on the same total order — it substitutes for it in
+    oracle-checked queries whose ranked frame is bounded."""
     from tensei_agent_spark.operators.windows import with_bounded_rank
 
     got = with_bounded_rank(skewed, [F.desc("v"), F.col("id")], out="i")
-    want = with_global_rank(skewed, [F.desc("v"), F.col("id")], out="i")
+    want = row_index(skewed, [F.desc("v"), F.col("id")], "i", start=1)
     assert (
         got.select("id", "i").exceptAll(want.select("id", "i")).count() == 0
         and want.select("id", "i").exceptAll(got.select("id", "i")).count() == 0
@@ -75,7 +75,7 @@ def test_bounded_rank_multibranch_consumption_consistent(skewed):
 
 
 def test_global_rank_desc_order(skewed):
-    got = with_global_rank(skewed, [F.desc("v"), F.col("id")], out="i")
+    got = row_index(skewed, [F.desc("v"), F.col("id")], "i", start=1)
     want = skewed.select(
         "id", F.row_number().over(Window.orderBy(F.desc("v"), "id")).alias("i")
     )
@@ -107,7 +107,7 @@ def test_global_prefix_sum_rejects_float():
 @pytest.mark.parametrize("n,tiles", [(997, 4), (8, 4), (3, 4), (1000, 5), (7, 3)])
 def test_ntile_formula_matches_spark_ntile(spark, n, tiles):
     df = spark.range(n).repartition(5)
-    got = with_global_rank(df, ["id"], out="i").select(
+    got = row_index(df, ["id"], "i", start=1).select(
         "id", ntile_from_rank(F.col("i"), F.lit(n).cast("long"), tiles).alias("q")
     )
     want = df.select("id", F.ntile(tiles).over(Window.orderBy("id")).alias("q"))
@@ -116,7 +116,7 @@ def test_ntile_formula_matches_spark_ntile(spark, n, tiles):
 
 def test_empty_input(spark):
     df = spark.range(0).select(F.col("id"), F.col("id").alias("v"))
-    assert with_global_rank(df, ["v", "id"]).count() == 0
+    assert row_index(df, ["v", "id"]).count() == 0
 
 
 def test_ntile_non_power_of_two_matches_sql(spark):
@@ -293,27 +293,37 @@ def test_global_prefix_max_matches_pandas_cummax(spark):
 
 
 def test_rank_survives_release_before_execute(spark):
-    """ADVICE r9: release_all() between BUILDING a rank-helper plan and
-    EXECUTING it must not corrupt ranks. unpersist() drops cache
-    entries/blocks but never rewrites built plans — the executed plan
-    still reads both _pid branches through the one InMemoryRelation
-    substituted at build time, whose single cached-RDD lineage pins one
-    set of range bounds even when every block recomputes. Heavy ties +
-    enough rows to straddle partition bounds make a desynchronized
-    exchange show up as duplicated/dropped ranks."""
+    """release_all() between BUILDING a positional plan and EXECUTING it
+    must not corrupt it. The row index holds no helper-side persist
+    (its sequence node caches its own child during the one execution).
+    The prefix sum's correctness persist is released here before
+    execution: unpersist() drops cache entries/blocks but never
+    rewrites built plans, so the executed plan still reads both _pid
+    branches through the one InMemoryRelation substituted at build
+    time, whose single cached-RDD lineage pins one set of range bounds
+    even when every block recomputes. Heavy ties + enough rows to
+    straddle partition bounds make a desynchronized exchange show up
+    as duplicated/dropped ranks or wrong running sums."""
     from pyspark.sql import functions as F
 
     from tensei_agent_spark.cache import release_all
-    from tensei_agent_spark.operators.windows import with_global_rank
 
     df = spark.range(100_000).select(
         (F.col("id") % 997).alias("v"), F.col("id").alias("tb")
     )
-    ranked = with_global_rank(df, ["v", "tb"], out="i")
+    ranked = row_index(df, ["v", "tb"], "i", start=1)
+    cum = with_global_prefix_sum(df, ["v", "tb"], "tb", out="cum")
     release_all()  # strip the correctness persist BEFORE executing
     spark.catalog.clearCache()
     ranks = sorted(r["i"] for r in ranked.select("i").collect())
     assert ranks == list(range(1, 100_001))
+    got = sorted(r["cum"] for r in cum.select("cum").collect())
+    tbs = [r["tb"] for r in df.orderBy("v", "tb").select("tb").collect()]
+    want, acc = [], 0
+    for t in tbs:
+        acc += t
+        want.append(acc)
+    assert got == want
 
 
 def test_stats_quantiles_exact_matches_numpy(spark):

@@ -76,15 +76,15 @@ def _top_level_args(s: str) -> list[str]:
     return [a for a in args if a]
 
 
-# The engine's global-rank/offset helpers (operators/windows.py _w_prev,
-# operators/joins.py) run ONE intentional orderings-only window: a
+# The engine's prefix-sum/prefix-max helpers (operators/windows.py
+# _w_prev) run ONE intentional orderings-only window: a
 # cumulative sum over the groupBy(_pid) per-partition stats frame. That
 # frame is O(shuffle partitions) rows (~32-1000), never O(rows), so the
 # single task is bounded by construction. Exempt exactly that shape —
 # ordering is the lone column `_pid` AND the window's plan subtree
 # contains the HashAggregate keyed on _pid that proves the input is the
 # per-partition aggregate — and keep flagging every other
-# orderings-only window (VERDICT r8: 23 false positives, 0 real).
+# orderings-only window.
 PID_ONLY_ORDER = re.compile(r"^_pid#\d+ (ASC|DESC) NULLS (FIRST|LAST)$")
 PID_KEYED_AGG = re.compile(r"HashAggregate\(keys=\[_pid#\d+")
 
@@ -140,19 +140,19 @@ def global_windows(plan: str) -> list[str]:
     return bad
 
 
-# The r9 rank-corruption class, promoted to a permanent gate (VERDICT
-# r9 #3): the global-rank/offset helpers (operators/windows.py) read
-# ONE range exchange from two branches and match rows on the physical
-# partition id (_pid). RangePartitioner samples its bounds per
-# EXECUTION, so if the shared frame is not pinned by a persist, the
-# two branches can materialize two independent range exchanges with
-# DIFFERENT bounds — desynchronized _pid, duplicated + dropped ranks
-# (the pre-92cf5aa tree produced 1022 rows from a 1000-row positional
-# merge). Plan signature of the broken shape: a join keyed on _pid
-# whose subtree contains a RAW `Exchange rangepartitioning` (i.e. one
-# NOT nested inside an InMemoryRelation — the persist pins exactly one
-# materialization, so in the safe shape every range exchange under a
-# _pid join renders inside the cached relation).
+# The positional-corruption class, as a permanent gate: the prefix
+# helpers (operators/windows.py) read ONE range exchange from two
+# branches and match rows on the physical partition id (_pid).
+# RangePartitioner samples its bounds per EXECUTION, so if the shared
+# frame is not pinned by a persist, the two branches can materialize
+# two independent range exchanges with DIFFERENT bounds —
+# desynchronized _pid, duplicated + dropped rows (an unpinned
+# offsets-based row index once produced 1022 rows from a 1000-row
+# positional merge). Plan signature of the broken shape: a join keyed
+# on _pid whose subtree contains a RAW `Exchange rangepartitioning`
+# (i.e. one NOT nested inside an InMemoryRelation — the persist pins
+# exactly one materialization, so in the safe shape every range
+# exchange under a _pid join renders inside the cached relation).
 PID_JOIN_KEY = re.compile(r"Join [^\n]*?\[[^\]]*_pid#\d+")
 RANGE_EXCHANGE = re.compile(r"Exchange rangepartitioning\(")
 

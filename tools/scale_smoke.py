@@ -77,12 +77,11 @@ def scaled_emb(spark, s: int):
 
 
 def _rank_leg(docs) -> int:
-    """Rank the corpus with the persisted-offsets helper and ASSERT the
-    ranks are dense 1..n in the same action — a non-dense rank here is
-    exactly the r9 exchange-reuse corruption."""
-    from tensei_agent_spark.operators.windows import with_global_rank
+    """Index the corpus with the distributed row index and ASSERT the
+    ranks are dense 1..n in the same action."""
+    from tensei_agent_spark.operators.windows import row_index
 
-    r = with_global_rank(docs, ["doc_id"], out="_i")
+    r = row_index(docs, ["doc_id"], "_i", start=1)
     row = r.agg(
         F.count(F.lit(1)).alias("n"),
         F.max("_i").alias("mx"),
@@ -163,13 +162,9 @@ def main() -> None:
             "random_projection": lambda: PRJ.random_project(
                 emb, k=16
             ).count(),
-            # r9: the rank helpers now PERSIST their range shuffle
-            # (correctness — see windows._range_partitioned). This leg
-            # evidences that the persisted formulation stays linear AND
-            # exact as the corpus doubles: ranks must be dense 1..n
-            # (the exchange-reuse bug produced duplicated + dropped
-            # ranks precisely under composite plans at this SF).
-            "global_rank_persisted": lambda: _rank_leg(docs),
+            # The distributed row index must stay linear AND exact as
+            # the corpus doubles: ranks must be dense 1..n.
+            "row_index": lambda: _rank_leg(docs),
         }
         if s == 8:
             # The x8 leg is the candidate-cap evidence run only — the
