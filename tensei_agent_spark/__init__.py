@@ -17,7 +17,6 @@ Layout
 - ``functions``    transformer registry (≙ reference transformers, §2.7)
 - ``operators``    joins (row-align, key), dedup, similarity, text, stats,
                    multimodal plumbing
-- ``streaming``    Structured Streaming over the events table
 - ``infer``        schema inference (≙ SchemaExtractor)
 """
 

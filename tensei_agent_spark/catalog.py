@@ -27,8 +27,8 @@ TABLES = (
 # Small dimension tables — always broadcast-join these against facts.
 DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 
-# Parquet SCHEMA cache (r12, guide §5 — the driver should do almost no
-# work per query): a bare ``spark.read.parquet(path)`` runs a 1-task
+# Parquet SCHEMA cache (the driver should do almost no work per
+# query): a bare ``spark.read.parquet(path)`` runs a 1-task
 # schema-inference job (footer read) on EVERY call, and the engine
 # builds each table fresh per query — ~29 bench queries × (warm +
 # best-of-3) pay that scheduling round-trip again and again for a
@@ -87,10 +87,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return _read_parquet(spark, path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -28,8 +28,6 @@ import json as _json
 import re
 from datetime import datetime
 
-from pyspark.sql.types import StructType
-
 from .plans.spec import Field, SourceSpec
 
 # Candidate separators, reference-style (CSVSchemaExtractor separator
@@ -363,36 +361,3 @@ def infer_jdbc(
         return tuple(fields), fks
     finally:
         conn.close()
-
-
-def schema_diff(old: StructType, new: StructType) -> dict:
-    """Schema drift between two snapshots of a feed: added / removed /
-    type-changed / nullability-changed columns (by name).
-
-    The ingestion guard for long-lived pipelines — run against
-    yesterday's inferred schema before a load, alert on `changed`, and
-    treat `added` as evolution (parquet mergeSchema handles it) vs
-    `removed` as breakage. Pure metadata comparison, no data read.
-    """
-    old_f = {f.name: f for f in old.fields}
-    new_f = {f.name: f for f in new.fields}
-    added = sorted(set(new_f) - set(old_f))
-    removed = sorted(set(old_f) - set(new_f))
-    changed = sorted(
-        n
-        for n in set(old_f) & set(new_f)
-        if old_f[n].dataType != new_f[n].dataType
-    )
-    nullability = sorted(
-        n
-        for n in set(old_f) & set(new_f)
-        if old_f[n].dataType == new_f[n].dataType
-        and old_f[n].nullable != new_f[n].nullable
-    )
-    return {
-        "added": added,
-        "removed": removed,
-        "changed": changed,
-        "nullability": nullability,
-        "compatible": not removed and not changed,
-    }

@@ -158,47 +158,6 @@ def repeated_spans(
     )
 
 
-def segment_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = r"\n\n+",
-    normalize: bool = True,
-) -> DataFrame:
-    """CCNet-style segment (paragraph) dedup: split each document on
-    ``sep``, hash each normalized segment, and return every document's
-    segments annotated with corpus-wide duplication, so a consumer can
-    drop repeated segments (keep = first occurrence by (id, position)).
-
-    Output: (id, seg_pos, seg_hash, n_copies, keep). One shuffle
-    (window by seg_hash would single-partition hot boilerplate — the
-    global-first-occurrence flag is computed with a min-struct
-    aggregation + broadcast-eligible join instead).
-    """
-    segs = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("seg_pos", "_seg"),
-    ).filter(F.length(F.trim("_seg")) > 0)
-    norm = F.trim(F.col("_seg"))
-    if normalize:
-        norm = F.lower(F.regexp_replace(norm, r"\s+", " "))
-    segs = segs.select(F.col(id_col), "seg_pos", F.md5(norm).alias("seg_hash"))
-    firsts = segs.groupBy("seg_hash").agg(
-        F.count(F.lit(1)).alias("n_copies"),
-        F.min(F.struct(F.col(id_col), F.col("seg_pos"))).alias("_first"),
-    )
-    return segs.join(firsts, "seg_hash").select(
-        F.col(id_col),
-        "seg_pos",
-        "seg_hash",
-        "n_copies",
-        (
-            (F.col(f"_first.{id_col}") == F.col(id_col))
-            & (F.col("_first.seg_pos") == F.col("seg_pos"))
-        ).alias("keep"),
-    )
-
-
 def char_shingles(
     docs: DataFrame,
     text_col: str = "text",
@@ -226,28 +185,6 @@ def char_shingles(
         F.expr(f"substring({text_col}, _pos, {k})").alias("shingle"),
     )
     return out.distinct() if distinct else out
-
-
-def shingle_sets(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-) -> DataFrame:
-    """Per-document k-shingle SET as one array column — computed as a
-    pure map expression (``transform`` over a ``sequence`` +
-    ``array_distinct``), ZERO exchanges. The explode + groupBy
-    ``collect_set`` formulation shuffles every shingle occurrence
-    (|corpus text| rows) just to reassemble what each row already had;
-    measured 7.4s → 0.2s at sf0.1. Output: (id, _shs, n_sh)."""
-    arr = F.expr(
-        f"array_distinct(transform("
-        f"sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-        f" i -> substring({text_col}, i, {k})))"
-    )
-    return docs.select(F.col(id_col), arr.alias("_shs")).withColumn(
-        "n_sh", F.size("_shs")
-    )
 
 
 # Sampled-df tuning (ngram_jaccard_pairs). The sample must resolve the
@@ -1039,23 +976,6 @@ def minhash_signatures_wide(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    num_hashes: int = 16,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Long-form MinHash signatures (id, seed, minhash) — the wide
-    computation unpivoted (cheap: post-aggregation stack)."""
-    wide = minhash_signatures_wide(docs, text_col, id_col, k, num_hashes, hash_fn)
-    stack = ", ".join(f"{i}, sig{i}" for i in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {stack}) as (seed, minhash)"
-    )
-
-
 def simhash_fingerprints(
     docs: DataFrame,
     text_col: str = "text",
@@ -1078,7 +998,7 @@ def simhash_fingerprints(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     ).alias("tok")
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
-    # Deliberately NOT spread_for_cpu_map (r9 A/B, same verdict as the
+    # Deliberately NOT spread_for_cpu_map (A/B, same verdict as the
     # cms/bm25 tokenize maps): one md5 per token is middling CPU, and
     # the raw-text shuffle + extra AQE stage measured net-negative
     # (0.99-1.32 s unspread vs 1.24-1.41 s spread, 3 reps of warm
@@ -1238,14 +1158,9 @@ def bucket_pairs(
             "pairs colliding only in hotter buckets are dropped "
             "(stats['truncation'] quantifies)", max_bucket_df,
         )
-        # ONE exchange of the banded stream (r12 job-count pass, guide
-        # §2.4): the r11 shape persisted band_sig, counted bucket sizes
-        # on one exchange of partial counts, anti-joined the hot keys
-        # (a broadcast build), then re-exchanged the FULL banded stream
-        # for the collect_list groupBy — 2 shuffles + 1 broadcast + a
-        # cache fill, each a scheduling round-trip. The banded stream
-        # has to cross the wire keyed by (band, band_key) exactly once
-        # no matter what (that is what grouping a bucket means), so
+        # ONE exchange of the banded stream. The banded stream has to
+        # cross the wire keyed by (band, band_key) exactly once no
+        # matter what (that is what grouping a bucket means), so
         # exchange the RAW stream once, explicitly, and derive
         # EVERYTHING downstream on that one layout: the size count, the
         # keep-filter join, and the member collect all run co-partitioned
@@ -1719,54 +1634,6 @@ def boilerplate_coverage(
             ),
         )
     )
-
-
-def tune_lsh(
-    threshold: float,
-    num_hashes: int,
-    fn_weight: float = 1.0,
-) -> tuple[int, int, float]:
-    """Pick the (bands, rows) split of a MinHash signature that best
-    separates pairs around a Jaccard ``threshold`` — the standard
-    S-curve tuning (Mining of Massive Datasets §3.4): collision
-    probability of a pair with similarity s is p(s) = 1 − (1 − s^r)^b.
-
-    Minimizes  ∫₀^t p(s) ds  +  fn_weight · ∫ₜ¹ (1 − p(s)) ds
-    (false-positive area below the threshold plus weighted false-
-    negative area above it, by closed-form-free Simpson integration)
-    over all integer factorizations b·r = num_hashes. ``fn_weight > 1``
-    biases toward recall (missing a true dup usually costs more than
-    verifying a candidate).
-
-    Returns (bands, rows, p_at_threshold). Driver-side arithmetic on
-    plan parameters — nothing touches data.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    best: tuple[float, int, int, float] | None = None
-    for rows in range(1, num_hashes + 1):
-        if num_hashes % rows:
-            continue
-        bands = num_hashes // rows
-
-        def p(s: float) -> float:
-            return 1.0 - (1.0 - s**rows) ** bands
-
-        def integral(lo: float, hi: float, f, n: int = 200) -> float:
-            h = (hi - lo) / n
-            acc = f(lo) + f(hi)
-            for i in range(1, n):
-                acc += f(lo + i * h) * (4 if i % 2 else 2)
-            return acc * h / 3.0
-
-        fp = integral(0.0, threshold, p)
-        fn = integral(threshold, 1.0, lambda s: 1.0 - p(s))
-        cost = fp + fn_weight * fn
-        cand = (cost, bands, rows, p(threshold))
-        if best is None or cand[0] < best[0]:
-            best = cand
-    assert best is not None
-    return best[1], best[2], best[3]
 
 
 def incremental_components(

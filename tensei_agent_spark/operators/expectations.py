@@ -109,41 +109,3 @@ def check_contract(df: DataFrame, rules: list[dict]) -> DataFrame:
             (F.col("n_violations") == 0).cast("int").alias("passed"),
         )
     )
-
-
-class ContractViolation(Exception):
-    """Raised when a publish gate rejects a batch; carries the failing
-    rule report rows for alerting."""
-
-    def __init__(self, failures: list):
-        self.failures = failures
-        detail = "; ".join(
-            f"rule {r['rule_id']} {r['check']}({r['column']}): "
-            f"{r['n_violations']}/{r['n_rows']}"
-            for r in failures
-        )
-        super().__init__(f"data contract violated: {detail}")
-
-
-def gated_commit(
-    table,
-    df: DataFrame,
-    rules: list[dict],
-    overwrite: bool = False,
-) -> int:
-    """Contract-gated publish: run :func:`check_contract` on the batch
-    and commit to the ManifestTable ONLY if every rule passes —
-    otherwise raise :class:`ContractViolation` and leave the table
-    untouched (readers keep the previous consistent snapshot; nothing
-    to roll back because nothing was flipped). This is the
-    quality-gate-before-pointer-swap pattern of production lakehouse
-    ingestion; the contract scan costs one aggregate pass over the
-    batch, not the table.
-
-    Returns the new version number on success.
-    """
-    report = check_contract(df, rules).collect()
-    failures = [r.asDict() for r in report if r["passed"] == 0]
-    if failures:
-        raise ContractViolation(failures)
-    return table.commit(df, overwrite=overwrite)

@@ -1,57 +1,19 @@
-"""Incremental corpus processing: a parquet-backed ledger of processed
-ids, so a recurring pipeline run touches only documents it has never
-seen.
+"""Incremental near-duplicate detection: a persisted MinHash-LSH band
+index, so a recurring crawl bands only its new documents and joins them
+against everything seen before.
 
-This extends the reference's within-run unique-value dedup
-(`/root/reference/src/main/scala/com/wegtam/tensei/agent/writers/
-BaseWriterFilter.scala:82-143`, which drops rows whose unique column was
-already written *in this run*) across runs: the ledger IS the persisted
-UniqueValueBuffer.
-
-Scale notes: the ledger holds only the id column (narrow parquet,
-splittable); membership is a left_anti equi-join — hash shuffle on the
-id, broadcast when the increment is small, never a driver-side set.
-Commit appends a new parquet file per run (object-store friendly:
-append = add file, no rewrite); compaction is a periodic
-``repartition`` rewrite. For exactly-once semantics pair `commit` with
-the idempotent JDBC upsert sink — replays re-add the same ids and the
-anti-join keeps the pipeline idempotent.
+Scale notes: the index holds only (id, band, band_key) rows (narrow
+parquet, band-partitioned); matching is an equi-join on (band,
+band_key) — hash shuffle, broadcast when the increment is small, never
+a driver-side set. Commit appends a new parquet file per run (object-
+store friendly: append = add file, no rewrite).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
-
-
-class ParquetLedger:
-    """Cross-run processed-id ledger at a parquet path."""
-
-    def __init__(self, spark: SparkSession, path: str, id_col: str = "doc_id"):
-        self.spark = spark
-        self.path = path
-        self.id_col = id_col
-
-    def seen(self) -> DataFrame:
-        """All ids processed by any prior run (empty frame if none)."""
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame(
-                [], StructType([StructField(self.id_col, LongType())])
-            )
-        return self.spark.read.parquet(self.path).select(self.id_col).distinct()
-
-    def filter_new(self, df: DataFrame) -> DataFrame:
-        """Rows of ``df`` whose id has never been committed."""
-        return df.join(self.seen(), self.id_col, "left_anti")
-
-    def commit(self, df: DataFrame) -> None:
-        """Record ids as processed (append-only; idempotent with
-        ``filter_new`` because duplicates in the ledger are harmless —
-        ``seen`` reads distinct)."""
-        df.select(self.id_col).write.mode("append").parquet(self.path)
 
 
 class MinHashIndex:
@@ -192,9 +154,9 @@ class MinHashIndex:
     ) -> tuple[DataFrame, DataFrame]:
         """(pairs, new_bands): near-dup candidate pairs touching the new
         batch, and the batch's band rows (localCheckpoint-ed — commit
-        appends to the index path, which would otherwise invalidate the
-        plan that produced them, exactly the hazard documented on
-        :func:`process_increment`).
+        appends to the index path, and Spark refreshes any cache whose
+        plan reads a path it writes, so a merely-persisted frame would
+        recompute against the post-commit index).
 
         ``pairs`` = new×old (equi-join on (band, band_key) against the
         stored index) ∪ new×new (in-bucket combinations), distinct,
@@ -230,89 +192,3 @@ class MinHashIndex:
         self._check_params()
         new_bands.write.mode("append").partitionBy("band").parquet(self.path)
         self._write_params()
-
-
-def process_increment(
-    batch: DataFrame, ledger: ParquetLedger, process
-) -> DataFrame:
-    """Run ``process`` over only the never-seen rows of ``batch`` and
-    commit their ids. Returns the processed frame.
-
-    The result is eagerly ``localCheckpoint``-ed BEFORE the commit:
-    appending to the ledger path invalidates any cache whose plan reads
-    that path (Spark refreshes caches on write-to-read-path), so a
-    merely-persisted result would silently recompute against the
-    post-commit ledger and come back empty. Checkpointing cuts the
-    lineage, making the returned frame independent of the ledger state.
-    """
-    fresh = ledger.filter_new(batch)
-    out = process(fresh).localCheckpoint(eager=True)
-    ledger.commit(out)
-    return out
-
-
-def scd2_merge(
-    snapshot: DataFrame | None,
-    changes: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-) -> DataFrame:
-    """SCD-type-2 MERGE kernel: fold a change batch into a version
-    snapshot, recomputing validity intervals for ONLY the touched keys.
-
-    ``snapshot`` rows carry ``valid_from``/``valid_to``; ``changes``
-    rows carry the same payload columns plus ``valid_from`` (the change
-    event time) and no ``valid_to``. Every change becomes a version —
-    the version-per-event convention of the batch
-    ``user_event_history_scd2`` query (extending the reference's
-    keyed upsert, ``writers/DatabaseWriterActor.scala:269-348``, with
-    history instead of overwrite).
-
-    OUT-OF-ORDER SAFE by construction: intervals are never patched
-    incrementally (a late event would have to split an already-closed
-    interval — a maze of edge cases). Instead the invariant is
-    recomputed: for a touched key, all versions (old ∪ new) get
-    ``valid_to = lead(valid_from)`` under the key's window. Batches may
-    arrive in any order; the final snapshot is always bit-identical to
-    the one-shot batch window over the full history — asserted against
-    the registry oracle query in tests/test_streaming.py.
-
-    Scale shape: one window partitioned by key over ONLY the touched
-    keys' versions (never global), one semi/anti join pair on the key
-    (broadcast when the batch key set is small). Untouched keys pass
-    through untouched — pair with bucket-partitioned storage (see
-    ``streaming.pipeline.scd2_stream``) and they are not even read.
-    """
-    w = Window.partitionBy(*key_cols).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    new_rows = changes
-    if snapshot is not None:
-        touched = changes.select(*key_cols).distinct()
-        old_touched = snapshot.join(touched, key_cols, "left_semi").drop(
-            valid_to
-        )
-        untouched = snapshot.join(touched, key_cols, "left_anti")
-        merged = old_touched.unionByName(new_rows)
-    else:
-        untouched = None
-        merged = new_rows
-    # REPLAY IDEMPOTENCE: an at-least-once stream re-delivers whole
-    # batches; a replayed change is already IN the snapshot as a
-    # version, and without this dedup the union would carry it twice
-    # into the window (zero-length phantom intervals). (key, order)
-    # identifies a version, so re-merging any already-applied batch is
-    # a no-op — asserted in tests. Requires the change feed to be
-    # deterministic per (key, order): two DIFFERENT payloads at the
-    # same version key are a feed conflict and resolve arbitrarily.
-    merged = merged.dropDuplicates([*key_cols, *order_cols])
-    recomputed = merged.withColumn(
-        valid_to, F.lead(valid_from).over(w)
-    )
-    if untouched is not None:
-        recomputed = untouched.unionByName(
-            recomputed.select(*untouched.columns)
-        )
-    return recomputed

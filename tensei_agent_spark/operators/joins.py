@@ -222,39 +222,6 @@ def interval_overlap_join(
     )
 
 
-def bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int = 32,
-    path: str | None = None,
-) -> DataFrame:
-    """Persist as a bucketed table and return it re-read.
-
-    Two bucketed tables with the same (cols, n_buckets) join WITHOUT a
-    shuffle — the co-located join the reference can't express. This is
-    the 100 TB pattern for repeated joins on the same key (e.g. orders ⋈
-    lineitem on orderkey): pay one shuffle at write, join free forever.
-    """
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    if not path:
-        # A fresh metastore can still see a stale managed location on
-        # disk (prior session); clear it so saveAsTable can't collide.
-        import shutil
-        import urllib.parse
-
-        wh = urllib.parse.urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        shutil.rmtree(f"{wh}/{table_name.lower()}", ignore_errors=True)
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).sortBy(
-        *bucket_cols
-    )
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table_name)
-    return spark.table(table_name)
-
-
 def remap_foreign_keys(
     child: DataFrame,
     key_map: DataFrame,

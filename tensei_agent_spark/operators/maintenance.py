@@ -1,413 +1,16 @@
-"""Table maintenance for file-backed datasets.
+"""Privacy maintenance over a foreign-key graph of frames.
 
-The 100 TB operational reality the reference never faced (it wrote one
-file per target): incremental pipelines accrete many small parquet
-files, and scan throughput collapses when file count >> core count
-(driver-side listing, per-file open cost, tiny row groups). Compaction
-rewrites a directory into size-targeted files.
+Two operations a data owner runs on a multi-table dataset before it is
+re-published: erase an entity and everything that references it
+(:func:`cascade_delete`, which walks the same FK edges the writer's
+topological insert order is built from, plans/plan.py), and replace
+entity keys with tokens that keep every join intact
+(:func:`pseudonymize`).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import uuid
-
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-) -> int:
-    """Rewrite a parquet directory into ~``target_file_mb`` files.
-
-    Sizes the output file count from the CURRENT on-disk bytes (the
-    compressed truth — row counts mislead under compression), rewrites
-    to a sibling temp dir, then swaps via two renames. Readers never
-    see a HALF-WRITTEN directory, but there is a sub-millisecond
-    not-found window between the renames (POSIX has no atomic directory
-    exchange); a crash in the window is rolled back so the path stays
-    readable. Returns the new file count.
-
-    On object stores rename is not atomic — there, compact into a new
-    prefix and flip a manifest/catalog pointer instead; the sizing and
-    rewrite logic is identical.
-    """
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if f.endswith(".parquet")
-        )
-    n_files = max(1, round(total / (target_file_mb * 1024 * 1024)))
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    spark.read.parquet(path).repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except BaseException:
-        os.rename(old, path)  # restore — leave the directory readable
-        raise
-    shutil.rmtree(old)
-    return n_files
-
-
-def zorder_key(df, cols: list[str], bits: int = 16):
-    """Column expression: Morton (Z-order) interleave of ``cols``.
-
-    Each column is min-max normalized to a ``bits``-bit integer using
-    per-column bounds computed in one aggregate pass and broadcast back,
-    then the bit planes are interleaved JVM-side (pure shift/or
-    expressions — no UDF). Rows close in Z-value are close in EVERY
-    interleaved dimension, so range-partitioning by the key clusters
-    files on all of them at once.
-    """
-    bounds = df.agg(
-        *[F.min(c).cast("double").alias(f"_min_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"_max_{c}") for c in cols],
-    )
-    out = df.join(F.broadcast(bounds))
-    scaled = []
-    top = (1 << bits) - 1
-    for c in cols:
-        span = F.col(f"_max_{c}") - F.col(f"_min_{c}")
-        frac = F.when(span > 0, (F.col(c).cast("double") - F.col(f"_min_{c}")) / span).otherwise(
-            F.lit(0.0)
-        )
-        scaled.append(F.least(F.floor(frac * top).cast("long"), F.lit(top)))
-    z = F.lit(0).cast("long")
-    n = len(cols)
-    # Interleaved bit positions must stay < 64: Java shiftleft wraps the
-    # shift amount mod 64, which would silently fold high bit-planes
-    # onto low positions and cluster on a garbage key. Clamp the per-
-    # column resolution to what one long can interleave.
-    bits = min(bits, 64 // n)
-    for b in range(bits):
-        for i, s in enumerate(scaled):
-            # bit b of column i lands at interleaved position b*n + i
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(s, b).bitwiseAND(F.lit(1)), b * n + i)
-            )
-    return out, z
-
-
-def zorder_layout(
-    spark: SparkSession,
-    df,
-    cols: list[str],
-    path: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Rewrite ``df`` as ``n_files`` parquet files clustered on the
-    Z-order curve over ``cols``.
-
-    Range-partitioning on the Z-key gives every output file a tight
-    min/max envelope on EACH clustered column, so parquet row-group
-    statistics (and any format-level data skipping above them) prune
-    multi-predicate scans — the layout-level complement of Catalyst's
-    filter pushdown. A plain sort by (a, b) only clusters ``a``; the
-    Morton curve splits the precision budget across all columns.
-    """
-    out, z = zorder_key(df, cols, bits)
-    (
-        out.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z", *[c for c in out.columns if c.startswith("_min_") or c.startswith("_max_")])
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def upsert_partitioned_parquet(
-    spark: SparkSession,
-    updates,
-    path: str,
-    key_cols: list[str],
-    partition_col: str,
-) -> int:
-    """Keyed MERGE into a partitioned parquet table, rewriting ONLY the
-    partitions the update batch touches (what Delta/Iceberg MERGE does
-    under the hood, expressed on plain parquet).
-
-    1. The batch's distinct partition values are collected (bounded by
-       the batch, not the table — driver-scale).
-    2. Existing rows are read from ONLY those partitions (partition
-       pruning keeps the scan proportional to the touched slice, not
-       the table).
-    3. surviving old rows = existing ANTI-JOIN update keys; union the
-       updates; write back under ``partitionOverwriteMode=dynamic`` so
-       Spark replaces exactly the partitions present in the output —
-       untouched partitions' files are never rewritten (asserted in
-       tests via on-disk file identity).
-
-    Returns the number of partitions rewritten. The swap is per-
-    partition directory rename — same object-store caveat as
-    ``compact_parquet``.
-    """
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    if not touched:
-        return 0
-    # Existence probe through Spark's FS layer (NOT os.path — the table
-    # may live on HDFS/S3, where a local probe is always false and
-    # would silently drop every pre-existing row of touched partitions).
-    try:
-        existing = spark.read.parquet(path)
-        has_table = partition_col in existing.columns
-    except AnalysisException:
-        has_table = False
-    if has_table:
-        # isin() never matches NULL; a NULL partition value in the batch
-        # must read back the __HIVE_DEFAULT_PARTITION__ rows explicitly.
-        pred = F.col(partition_col).isin([t for t in touched if t is not None])
-        if any(t is None for t in touched):
-            pred = pred | F.col(partition_col).isNull()
-        keep = (
-            existing.filter(pred)
-            .select(*updates.columns)  # align column order for union
-            .join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
-        )
-        merged = keep.unionByName(updates)
-    else:
-        merged = updates
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    return len(touched)
-
-
-class ManifestTable:
-    """Manifest-pointer table: atomic commits on storage WITHOUT atomic
-    rename (S3-class object stores), the mechanism ``compact_parquet``'s
-    docstring defers to.
-
-    Layout under ``root``::
-
-        data/<uuid>.parquet/   immutable file sets, one per commit
-        _manifests/v<N>.json   snapshot N -> list of data prefixes
-        _latest                one-line pointer file: current version
-
-    Writers add NEW data prefixes and publish a new manifest, then flip
-    ``_latest`` (a one-object PUT — the only thing that must be
-    last-writer-wins; readers that raced still see a complete older
-    snapshot). Nothing is ever rewritten in place, so a reader holding
-    any version keeps a consistent file list; old versions remain
-    readable until vacuumed. This is the Iceberg/Delta commit idea
-    reduced to its load-bearing core: data immutability + one atomic
-    pointer swap.
-
-    ``overwrite=True`` publishes a manifest containing ONLY the new
-    prefix (logical truncate-and-load); ``overwrite=False`` appends the
-    new prefix to the current snapshot's list.
-    """
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root.rstrip("/")
-
-    def _latest_path(self) -> str:
-        return os.path.join(self.root, "_latest")
-
-    def current_version(self) -> int:
-        """-1 before the first commit."""
-        try:
-            with open(self._latest_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
-
-    def _manifest(self, version: int) -> list[str]:
-        with open(os.path.join(self.root, "_manifests", f"v{version}.json")) as f:
-            return json.load(f)["prefixes"]
-
-    def commit(self, df, overwrite: bool = False) -> int:
-        """Write ``df`` as a new immutable prefix and publish the next
-        snapshot. Returns the new version number."""
-        version = self.current_version()
-        prefix = os.path.join(self.root, "data", f"{uuid.uuid4().hex}.parquet")
-        df.write.mode("errorifexists").parquet(prefix)
-        prefixes = (
-            [] if (overwrite or version < 0) else list(self._manifest(version))
-        )
-        prefixes.append(prefix)
-        new_version = version + 1
-        mdir = os.path.join(self.root, "_manifests")
-        os.makedirs(mdir, exist_ok=True)
-        mpath = os.path.join(mdir, f"v{new_version}.json")
-        try:
-            # 'x': concurrent committers racing to the same version
-            # conflict here instead of clobbering each other
-            with open(mpath, "x") as f:
-                json.dump({"prefixes": prefixes}, f)
-        except FileExistsError:
-            raise FileExistsError(
-                f"version {new_version} already has a manifest at {mpath}: "
-                "either a concurrent committer won the race (retry this "
-                "commit), or a previous committer crashed before flipping "
-                "_latest (run repair() to clear orphan manifests)"
-            ) from None
-        # the pointer flip — on a real object store this is one PUT; on
-        # POSIX a write-then-rename keeps readers from seeing a torn file
-        tmp = self._latest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(new_version))
-        os.replace(tmp, self._latest_path())
-        return new_version
-
-    def read(self, version: int | None = None) -> "DataFrame":
-        """The snapshot as one DataFrame (current if version is None) —
-        time travel = pass an older version."""
-        v = self.current_version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"no commits at {self.root}")
-        return self.spark.read.parquet(*self._manifest(v))
-
-    def repair(self) -> int:
-        """Recover from a committer that crashed between creating its
-        manifest and flipping ``_latest``: such an orphan manifest
-        (version > current) wedges every later commit on the O_EXCL
-        create. Deletes orphan manifests (their data was never
-        published, so it becomes vacuum-able). Returns the number
-        removed."""
-        current = self.current_version()
-        removed = 0
-        mdir = os.path.join(self.root, "_manifests")
-        for name in os.listdir(mdir) if os.path.isdir(mdir) else []:
-            v = int(name[1:-5])  # v<N>.json
-            if v > current:
-                os.remove(os.path.join(mdir, name))
-                removed += 1
-        return removed
-
-    def vacuum(self, keep_latest: int = 1, min_age_seconds: float = 86400) -> int:
-        """Drop manifests older than the newest ``keep_latest`` (≥ 1)
-        versions and delete data prefixes no retained snapshot
-        references. Returns the number of prefixes deleted.
-
-        ``min_age_seconds``: prefixes younger than this are kept even
-        if unreferenced — an in-flight committer writes its data BEFORE
-        its manifest, so a zero-retention vacuum racing a commit would
-        delete the new snapshot's data (the same reason Iceberg/Delta
-        vacuums have a retention threshold). Pass 0 only when no
-        concurrent committers can exist."""
-        import time
-
-        if keep_latest < 1:
-            raise ValueError("keep_latest must be >= 1 (the current "
-                             "snapshot cannot be vacuumed away)")
-        current = self.current_version()
-        live: set[str] = set()
-        for v in range(max(0, current - keep_latest + 1), current + 1):
-            try:
-                live.update(self._manifest(v))
-            except FileNotFoundError:
-                continue  # already vacuumed in an earlier, tighter pass
-        deleted = 0
-        now = time.time()
-        data_root = os.path.join(self.root, "data")
-        for name in os.listdir(data_root) if os.path.isdir(data_root) else []:
-            p = os.path.join(data_root, name)
-            if p in live:
-                continue
-            if now - os.path.getmtime(p) < min_age_seconds:
-                continue  # possibly an in-flight commit's data
-            shutil.rmtree(p)
-            deleted += 1
-        for v in range(0, max(0, current - keep_latest + 1)):
-            m = os.path.join(self.root, "_manifests", f"v{v}.json")
-            if os.path.exists(m):
-                os.remove(m)
-        return deleted
-
-
-def write_bucketed(
-    df,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a DataFrame as a BUCKETED (and optionally sorted)
-    managed parquet table — the layout that makes repeated key-joins
-    and key-aggregations exchange-free.
-
-    Both sides of a join bucketed by the join key into the same bucket
-    count are co-partitioned ON DISK: Spark's scan reports the hash
-    partitioning, Catalyst drops the Exchange on each side, and at
-    100 TB the O(data) shuffle of every subsequent join/groupBy on
-    that key is paid ONCE at write time instead of per query (the
-    bucket-pruned streaming SCD2 sink and the Z-order layout are the
-    same trade in other dimensions). With ``sort_cols`` the sort-merge
-    join's per-task sort disappears too. Proof of the exchange-free
-    plan: tests/test_scale_joins.py::test_bucketed_join_has_no_exchange.
-    """
-    w = df.write.mode(mode).format("parquet").bucketBy(
-        int(n_buckets), *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
-def schema_diff(old: "DataFrame", new: "DataFrame") -> dict[str, list]:
-    """Schema drift report between two frames (snapshot vs today's
-    load): added / removed / retyped columns, plus nullability
-    relaxations — the ingestion-contract check an ETL run performs
-    before writing (the reference's schema-extraction subsystem solves
-    the inverse problem; drift detection closes the loop on re-runs).
-
-    Pure metadata — no jobs, no data read. Field order is ignored
-    (parquet column order is not a contract); names compare
-    case-sensitively like Spark's resolver in case-sensitive mode.
-
-    Returns {"added": [(name, type)], "removed": [(name, type)],
-    "retyped": [(name, old_type, new_type)],
-    "nullability_relaxed": [name]} with simpleString'd types.
-    """
-    o = {f.name: f for f in old.schema.fields}
-    n = {f.name: f for f in new.schema.fields}
-    added = sorted(
-        (name, n[name].dataType.simpleString()) for name in n.keys() - o.keys()
-    )
-    removed = sorted(
-        (name, o[name].dataType.simpleString()) for name in o.keys() - n.keys()
-    )
-    retyped = sorted(
-        (
-            name,
-            o[name].dataType.simpleString(),
-            n[name].dataType.simpleString(),
-        )
-        for name in o.keys() & n.keys()
-        if o[name].dataType != n[name].dataType
-    )
-    relaxed = sorted(
-        name
-        for name in o.keys() & n.keys()
-        if not o[name].nullable and n[name].nullable
-    )
-    return {
-        "added": added,
-        "removed": removed,
-        "retyped": retyped,
-        "nullability_relaxed": relaxed,
-    }
 
 
 def cascade_delete(
@@ -430,9 +33,7 @@ def cascade_delete(
     through untouched. Diamond-shaped graphs are fine: a child hit
     via two parents anti-joins each doomed set once.
 
-    Returns {table: pruned DataFrame}. Pair with
-    :func:`upsert_partitioned_parquet` to rewrite only touched
-    partitions on disk.
+    Returns {table: pruned DataFrame}.
     """
     children: dict[str, list[tuple[str, str, str]]] = {}
     for child, fk_col, parent, pk_col in fk_edges:
@@ -534,92 +135,3 @@ def pseudonymize(
             cur = cur.drop(col)
         out[name] = cur
     return out
-
-
-def table_digest(df: "DataFrame", cols: list[str] | None = None) -> tuple[int, int]:
-    """Order-insensitive content digest of a frame: (row_count,
-    xor of xxhash64 over the selected columns) — the anti-entropy
-    check for replica/snapshot equality without sorting or shipping
-    rows (the same count+xor fixpoint signature the star-CC loop
-    uses). XOR is commutative/associative → partition- and
-    order-independent; a multiset difference that preserves both count
-    and xor needs a 2^-64 coincidence. NULL-safe: xxhash64 hashes
-    nulls deterministically. One aggregate, no shuffle beyond the
-    final 1-row reduce."""
-    use = cols or df.columns
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(
-            "bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in use) + "))"
-        ).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"] or 0)
-
-
-def compact_small_files(
-    spark: "SparkSession",
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> dict[str, int]:
-    """Small-file compaction for a parquet directory: rewrite the
-    table into ceil(bytes/target) files — the maintenance pass that
-    keeps scan task counts sane after many incremental appends (a
-    100 TB table appended in 10 MB dribbles is a scheduler DoS).
-
-    Safety: the new layout is written to a sibling temp dir and
-    content-verified with :func:`table_digest` BEFORE any rename; a
-    crash up to that point leaves the original untouched. The swap
-    itself is two renames (portable filesystems have no atomic
-    directory swap): a failure between them is auto-rolled-back in
-    this process, and a hard kill inside that window leaves the data
-    intact under ``<path>._compact_old`` for manual recovery — the
-    backup is only deleted after the new path is re-verified readable.
-    Returns {files_before, files_after, bytes}."""
-    import glob as _glob
-    import math
-    import os
-    import shutil
-
-    files = [
-        f
-        for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-        if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / int(target_bytes)))
-    df = spark.read.parquet(path)
-    before = table_digest(df)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-    after = table_digest(spark.read.parquet(tmp))
-    if after != before:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compaction digest mismatch {before} != {after}; original kept"
-        )
-    bak = path.rstrip("/") + "._compact_old"
-    shutil.rmtree(bak, ignore_errors=True)
-    os.rename(path, bak)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.rename(bak, path)  # roll back: original restored
-        raise
-    # Re-verify the swapped-in table before dropping the backup.
-    if table_digest(spark.read.parquet(path)) != before:
-        shutil.rmtree(path, ignore_errors=True)
-        os.rename(bak, path)
-        raise RuntimeError("post-swap verification failed; original restored")
-    shutil.rmtree(bak)
-    # Same recursive walk as files_before — a top-level glob would
-    # undercount partitioned outputs and skew the stats.
-    out_files = [
-        f
-        for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-        if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-    ]
-    return {
-        "files_before": len(files),
-        "files_after": len(out_files),
-        "bytes": total,
-    }

@@ -10,12 +10,9 @@ Beyond-reference surface for training-data pipelines. The contract:
   crossing, partitioning is untouched (no shuffle), and each batch
   bounds memory regardless of corpus size.
 
-External codecs (PIL/ffmpeg/soundfile) are NOT installed in this
-environment. Formats decodable with the stdlib + numpy alone are
-decoded FOR REAL — :func:`stdlib_decoder` handles PCM WAV audio and
-uncompressed PPM/BMP images end-to-end through the distributed path
-(pytest-asserted against constructed assets). Compressed formats
-(jpeg/png/mp4) remain gated: ``decode_stub`` raises
+No codec (PIL/ffmpeg/soundfile) is a dependency: the decode kernel is
+pluggable (``extract_features(decoder=...)``, ``transform_assets(
+kernel=...)``). Without one, ``decode_stub`` raises
 ``NotImplementedError`` unless ``deterministic_fake=True``, whose
 md5-seeded pseudo-features keep the plumbing — schema, batch shape,
 partition behavior — testable. Swapping in a real codec changes ONE
@@ -254,181 +251,3 @@ def transform_assets(
     return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(
         run, schema, barrier=False
     )
-
-
-# --- Real decoders within stdlib reach ------------------------------------
-#
-# "No codecs installed" does not mean NO real decoding: WAV audio and
-# uncompressed PPM/BMP images are decodable with the stdlib + numpy
-# alone. These kernels make the decoder= path genuinely real for those
-# formats — compressed formats (jpeg/png/mp4) still raise the
-# capability error until a real codec is plugged in.
-
-
-def decode_wav(payload: bytes) -> tuple[int, int, float, list[float]]:
-    """PCM WAV via the stdlib ``wave`` module: (0, 0, duration_s,
-    [rms, zero_crossing_rate, peak, dc_offset]) with amplitudes
-    normalized to [-1, 1]. 8/16-bit PCM only (the wave module's own
-    coverage)."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(payload)) as w:
-        nframes = w.getnframes()
-        rate = w.getframerate()
-        width = w.getsampwidth()
-        raw = w.readframes(nframes)
-    if width == 2:
-        x = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    elif width == 1:  # unsigned 8-bit
-        x = (np.frombuffer(raw, dtype="u1").astype(np.float64) - 128.0) / 128.0
-    else:
-        raise NotImplementedError(f"WAV sample width {width} unsupported")
-    if x.size == 0:
-        return 0, 0, 0.0, [0.0, 0.0, 0.0, 0.0]
-    rms = float(np.sqrt(np.mean(x * x)))
-    zcr = float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1])))
-    return (
-        0,
-        0,
-        nframes / float(rate),
-        [rms, zcr, float(np.max(np.abs(x))), float(np.mean(x))],
-    )
-
-
-def decode_ppm(payload: bytes) -> tuple[int, int, float, list[float]]:
-    """Binary PPM (P6): (width, height, 0.0, per-channel mean+std in
-    [0,1]). Pure byte parsing — header tokens may be separated by any
-    whitespace and ``#`` comments."""
-    import numpy as np
-
-    if not payload.startswith(b"P6"):
-        raise NotImplementedError("not a binary PPM (P6) payload")
-    # tokenize header: magic, width, height, maxval; comments run to EOL
-    tokens, i = [], 2
-    while len(tokens) < 3:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if payload[i : i + 1] == b"#":
-            while i < len(payload) and payload[i] not in (10, 13):
-                i += 1
-            continue
-        start = i
-        while i < len(payload) and not payload[i : i + 1].isspace():
-            i += 1
-        tokens.append(int(payload[start:i]))
-    i += 1  # single whitespace after maxval, then raw data
-    w, h, maxval = tokens
-    if maxval > 255:
-        # 16-bit-per-sample P6 stores 2 bytes/sample; parsing it as u1
-        # would silently return garbage channel stats.
-        raise NotImplementedError(
-            f"PPM maxval {maxval} > 255 (16-bit samples) unsupported"
-        )
-    px = np.frombuffer(payload, dtype="u1", count=w * h * 3, offset=i)
-    rgb = px.reshape(h, w, 3).astype(np.float64) / float(maxval)
-    means = rgb.mean(axis=(0, 1))
-    stds = rgb.std(axis=(0, 1))
-    return w, h, 0.0, [*map(float, means), *map(float, stds)]
-
-
-def decode_bmp(payload: bytes) -> tuple[int, int, float, list[float]]:
-    """Uncompressed 24-bit BMP (BITMAPINFOHEADER): (width, height, 0.0,
-    per-channel BGR→RGB means in [0,1]). Rows are 4-byte padded;
-    negative biHeight means top-down (sign only affects row order,
-    which channel means ignore)."""
-    import struct
-
-    import numpy as np
-
-    if not payload.startswith(b"BM"):
-        raise NotImplementedError("not a BMP payload")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    w, h = struct.unpack_from("<ii", payload, 18)
-    planes, bpp = struct.unpack_from("<HH", payload, 26)
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"only uncompressed 24-bit BMP supported (bpp={bpp}, "
-            f"compression={compression})"
-        )
-    height = abs(h)
-    row_bytes = (w * 3 + 3) // 4 * 4
-    rows = np.frombuffer(
-        payload, dtype="u1", count=row_bytes * height, offset=data_off
-    ).reshape(height, row_bytes)[:, : w * 3]
-    bgr = rows.reshape(height, w, 3).astype(np.float64) / 255.0
-    means = bgr.mean(axis=(0, 1))[::-1]  # BGR storage → RGB report
-    return w, height, 0.0, [float(m) for m in means]
-
-
-def stdlib_decoder(payload: bytes, modality: str):
-    """Magic-byte dispatching decode kernel for the formats decodable
-    WITHOUT external codecs — plug straight into
-    ``extract_features(decoder=stdlib_decoder)``. Anything else raises
-    the capability error (jpeg/png/mp4 need PIL/ffmpeg)."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload)
-    if payload[:2] == b"P6":
-        return decode_ppm(payload)
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    raise NotImplementedError(
-        f"no stdlib decoder for this payload (modality={modality!r}, "
-        f"magic={payload[:4]!r}); install/wrap a real codec via decoder="
-    )
-
-
-def _parse_ppm(payload: bytes) -> tuple[int, int, int, int]:
-    """Header parse shared by decode/resize: returns (w, h, maxval,
-    data_offset). Same whitespace/comment rules as :func:`decode_ppm`."""
-    if not payload.startswith(b"P6"):
-        raise NotImplementedError("not a binary PPM (P6) payload")
-    tokens, i = [], 2
-    while len(tokens) < 3:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if payload[i : i + 1] == b"#":
-            while i < len(payload) and payload[i] not in (10, 13):
-                i += 1
-            continue
-        start = i
-        while i < len(payload) and not payload[i : i + 1].isspace():
-            i += 1
-        tokens.append(int(payload[start:i]))
-    i += 1
-    w, h, maxval = tokens
-    return w, h, maxval, i
-
-
-def resize_ppm_kernel(target_w: int, target_h: int):
-    """REAL image-resize kernel for binary PPM (P6): nearest-neighbor
-    resample in numpy, re-encoded as P6 — a genuinely executable
-    decode → transform → encode path with zero external codecs, the
-    proof shape for :func:`transform_assets` (swap in a PIL/ffmpeg
-    wrapper for jpeg/mp4; the Spark-side plumbing is identical).
-
-    Nearest-neighbor site selection is the standard floor((i+0.5)·
-    src/dst) center mapping — deterministic, no resampling filter
-    floats. 8-bit samples only (same guard as decode_ppm)."""
-    import numpy as np
-
-    tw, th = int(target_w), int(target_h)
-    if tw < 1 or th < 1:
-        raise ValueError("target dims must be >= 1")
-
-    def kernel(payload: bytes) -> bytes:
-        w, h, maxval, off = _parse_ppm(payload)
-        if maxval > 255:
-            raise NotImplementedError("16-bit PPM unsupported")
-        px = np.frombuffer(payload, dtype="u1", count=w * h * 3, offset=off)
-        img = px.reshape(h, w, 3)
-        rows = np.minimum((np.arange(th) + 0.5) * h / th, h - 1).astype(int)
-        cols = np.minimum((np.arange(tw) + 0.5) * w / tw, w - 1).astype(int)
-        out = img[rows][:, cols]
-        header = f"P6\n{tw} {th}\n{maxval}\n".encode()
-        return header + out.tobytes()
-
-    return kernel

@@ -106,7 +106,7 @@ def random_project(
     # composing it Column-by-Column costs one py4j round trip per
     # node (~5s of pure driver chatter, measured); two selectExpr
     # calls hand the JVM parser one string instead.
-    # Ragged-input guard (ADVICE r9): under ANSI (Spark 4's default)
+    # Ragged-input guard: under ANSI (Spark 4's default)
     # element_at past the array end THROWS, so a vector shorter than
     # dim must be zero-padded first — absent components contribute 0,
     # the semantics of the earlier posexplode formulation. The pad is
@@ -249,27 +249,3 @@ def pca_project(
             dot = term if dot is None else dot + term
         outs.append(dot.alias(f"pc{c}"))
     return emb.select(F.col(id_col), *outs)
-
-
-def pca_whiten(
-    emb: DataFrame,
-    n_components: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    eps: float = 1e-12,
-) -> DataFrame:
-    """PCA whitening: project onto the principal axes and scale each
-    component by 1/sqrt(variance), yielding decorrelated unit-variance
-    features — the standard preprocessing before cosine/IP indexing
-    when dimensions are badly scaled. Same serving shape as
-    :func:`pca_project`: loadings·scales fold into ONE literal matrix,
-    so whitening is a pure map."""
-    loadings, variances, n = pca_loadings(
-        emb, n_components, vec_col, id_col
-    )
-    scaled = [
-        [w / (v + eps) ** 0.5 for w in row]
-        for row, v in zip(loadings, variances)
-    ]
-    out = pca_project(emb, scaled, vec_col, id_col)
-    return out.toDF(id_col, *[f"w{c}" for c in range(len(scaled))])

@@ -66,15 +66,6 @@ def hash_split(
     return df.withColumn(split_col, expr)
 
 
-def deterministic_sample(
-    df: DataFrame, key: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Content-keyed sample: keeps the same rows on every run/engine
-    (unlike ``df.sample``, whose outcome depends on partitioning)."""
-    edge = int(fraction * BUCKETS)
-    return df.filter(hash_bucket(F.col(key), salt=salt) < edge)
-
-
 def shuffle_shards(
     df: DataFrame,
     key: str,
@@ -187,10 +178,9 @@ def bottomk_sample(
     """Per-group bottom-k uniform sample: keep the k rows with the
     smallest md5 priority of the row id (+ optional salt for a fresh
     draw). The bottom-k-by-hash set is a MERGEABLE uniform sample —
-    bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ bottom-k(B)) — which
-    makes it the batch twin of the streaming reservoir
-    (streaming/pipeline.bottomk_sample_stream): the stream's state
-    after any micro-batch split is bit-identical to this batch result.
+    bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ bottom-k(B)) — so a
+    sample of any split of the input, merged, is bit-identical to this
+    one-pass result.
 
     One group-partitioned window (never global); returns the input
     columns plus ``prio``. Deterministic and replayable: same ids →

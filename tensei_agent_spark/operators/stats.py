@@ -29,8 +29,9 @@ def numeric_profile(
 
     Output: one row per column (col_name, n, n_null, min_v, max_v, mean_v).
     One scan for every column; ``sample_fraction`` mirrors the
-    reference's percent parameter (for an engine-portable sample use
-    ``sampling.deterministic_sample`` upstream instead).
+    reference's percent parameter (for an engine-portable sample,
+    filter on ``sampling.hash_bucket`` of a content key upstream
+    instead).
     """
     if sample_fraction is not None:
         df = df.sample(fraction=sample_fraction, seed=42)

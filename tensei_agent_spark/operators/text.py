@@ -275,14 +275,6 @@ def sentiment_totals(text: Column) -> Column:
     )
 
 
-def sentiment_score(text: Column) -> Column:
-    """Summed token valence / token count ∈ [-4, 4] — the per-doc
-    float ratio (display/filtering); aggregate pipelines should roll up
-    the exact integers from ``sentiment_totals`` instead."""
-    t = sentiment_totals(text)
-    return t["v_total"].cast("double") / t["n_toks"]
-
-
 def collocations(
     docs: DataFrame,
     text_col: str = "text",

@@ -248,8 +248,8 @@ def topk_per_group(spark: SparkSession, sf: str) -> DataFrame:
     bench=True,
 )
 def events_hourly(spark: SparkSession, sf: str) -> DataFrame:
-    """Tumbling-window rollup (batch twin of the streaming pipeline in
-    ``streaming/``): epoch-aligned 1h windows ≡ date_trunc('hour')."""
+    """Tumbling-window rollup: epoch-aligned 1h windows ≡
+    date_trunc('hour')."""
     ev = load(spark, sf, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -913,9 +913,9 @@ def events_props_json(spark: SparkSession, sf: str) -> DataFrame:
     bench=True,
 )
 def sessionize_batch(spark: SparkSession, sf: str) -> DataFrame:
-    """Gap-based sessionization (30 min), batch form — the SQL-checkable
-    twin of streaming.sessionize: lag + cumulative flag sum per user.
-    Hash-partitioned window (per-user), no global sort."""
+    """Gap-based sessionization (30 min), batch form: lag + cumulative
+    flag sum per user. Hash-partitioned window (per-user), no global
+    sort."""
     ev = load(spark, sf, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_ms = 30 * 60 * 1000
@@ -965,8 +965,7 @@ def sessionize_batch(spark: SparkSession, sf: str) -> DataFrame:
 def session_window_native(spark: SparkSession, sf: str) -> DataFrame:
     """Gap-based sessionization via Spark's NATIVE session_window
     aggregate — one hash aggregate with in-operator session merging
-    (MergingSessionsExec), no lag/cumsum window passes; the same
-    operator powers streaming session windows with state eviction.
+    (MergingSessionsExec), no lag/cumsum window passes.
     Boundary semantics differ from the islands twin: an event at
     EXACTLY gap distance starts a new session (session extension needs
     next_start < current_end, strictly), and session_end = last_ts +
@@ -1331,8 +1330,8 @@ def dedup_jaccard_fast(spark: SparkSession, sf: str) -> DataFrame:
     """Production n-gram Jaccard: identical plan to dedup_ngram_jaccard
     plus the OPH bit-signature pre-screen (operators/dedup.py), which
     prunes 1.97 M candidates to 74 k with 8 longs a side before any
-    token array moves (the r9 adaptive est ≥ t − 3.3/√both cutoff;
-    the r8 fixed t−0.30 cutoff passed 320 k) — measured 8.9 s → 5.4 s
+    token array moves (the adaptive est ≥ t − 3.3/√both cutoff; a
+    fixed t−0.30 cutoff passed 320 k) — measured 8.9 s → 5.4 s
     warm at sf0.1 on the low-entropy corpus that defeats prefix
     filtering. The screen is probabilistic (≤2e-5 drop risk at the
     exact threshold for t=0.6, quantified inline), so
@@ -2012,8 +2011,8 @@ def ann_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     |dot| of the flipped planes) — the probe lever multiplies only the
     broadcast query fan-out, never the corpus index, and lifted
     recall@10 from 0.14 (no probes) to 0.72/0.70 (sf0.01/sf0.1; the
-    r11 cost order beat the first-cut fixed bit-subset order's 0.66 at
-    sf0.01 on the same budget). Floors pinned in
+    cost order beat a fixed bit-subset order's 0.66 at sf0.01 on the
+    same budget). Floors pinned in
     tests/test_ann_recall.py + tools/verify_sweep.py."""
     emb = load(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
@@ -2053,7 +2052,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     vectors, and the top refine·k survivors re-rank by TRUE cosine, so
     reported cosines are exact and only membership is approximate.
 
-    refine=20 (r11, measured): with refine=5 the 50-candidate ADC
+    refine=20 (measured): with refine=5 the 50-candidate ADC
     shortlist was the binding recall loss as cells grow with corpus
     size (recall 0.84/0.72 at sf0.01/sf0.1); refine=20 lifts it to
     0.88/0.92 at IDENTICAL probe cost — the refine stage is
@@ -2918,7 +2917,7 @@ def bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     ln(1 + (N-df+0.5)/(df+0.5)) idf) for the query {vector, hash,
     stream}: top-20 documents.
 
-    Scale shape (r11): ONE pass over the token stream — a single
+    Scale shape: ONE pass over the token stream — a single
     map-side-partial groupBy(doc_id) carries the doc length and each
     query term's tf as conditional counts, so the (doc, term) tf
     aggregate, its df roll-up, and their joins all collapse into one
@@ -2927,7 +2926,7 @@ def bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     ORDER per-term columns (not a float SUM across an unordered group)
     so the score is deterministic and engine-stable; the final top-20
     is a TakeOrdered on (rounded score, doc_id), not a global sort."""
-    # Deliberately NOT spread_for_cpu_map (r9 A/B, same verdict as
+    # Deliberately NOT spread_for_cpu_map (A/B, same verdict as
     # cms_word_estimates): the tokenize is ONE regex split per row —
     # I/O-shaped, not a CPU grind — and hybrid_search_rrf measured
     # 1.37-1.47 s unspread vs 1.86-2.31 s spread (warm best-of-3, ×2
@@ -2941,7 +2940,7 @@ def bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("w"),
     ).filter(F.col("w") != "")
-    # ONE pass over the token stream (r11; was two — dl + tf): a single
+    # ONE pass over the token stream: a single
     # groupBy(doc_id) computes the doc length AND the per-query-term
     # tf as conditional-count columns, so the explode runs once, one
     # exchange replaces two, and the (doc, term)-keyed tf/df joins
@@ -3271,8 +3270,8 @@ def t_redact_pii(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def view_purchase_attribution(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch twin of ``streaming.attribute_purchases``: views credited
-    to a same-user purchase within the preceding hour. Equi-join on
+    """Purchase attribution: views credited to a same-user purchase
+    within the preceding hour. Equi-join on
     user_id (the range predicate filters post-match; per-user fan-out
     is bounded by activity, AQE splits skewed power users), then a
     purchase-keyed count."""
@@ -4073,7 +4072,7 @@ def daily_revenue_ma7(spark: SparkSession, sf: str) -> DataFrame:
     )
     # Bounded frame (O(distinct days) at any corpus size) → the
     # single-partition bounded rank, not the range-partitioned helper:
-    # same row_number, ~4 fewer jobs, no persist needed (r11).
+    # same row_number, ~4 fewer jobs, no persist needed.
     r = with_bounded_rank(daily, ["day"], out="_i")
     contrib = r.select(
         F.explode(F.sequence(F.col("_i"), F.col("_i") + 6)).alias("_i"), "_rev"
@@ -4572,11 +4571,9 @@ def sample_training_mix(spark: SparkSession, sf: str) -> DataFrame:
 )
 def abandoned_views_hourly(spark: SparkSession, sf: str) -> DataFrame:
     """Abandonment rate per hour: views with NO same-user purchase in
-    the following hour (the left-outer twin of the attribution join —
-    streaming.attribute_purchases(how='left_outer') runs the same
-    condition incrementally, emitting unmatched views once the
-    watermark passes their window). Left join on user_id with the
-    interval as a post-filter, then an hourly rollup."""
+    the following hour (the left-outer twin of the attribution join).
+    Left join on user_id with the interval as a post-filter, then an
+    hourly rollup."""
     ev = load(spark, sf, "events")
     v = ev.filter(F.col("event_type") == "view").select(
         F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts")
@@ -5561,7 +5558,7 @@ def snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def event_near_dup_throttle(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch twin of watermarked stream dedup: flag events that repeat
+    """Near-duplicate event throttle: flag events that repeat
     the same (user, type) within 300s of the previous occurrence —
     accidental double-fires / retry storms. One user-keyed window (the
     partition key is high-cardinality so the sort is per-user-local,
@@ -5612,7 +5609,7 @@ def yearly_revenue_growth(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(F.col("o_totalprice").cast("decimal(14,2)")).alias("_rev"),
         F.count(F.lit(1)).alias("n_orders"),
     )
-    # Bounded frame (O(years)) → single-partition bounded rank (r11).
+    # Bounded frame (O(years)) → single-partition bounded rank.
     r = with_bounded_rank(y, ["yr"], out="_i")
     prev = r.select((F.col("_i") + 1).alias("_i"), F.col("_rev").alias("_prev"))
     return (
@@ -6091,7 +6088,7 @@ def daily_event_anomaly(spark: SparkSession, sf: str) -> DataFrame:
     # index (distributed), then each day row CONTRIBUTES itself to the
     # next 28 indices via explode + hash aggregate — an equi-join plan
     # (no BNLJ range join), exact BIGINT sums in any order.
-    # Bounded frame (O(distinct days)) → single-partition bounded rank (r11).
+    # Bounded frame (O(distinct days)) → single-partition bounded rank.
     r = with_bounded_rank(daily, ["day"], out="_i")
     contrib = r.select(
         F.explode(F.sequence(F.col("_i") + 1, F.col("_i") + 28)).alias("_i"),
@@ -6902,9 +6899,8 @@ def order_size_histogram(spark: SparkSession, sf: str) -> DataFrame:
 )
 def session_bounce_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Sessionized bounce rate: sessions are 30-minute-gap islands per
-    user (batch twin of the stateful streaming sessionizer); a bounce
-    is a single-event session. Session ids come from the classic
-    cumulative-sum-of-start-flags — both windows are per-user,
+    user; a bounce is a single-event session. Session ids come from
+    the classic cumulative-sum-of-start-flags — both windows are per-user,
     time-ordered with event_id as the deterministic tie-break, so ONE
     exchange on user_id feeds the lag, the running sum, and the
     per-session aggregate. Gap comparisons run on exact microsecond
@@ -8789,7 +8785,7 @@ def acf_daily_revenue(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.timeseries import acf
 
     ev = load(spark, sf, "events")
-    # r12: acf() is now a single-pass fold (one groupBy carries spine
+    # acf() is a single-pass fold (one groupBy carries spine
     # + moments), so the day spine has exactly ONE consumer — no
     # persist; the corpus is scanned once by construction.
     daily = ev.groupBy(
@@ -9560,7 +9556,7 @@ def hybrid_search_rrf(spark: SparkSession, sf: str) -> DataFrame:
     # Rank the (already top-20, bounded) BM25 arm with the bounded-
     # frame rank — no unpartitioned window (plan-audit invariant), and
     # no range-sampling/persist/offsets machinery either: the arm is
-    # O(k) rows by construction (r11, SCALE.md rank-free audit).
+    # O(k) rows by construction (SCALE.md rank-free audit).
     b_ranked = with_bounded_rank(
         # pin=False: single consumer (the fusion join) — no branch can
         # re-execute the upstream, so skip the materialization job.
@@ -9593,11 +9589,9 @@ def hybrid_search_rrf(spark: SparkSession, sf: str) -> DataFrame:
 def bottomk_uniform_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Per-event-type bottom-k-by-hash uniform sample
     (operators/sampling.bottomk_sample, k=32): the deterministic,
-    MERGEABLE reservoir — bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ B)
-    — whose streaming twin (streaming/pipeline.bottomk_sample_stream)
-    reaches the bit-identical state under any micro-batch split
-    (parity pinned in test_streaming.py). One group-partitioned
-    window; md5 priorities are engine-portable → bit-exact."""
+    MERGEABLE reservoir — bottom-k(A ∪ B) = bottom-k(bottom-k(A) ∪ B).
+    One group-partitioned window; md5 priorities are engine-portable
+    → bit-exact."""
     from .operators.sampling import bottomk_sample
 
     return bottomk_sample(
@@ -9759,13 +9753,13 @@ def cms_word_estimates(spark: SparkSession, sf: str) -> DataFrame:
     bit-identical in any engine."""
     from .operators.sketches import CMS_DEPTH, CMS_WIDTH, cms_build
 
-    # Deliberately NOT spread_for_cpu_map (r9 arbitration of the r6→r8
-    # +23% regression): unlike the dedup family's ~1300-hash-per-doc
+    # Deliberately NOT spread_for_cpu_map (a spread here once cost
+    # +23%): unlike the dedup family's ~1300-hash-per-doc
     # shingle maps, the per-row work here is ONE regex split — a cheap,
     # I/O-shaped map. A/B at sf0.1 warm best-of-3 (×2): spread 0.85 /
     # 0.98 s vs unspread 0.68 s — the repartition shuffles the raw text
     # for no CPU win and costs an extra AQE stage. The single-task
-    # fusion the r9 spread targeted was cold-JIT, not steady state.
+    # fusion a spread would target is cold-JIT, not steady state.
     # At 100 TB the corpus is many files → the scan is already wide.
     docs = load(spark, sf, "documents").select("text")
     toks = docs.select(
@@ -9782,15 +9776,15 @@ def cms_word_estimates(spark: SparkSession, sf: str) -> DataFrame:
         toks.groupBy("w").agg(F.count(F.lit(1)).alias("true_cnt"))
     )
     sketch = cms_build(truec, "w", weight_col="true_cnt")
-    # r12 (guide §2.3/§2.4): the sketch already CONTAINS the stream
+    # The sketch already CONTAINS the stream
     # total — each depth row counts every occurrence exactly once, so
     # n = Σ cnt over the d=0 slice, an exact integer identity with
     # Σ true_cnt. Folding n into the same 1-row cell-map aggregate
     # that cms_estimate's lookup shape uses lets the heavy-hitter
     # filter AND the estimates run as pure expressions on ONE
-    # broadcast row: the r11 tot-aggregate (a second pass over the
-    # cached vocab), its broadcast, the probes×sketch join and the
-    # est-back-to-probes join all disappear — 12 jobs → 5 at sf0.1,
+    # broadcast row: no tot-aggregate (a second pass over the cached
+    # vocab), no broadcast of it, no probes×sketch join and no
+    # est-back-to-probes join — 5 jobs at sf0.1 instead of 12,
     # bit-identical output (same md5 buckets, same min-over-depth,
     # same integer threshold compare).
     smap = sketch.agg(
@@ -9987,10 +9981,9 @@ def t_closeness_report(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def events_sliding_rates(spark: SparkSession, sf: str) -> DataFrame:
-    """Hopping-window event rates (1 h window, 15 min hop): the BATCH
-    twin of streaming/pipeline.sliding_counts, sharing Spark's native
-    window() assignment — each event lands in exactly window/slide = 4
-    windows map-side (an explode, never a range self-join), then one
+    """Hopping-window event rates (1 h window, 15 min hop): Spark's
+    native window() assignment puts each event in exactly window/slide
+    = 4 windows map-side (an explode, never a range self-join), then one
     partial-aggregated groupBy(window, type). The oracle reproduces
     the epoch-aligned bucket arithmetic with time_bucket, proving the
     two engines agree on window identity — bit-exact."""
@@ -10303,8 +10296,7 @@ def gdpr_delete_audit(spark: SparkSession, sf: str) -> DataFrame:
     (customer → orders → lineitem) — children pruned in inverse
     writer-FK order via broadcast semi/anti equi-joins, the
     set-oriented twin of the reference writer's FK-ordered cascade.
-    Integer counts → bit-exact; pair with upsert_partitioned_parquet
-    to rewrite only touched partitions."""
+    Integer counts → bit-exact."""
     from .operators.maintenance import cascade_delete
 
     frames = {

@@ -48,13 +48,15 @@ then drained or pushed, and an upsert ends in its upsert statement.
    which ships in Spark's jars (tests/test_jdbc_live_derby.py), and
    DuckDB's JDBC jar (tests/test_jdbc_live_duckdb.py).
 2. **DB-API route** (``options["dbapi_connect"]``, a zero-arg callable
-   returning a DB-API connection; also the streaming upsert sink):
-   rows are drained to the driver and sent in ``executemany`` batches.
-   Upsert stays row-wise, because a streaming micro-batch can repeat a
-   key: the row form keeps the last row, where a set-wise
-   ``INSERT … SELECT`` rejects the repeat. Every row funnels through
-   the driver, so the route refuses inputs above ``dbapi_max_rows``
-   (default :data:`DBAPI_MAX_ROWS`) and points at route 1 instead.
+   returning a DB-API connection): rows are drained to the driver and
+   sent in ``executemany`` batches. Upsert stays row-wise, because the
+   input can repeat a key: ``prepare`` dedups only on unique fields, so
+   a ``write_jdbc`` that takes its keys from ``options["key_cols"]``
+   gets the frame as it is. The row form keeps the last row, where a
+   set-wise ``INSERT … SELECT`` rejects the repeat. Every row funnels
+   through the driver, so the route refuses inputs above
+   ``dbapi_max_rows`` (default :data:`DBAPI_MAX_ROWS`) and points at
+   route 1 instead.
 """
 
 from __future__ import annotations
@@ -599,9 +601,9 @@ def dbapi_write(
         raise
     finally:
         cur.close()
-        # Streaming callers (stream_upsert_to_db's foreachBatch) invoke
-        # this once per micro-batch — an unclosed connection per batch
-        # accumulates until the server's connection limit kills the job.
+        # ``connect`` opens a new connection on every call, so one left
+        # open per write accumulates until the server's connection limit
+        # fails later writes.
         try:
             conn.close()
         except Exception:  # noqa: BLE001 - close is best-effort

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from tensei_agent_spark.operators.dedup import (
@@ -131,31 +130,6 @@ def test_word_ngram_spans_and_blocks(spark):
     # non-overlapping blocks of doc 1: "a b c", "d e f" — no repeats
     blocks = word_ngram_spans(docs.filter("doc_id = 1"), w=3, step=3).collect()
     assert sorted(r["start_pos"] for r in blocks) == [1, 4]
-
-
-def test_segment_dedup_paragraphs(spark):
-    """Paragraph-level exact dedup: repeated paragraphs flagged, first
-    occurrence (by id, position) kept, normalization folds case/ws."""
-    from tensei_agent_spark.operators.dedup import segment_dedup
-
-    docs = spark.createDataFrame(
-        [
-            (1, "Intro text.\n\nSHARED  boilerplate\n\nunique one"),
-            (2, "shared boilerplate\n\nunique two"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = segment_dedup(docs).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # the normalized shared paragraph has 2 copies; doc 1's is kept
-    shared = [r for r in rows if r["n_copies"] == 2]
-    assert len(shared) == 2
-    keepers = {r["doc_id"]: r["keep"] for r in shared}
-    assert keepers == {1: True, 2: False}
-    # unique paragraphs all keep
-    assert all(r["keep"] for r in rows if r["n_copies"] == 1)
 
 
 def test_ngram_jaccard_bit_screen_parity(spark):
@@ -533,31 +507,6 @@ def test_boilerplate_coverage_flags_shared_template(spark):
     # Doc 3 has the header too but is alone in siteB -> 0.
     assert got[3]["n_boiler"] == 0
     assert got[4]["n_boiler"] == 0
-
-
-def test_tune_lsh_tracks_threshold():
-    from tensei_agent_spark.operators.dedup import tune_lsh
-
-    # Low threshold wants many bands (high recall at low s); high
-    # threshold wants long rows (suppress low-s collisions).
-    b_lo, r_lo, _ = tune_lsh(0.3, 16)
-    b_hi, r_hi, _ = tune_lsh(0.9, 16)
-    assert b_lo * r_lo == 16 and b_hi * r_hi == 16
-    assert r_lo < r_hi
-    # Recall-weighted tuning at J=0.8 recovers the repo's default
-    # 16 hashes / 4 bands with high collision probability at the
-    # threshold (balanced weighting trades that recall for fewer
-    # low-s candidates).
-    b80, r80, p80 = tune_lsh(0.8, 16, fn_weight=5.0)
-    assert (b80, r80) == (4, 4) and p80 > 0.85
-    # Recall weighting pushes toward more bands (or equal).
-    b_bal, _, _ = tune_lsh(0.6, 16, fn_weight=1.0)
-    b_rec, _, _ = tune_lsh(0.6, 16, fn_weight=5.0)
-    assert b_rec >= b_bal
-    import pytest
-
-    with pytest.raises(ValueError):
-        tune_lsh(1.5, 16)
 
 
 def test_bucket_cap_parity_below_cap(spark):

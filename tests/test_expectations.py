@@ -40,34 +40,6 @@ def test_contract_rejects_unknown_check(spark):
         check_contract(df, [{"column": "k", "check": "positive"}]).collect()
 
 
-def test_gated_commit_blocks_bad_batches(spark, tmp_path):
-    from tensei_agent_spark.operators.expectations import (
-        ContractViolation,
-        gated_commit,
-    )
-    from tensei_agent_spark.operators.maintenance import ManifestTable
-
-    table = ManifestTable(spark, str(tmp_path / "gated"))
-    rules = [
-        {"column": "k", "check": "not_null"},
-        {"column": "v", "check": "range", "min": 0},
-    ]
-    good = spark.createDataFrame([(1, 5.0), (2, 7.0)], "k long, v double")
-    v1 = gated_commit(table, good, rules)
-    assert table.read().count() == 2
-
-    bad = spark.createDataFrame([(None, -3.0)], "k long, v double")
-    with pytest.raises(ContractViolation) as exc:
-        gated_commit(table, bad, rules)
-    assert len(exc.value.failures) == 2
-    # Table untouched: same version, same rows.
-    assert table.read().count() == 2
-    v2 = gated_commit(
-        table, spark.createDataFrame([(3, 1.0)], "k long, v double"), rules
-    )
-    assert v2 == v1 + 1 and table.read().count() == 3
-
-
 def test_expression_rule_counts_null_predicates(spark):
     df = spark.createDataFrame(
         [(1.0,), (None,), (-2.0,)], "amount double"

@@ -1,175 +1,9 @@
-"""Cross-run incremental processing via the parquet ledger."""
+"""Incremental MinHash-LSH index, and the FK-graph maintenance
+operators (cascade delete, pseudonymization)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-
-from tensei_agent_spark.operators.incremental import ParquetLedger, process_increment
-
-
-def test_ledger_filters_already_processed(spark, tmp_path):
-    ledger = ParquetLedger(spark, str(tmp_path / "ledger"))
-
-    def clean(df):
-        return df.withColumn("n_chars", F.length("text"))
-
-    b1 = spark.createDataFrame(
-        [(1, "aa"), (2, "bbb"), (3, "c")], ["doc_id", "text"]
-    )
-    out1 = process_increment(b1, ledger, clean)
-    assert out1.count() == 3
-
-    # batch 2 overlaps batch 1 — only the 2 new docs process
-    b2 = spark.createDataFrame(
-        [(2, "bbb"), (3, "c"), (4, "dddd"), (5, "e")], ["doc_id", "text"]
-    )
-    out2 = process_increment(b2, ledger, clean)
-    assert sorted(r["doc_id"] for r in out2.collect()) == [4, 5]
-
-    # replay of batch 2 is a no-op (idempotent)
-    out3 = process_increment(b2, ledger, clean)
-    assert out3.count() == 0
-    assert ledger.seen().count() == 5
-
-
-def test_ledger_empty_on_missing_path(spark, tmp_path):
-    ledger = ParquetLedger(spark, str(tmp_path / "never_written"))
-    assert ledger.seen().count() == 0
-    df = spark.createDataFrame([(9, "x")], ["doc_id", "text"])
-    assert ledger.filter_new(df).count() == 1
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from tensei_agent_spark.operators.maintenance import compact_parquet
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(10_000).withColumnRenamed("id", "v")
-    df.repartition(40).write.parquet(path)
-    import os
-
-    before = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert before >= 40
-    n = compact_parquet(spark, path, target_file_mb=128)
-    after = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert after == n == 1  # tiny table → single file
-    got = spark.read.parquet(path)
-    assert got.count() == 10_000
-    assert got.agg({"v": "sum"}).collect()[0][0] == 10_000 * 9_999 // 2
-
-
-def test_zorder_layout_narrows_file_envelopes(spark, tmp_path):
-    """Z-order clustering on (l_orderkey, l_suppkey) must leave every
-    output file with a min/max envelope far narrower than the global
-    range on BOTH columns — that envelope is exactly what row-group
-    statistics expose for data skipping."""
-    import pyarrow.parquet as pq
-    import glob
-
-    from tensei_agent_spark.operators.maintenance import zorder_layout
-
-    df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    n_rows = df.count()
-    out = str(tmp_path / "li_z")
-    zorder_layout(spark, df, ["l_orderkey", "l_suppkey"], out, n_files=8)
-
-    files = glob.glob(out + "/*.parquet")
-    assert len(files) == 8
-
-    spans = {"l_orderkey": [], "l_suppkey": []}
-    total_rows = 0
-    glob_min = {c: float("inf") for c in spans}
-    glob_max = {c: float("-inf") for c in spans}
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        total_rows += md.num_rows
-        schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
-        per_file = {c: [float("inf"), float("-inf")] for c in spans}
-        for rg in range(md.num_row_groups):
-            for i, name in enumerate(schema_names):
-                if name in spans:
-                    st = md.row_group(rg).column(i).statistics
-                    per_file[name][0] = min(per_file[name][0], st.min)
-                    per_file[name][1] = max(per_file[name][1], st.max)
-        for c in spans:
-            spans[c].append(per_file[c][1] - per_file[c][0])
-            glob_min[c] = min(glob_min[c], per_file[c][0])
-            glob_max[c] = max(glob_max[c], per_file[c][1])
-
-    assert total_rows == n_rows
-    for c in spans:
-        full = glob_max[c] - glob_min[c]
-        mean_span = sum(spans[c]) / len(spans[c])
-        # 8 files over a 2-D curve → each dim should shrink well below
-        # the full range (a single-column sort leaves the other dim at
-        # ~100% of the range in every file).
-        assert mean_span < 0.6 * full, (c, mean_span, full)
-
-
-def test_upsert_partitioned_parquet_rewrites_only_touched(spark, tmp_path):
-    """Partition-scoped MERGE: updated keys replaced, new keys added,
-    and the files of untouched partitions are byte-identical on disk
-    (dynamic partition overwrite never rewrote them)."""
-    import os
-
-    from tensei_agent_spark.operators.maintenance import upsert_partitioned_parquet
-
-    path = str(tmp_path / "tbl")
-    seed = spark.createDataFrame(
-        [(1, "a", 10), (2, "a", 20), (3, "b", 30)],
-        "id long, part string, v long",
-    )
-    seed.write.partitionBy("part").parquet(path)
-
-    def files_of(part):
-        d = os.path.join(path, f"part={part}")
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f)), os.path.getsize(os.path.join(d, f)))
-            for f in os.listdir(d) if f.endswith(".parquet")
-        )
-
-    before_b = files_of("b")
-    updates = spark.createDataFrame(
-        [(2, "a", 99), (4, "a", 40)], "id long, part string, v long"
-    )
-    n = upsert_partitioned_parquet(spark, updates, path, ["id"], "part")
-    assert n == 1  # only partition a touched
-
-    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: 10, 2: 99, 3: 30, 4: 40}
-    assert files_of("b") == before_b  # untouched partition not rewritten
-
-
-def test_upsert_partitioned_parquet_bootstrap(spark, tmp_path):
-    """First write (no existing table) just lays down the partitions."""
-    from tensei_agent_spark.operators.maintenance import upsert_partitioned_parquet
-
-    path = str(tmp_path / "fresh")
-    df = spark.createDataFrame([(1, "a", 1)], "id long, part string, v long")
-    assert upsert_partitioned_parquet(spark, df, path, ["id"], "part") == 1
-    assert spark.read.parquet(path).count() == 1
-
-
-def test_upsert_partitioned_parquet_null_partition(spark, tmp_path):
-    """A NULL partition value in the update batch must read back the
-    default-partition rows (isin() alone never matches NULL) instead of
-    silently dropping the non-updated ones."""
-    from tensei_agent_spark.operators.maintenance import upsert_partitioned_parquet
-
-    path = str(tmp_path / "nulltbl")
-    seed = spark.createDataFrame(
-        [(1, None, 10), (2, None, 20), (3, "a", 30)],
-        "id long, part string, v long",
-    )
-    seed.write.partitionBy("part").parquet(path)
-    updates = spark.createDataFrame(
-        [(2, None, 99)], "id long, part string, v long"
-    )
-    upsert_partitioned_parquet(spark, updates, path, ["id"], "part")
-    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: 10, 2: 99, 3: 30}
 
 
 def test_minhash_index_incremental_matches_full_batch(spark, tmp_path):
@@ -216,7 +50,7 @@ def test_minhash_index_incremental_matches_full_batch(spark, tmp_path):
 
 
 def test_incremental_clusters_equal_batch_clusters(spark, tmp_path):
-    """VERDICT r10 #4: the cluster-and-keep-one production path —
+    """The cluster-and-keep-one production path —
     MinHashIndex increments + incremental_components per batch — must
     land on EXACTLY the clusters of a one-shot full recompute
     (minhash_lsh_pairs over the whole corpus → connected_components_star)
@@ -257,34 +91,6 @@ def test_incremental_clusters_equal_batch_clusters(spark, tmp_path):
     assert len(got) > 0  # the corpus has near-dup clusters by design
 
 
-def test_manifest_table_commits_time_travel_vacuum(spark, tmp_path):
-    from tensei_agent_spark.operators.maintenance import ManifestTable
-
-    t = ManifestTable(spark, str(tmp_path / "mtab"))
-    with pytest.raises(FileNotFoundError):
-        t.read()
-
-    df1 = spark.range(0, 10).withColumnRenamed("id", "k")
-    v0 = t.commit(df1)
-    assert v0 == 0 and t.read().count() == 10
-
-    df2 = spark.range(10, 15).withColumnRenamed("id", "k")
-    v1 = t.commit(df2)  # append
-    assert v1 == 1 and t.read().count() == 15
-    # time travel: v0 still reads the old snapshot
-    assert t.read(version=0).count() == 10
-
-    v2 = t.commit(spark.range(100, 103).withColumnRenamed("id", "k"),
-                  overwrite=True)
-    assert v2 == 2 and t.read().count() == 3
-    assert t.read(version=1).count() == 15
-
-    # vacuum keeps only the newest snapshot's prefixes
-    deleted = t.vacuum(keep_latest=1, min_age_seconds=0)
-    assert deleted == 2  # v0's and v1's extra prefix are unreferenced
-    assert t.read().count() == 3
-
-
 def test_minhash_index_rejects_parameter_mismatch(spark, tmp_path):
     from tensei_agent_spark.operators.incremental import MinHashIndex
 
@@ -304,80 +110,6 @@ def test_minhash_index_rejects_parameter_mismatch(spark, tmp_path):
     # same parameters still fine
     pairs, bands2 = MinHashIndex(spark, path, bands=4).match_new(docs)
     pairs.count()
-
-
-def test_manifest_table_concurrent_commit_conflicts(spark, tmp_path):
-    """Two committers racing to the same next version: the second
-    manifest create must fail loudly (O_EXCL), never silently clobber."""
-    from tensei_agent_spark.operators.maintenance import ManifestTable
-
-    t = ManifestTable(spark, str(tmp_path / "m"))
-    t.commit(spark.range(3).withColumnRenamed("id", "k"))
-    # simulate a racer that already published v1
-    import json
-    import os
-
-    mpath = os.path.join(t.root, "_manifests", "v1.json")
-    with open(mpath, "w") as f:
-        json.dump({"prefixes": []}, f)
-    with pytest.raises(FileExistsError):
-        t.commit(spark.range(3).withColumnRenamed("id", "k"))
-
-
-def test_manifest_repair_unwedges_orphan(spark, tmp_path):
-    """A committer that died after creating its manifest but before the
-    pointer flip wedges the table; repair() clears the orphan."""
-    import json
-    import os
-
-    from tensei_agent_spark.operators.maintenance import ManifestTable
-
-    t = ManifestTable(spark, str(tmp_path / "m"))
-    t.commit(spark.range(3).withColumnRenamed("id", "k"))
-    orphan = os.path.join(t.root, "_manifests", "v1.json")
-    with open(orphan, "w") as f:
-        json.dump({"prefixes": []}, f)
-    with pytest.raises(FileExistsError, match="repair"):
-        t.commit(spark.range(3).withColumnRenamed("id", "k"))
-    assert t.repair() == 1
-    v = t.commit(spark.range(3).withColumnRenamed("id", "k"))
-    assert v == 1 and t.read().count() == 6
-
-    # vacuum guards: keep_latest=0 rejected; over-asking tolerates
-    # already-vacuumed manifests
-    with pytest.raises(ValueError):
-        t.vacuum(keep_latest=0)
-    t.vacuum(keep_latest=1, min_age_seconds=0)
-    assert t.vacuum(keep_latest=5, min_age_seconds=0) == 0
-
-
-def test_schema_diff_reports_drift(spark):
-    from tensei_agent_spark.operators.maintenance import schema_diff
-
-    old = spark.createDataFrame([], "a int, b string, c double")
-    new = spark.createDataFrame([], "a bigint, b string, d date")
-    got = schema_diff(old, new)
-    assert got["added"] == [("d", "date")]
-    assert got["removed"] == [("c", "double")]
-    assert got["retyped"] == [("a", "int", "bigint")]
-
-    # Nullability relaxation: NOT NULL -> nullable is flagged.
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    strict = spark.createDataFrame(
-        [], StructType([StructField("k", LongType(), nullable=False)])
-    )
-    loose = spark.createDataFrame(
-        [], StructType([StructField("k", LongType(), nullable=True)])
-    )
-    assert schema_diff(strict, loose)["nullability_relaxed"] == ["k"]
-    assert schema_diff(loose, strict)["nullability_relaxed"] == []
-    # Identical schemas -> clean report.
-    assert all(not v for v in schema_diff(old, old).values())
 
 
 def test_cascade_delete_prunes_fk_chain(spark):
@@ -455,69 +187,6 @@ def test_pseudonymize_preserves_joins_and_drops_pii(spark):
         {"orders": orders}, {"orders": ["o_custkey"]}, salt="s2"
     )
     assert toks != {r["o_custkey"] for r in other["orders"].collect()}
-
-
-def test_table_digest_order_insensitive(spark):
-    from tensei_agent_spark.operators.maintenance import table_digest
-
-    a = spark.createDataFrame([(1, "x"), (2, "y"), (3, None)], "k long, v string")
-    b = spark.createDataFrame([(3, None), (1, "x"), (2, "y")], "k long, v string")
-    assert table_digest(a) == table_digest(b.repartition(5))
-    c = spark.createDataFrame([(1, "x"), (2, "z"), (3, None)], "k long, v string")
-    assert table_digest(a) != table_digest(c)
-
-
-def test_compact_small_files_preserves_content(spark, tmp_path):
-    from tensei_agent_spark.operators.maintenance import (
-        compact_small_files,
-        table_digest,
-    )
-
-    path = str(tmp_path / "frag")
-    df = spark.range(0, 10_000).withColumn("v", (F.col("id") % 97))
-    df.repartition(40).write.parquet(path)
-    before = table_digest(spark.read.parquet(path))
-    stats = compact_small_files(spark, path, target_bytes=10**9)
-    assert stats["files_before"] >= 40
-    assert stats["files_after"] == 1
-    assert table_digest(spark.read.parquet(path)) == before
-
-
-def test_compact_small_files_counts_partitioned_input_recursively(
-    spark, tmp_path
-):
-    """files_before/files_after use the SAME recursive walk — a
-    hive-partitioned input's data files live one level down and must
-    be counted, and the flat compacted output must agree with an
-    independent recursive count."""
-    import glob
-    import os
-
-    from tensei_agent_spark.operators.maintenance import compact_small_files
-
-    path = str(tmp_path / "frag_part")
-    df = spark.range(0, 1000).withColumn("p", F.col("id") % 4)
-    df.repartition(8).write.partitionBy("p").parquet(path)
-    n_in = len(
-        [
-            f
-            for f in glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(f)
-            and not os.path.basename(f).startswith(("_", "."))
-        ]
-    )
-    assert n_in >= 8  # nested under p=*/ — a flat glob would see 0
-    stats = compact_small_files(spark, path, target_bytes=10**9)
-    assert stats["files_before"] == n_in
-    n_out = len(
-        [
-            f
-            for f in glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(f)
-            and not os.path.basename(f).startswith(("_", "."))
-        ]
-    )
-    assert stats["files_after"] == n_out == 1
 
 
 def test_cascade_delete_handles_stacked_diamonds(spark):

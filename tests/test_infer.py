@@ -87,39 +87,3 @@ def test_dbapi_metadata():
         "id": "long", "name": "string", "bal": "decimal(12,2)",
         "born": "date", "flag": "boolean",
     }
-
-
-def test_schema_diff_detects_drift():
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from tensei_agent_spark.infer import schema_diff
-
-    old = StructType(
-        [
-            StructField("id", LongType(), False),
-            StructField("name", StringType()),
-            StructField("price", LongType()),
-            StructField("gone", StringType()),
-        ]
-    )
-    new = StructType(
-        [
-            StructField("id", LongType(), True),  # nullability loosened
-            StructField("name", StringType()),
-            StructField("price", DoubleType()),  # type change
-            StructField("fresh", StringType()),  # added
-        ]
-    )
-    d = schema_diff(old, new)
-    assert d["added"] == ["fresh"]
-    assert d["removed"] == ["gone"]
-    assert d["changed"] == ["price"]
-    assert d["nullability"] == ["id"]
-    assert d["compatible"] is False
-    assert schema_diff(old, old)["compatible"] is True

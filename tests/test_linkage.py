@@ -175,44 +175,6 @@ def test_pattern_counts_total_matches_pairs(spark):
     assert sum(r["n_pairs"] for r in pc.collect()) == pairs.count()
 
 
-def test_incremental_pairs_match_full_run_restricted_to_new(spark):
-    """Incremental linkage must equal the full-corpus pair set
-    restricted to pairs touching the new batch — the MinHashIndex
-    incremental contract, for blocking."""
-    from tensei_agent_spark.operators.linkage import (
-        blocked_pairs,
-        incremental_pairs,
-    )
-
-    everyone = _people(spark)
-    corpus = everyone.filter(F.col("id") <= 4)
-    new = everyone.filter(F.col("id") > 4)
-
-    full = {
-        frozenset((r["id_a"], r["id_b"]))
-        for r in blocked_pairs(
-            everyone, None, ["name", "city"], "id", ["bal"]
-        ).collect()
-    }
-    new_ids = {5, 6}
-    want = {p for p in full if p & new_ids}
-    got = {
-        frozenset((r["id_a"], r["id_b"]))
-        for r in incremental_pairs(
-            new, corpus, ["name", "city"], "id", ["bal"]
-        ).collect()
-    }
-    assert got == want
-    # first batch: degenerates to self-linkage
-    first = {
-        frozenset((r["id_a"], r["id_b"]))
-        for r in incremental_pairs(
-            corpus, None, ["name", "city"], "id", ["bal"]
-        ).collect()
-    }
-    assert first == {p for p in full if not (p & new_ids)}
-
-
 def test_sorted_neighborhood_pairs_exact_window(spark):
     from tensei_agent_spark.operators.linkage import sorted_neighborhood_pairs
 
@@ -287,7 +249,6 @@ def test_empty_inputs_do_not_break(spark):
         blocked_pairs,
         em_fellegi_sunter,
         exact,
-        incremental_pairs,
         score_pairs,
         sorted_neighborhood_pairs,
     )
@@ -298,9 +259,7 @@ def test_empty_inputs_do_not_break(spark):
 
     assert blocked_pairs(empty, None, ["city"], "id", ["name"]).count() == 0
     assert blocked_pairs(one, None, ["city"], "id", ["name"]).count() == 0
-    assert (
-        incremental_pairs(one, empty, ["city"], "id", ["name"]).count() == 0
-    )
+    assert blocked_pairs(one, empty, ["city"], "id", ["name"]).count() == 0
     assert sorted_neighborhood_pairs(empty, ["bal", "id"], "id").count() == 0
     assert sorted_neighborhood_pairs(one, ["bal", "id"], "id").count() == 0
     ag = agreement_vectors(

@@ -5,10 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tensei_agent_spark.operators.sampling import (
-    deterministic_sample,
-    hash_split,
-)
+from tensei_agent_spark.operators.sampling import hash_split
 from tensei_agent_spark.operators.text import chunk_text
 
 
@@ -29,17 +26,6 @@ def test_hash_split_salt_changes_assignment(spark):
     a = hash_split(df, "k", {"a": 0.5, "b": 0.5})
     b = hash_split(df, "k", {"a": 0.5, "b": 0.5}, salt="v2")
     assert a.exceptAll(b).count() > 0
-
-
-def test_deterministic_sample_is_subset_and_stable(spark):
-    df = spark.range(2000).withColumnRenamed("id", "k")
-    s = deterministic_sample(df, "k", 0.25)
-    n = s.count()
-    assert 0 < n < 2000
-    assert s.exceptAll(deterministic_sample(df.repartition(5), "k", 0.25)).count() == 0
-    # smaller fraction ⊆ larger fraction (nested prefixes of bucket space)
-    s10 = deterministic_sample(df, "k", 0.10)
-    assert s10.exceptAll(s).count() == 0
 
 
 def test_chunk_text_coverage_and_overlap(spark):
@@ -156,65 +142,6 @@ def test_shuffle_shards_deterministic_and_dense(spark):
         for r in a.filter("shard = 0").orderBy("pos").collect()
     ]
     assert first_shard != sorted(first_shard)
-
-
-def test_write_training_shards_one_ordered_file_per_shard(spark, tmp_path):
-    import glob
-    import gzip
-    import json as pyjson
-    import os
-
-    from tensei_agent_spark.sinks.shards import write_training_shards
-
-    df = spark.range(0, 300).withColumnRenamed("id", "doc_id").withColumn(
-        "text", F.concat(F.lit("doc-"), F.col("doc_id"))
-    )
-    out = str(tmp_path / "shards")
-    shards = write_training_shards(df, "doc_id", out, n_shards=5, salt="e1")
-    # an entry for every shard id, one file each
-    assert sorted(shards) == [0, 1, 2, 3, 4]
-    assert all(len(v) == 1 for v in shards.values())
-    files = [shards[i][0] for i in range(5)]
-    assert len(glob.glob(os.path.join(out, "shard=*"))) == 5
-
-    from tensei_agent_spark.operators.sampling import shuffle_shards
-
-    want = {
-        r["doc_id"]: (r["shard"], r["pos"])
-        for r in shuffle_shards(df, "doc_id", 5, salt="e1").collect()
-    }
-    seen = 0
-    for i, f in enumerate(files):
-        with gzip.open(f, "rt") as fh:
-            rows = [pyjson.loads(line) for line in fh]
-        # file row order IS the shard's pos order, dense from 1
-        assert [r["pos"] for r in rows] == list(range(1, len(rows) + 1))
-        # partitionBy moved the shard column into the directory name
-        shard_from_path = int(f.split("shard=")[1].split("/")[0])
-        assert shard_from_path == i
-        for r in rows:
-            assert want[r["doc_id"]] == (shard_from_path, r["pos"])
-        seen += len(rows)
-    assert seen == 300
-
-    # reproducible: a second export yields byte-identical shard contents
-    out2 = str(tmp_path / "shards2")
-    shards2 = write_training_shards(df, "doc_id", out2, n_shards=5, salt="e1")
-    files2 = [shards2[i][0] for i in range(5)]
-    for a, b in zip(files, files2):
-        with gzip.open(a, "rt") as fa, gzip.open(b, "rt") as fb:
-            assert fa.read() == fb.read()
-
-
-def test_write_training_shards_empty_shard_entry(spark, tmp_path):
-    from tensei_agent_spark.sinks.shards import write_training_shards
-
-    one = spark.range(0, 1).withColumnRenamed("id", "doc_id")
-    shards = write_training_shards(
-        one, "doc_id", str(tmp_path / "s"), n_shards=4, salt="x"
-    )
-    assert sorted(shards) == [0, 1, 2, 3]
-    assert sum(len(v) for v in shards.values()) == 1  # 3 empty, marked
 
 
 def test_weighted_sample_aes_biases_and_replays(spark):

@@ -1,11 +1,10 @@
-"""Scale-toolbox join tests: salting correctness, bucketed co-located
-joins (shuffle-free), and the distributed row-index invariants."""
+"""Scale-toolbox join tests: salting correctness, interval joins, and
+the distributed row-index invariants."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tensei_agent_spark.operators.joins import bucketed_table
 from tensei_agent_spark.operators.windows import row_index
 from tensei_agent_spark.operators.skew import salted_join
 
@@ -25,32 +24,6 @@ def test_salted_join_matches_plain_join(spark):
         F.count(F.lit(1)).alias("n"), F.sum("w").alias("s")
     ).first()
     assert (plain["n"], plain["s"]) == (salted["n"], salted["s"])
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    """Two tables bucketed on the join key must sort-merge join without
-    a shuffle exchange (broadcast disabled to force the SMJ path — with
-    small tables the planner prefers broadcast, which is also fine)."""
-    orders = spark.range(1000).select(
-        F.col("id").alias("orderkey"), (F.col("id") % 7).alias("x")
-    )
-    items = spark.range(3000).select(
-        (F.col("id") % 1000).alias("orderkey"), F.col("id").alias("item")
-    )
-    t1 = bucketed_table(orders, "b_orders", ["orderkey"], 8)
-    t2 = bucketed_table(items, "b_items", ["orderkey"], 8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = t1.join(t2, "orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffleExchange" not in plan and "Exchange hashpartitioning" not in plan, (
-            f"bucketed join still shuffles:\n{plan[:2000]}"
-        )
-        assert "Bucketed: true" in plan
-        assert joined.count() == 3000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_row_index_dense_and_ordered(spark):
@@ -125,65 +98,6 @@ def test_interval_overlap_join_empty_sides(spark):
         [], "k int, id_b int, sb timestamp, eb timestamp"
     )
     assert interval_overlap_join(a, b, "k", "sa", "ea", "sb", "eb").count() == 0
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Co-bucketed tables join without ANY shuffle: the O(data)
-    exchange is paid once at layout time, then every key-join is
-    map-side — the core 100 TB co-location strategy."""
-    from tensei_agent_spark.catalog import load
-    from tensei_agent_spark.operators.maintenance import write_bucketed
-
-    sf = "/root/testdata/sf0.001"
-    write_bucketed(
-        load(spark, sf, "orders"), "t_orders_b", ["o_orderkey"], 8,
-        sort_cols=["o_orderkey"],
-    )
-    write_bucketed(
-        load(spark, sf, "lineitem"), "t_lineitem_b", ["l_orderkey"], 8,
-        sort_cols=["l_orderkey"],
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("t_lineitem_b").join(
-            spark.table("t_orders_b"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        n = j.count()  # force execution so AQE finalizes the plan
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        # correctness: every lineitem row finds its order
-        assert n == load(spark, sf, "lineitem").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
-def test_bucketed_aggregation_has_no_exchange(spark):
-    """A groupBy on the bucket key of a bucketed table aggregates
-    without a shuffle (the scan's hash partitioning satisfies the
-    aggregate's distribution requirement)."""
-    from tensei_agent_spark.catalog import load
-    from tensei_agent_spark.operators.maintenance import write_bucketed
-
-    sf = "/root/testdata/sf0.001"
-    write_bucketed(
-        load(spark, sf, "lineitem"), "t_li_agg_b", ["l_orderkey"], 8
-    )
-    try:
-        agg = (
-            spark.table("t_li_agg_b")
-            .groupBy("l_orderkey")
-            .agg(F.sum("l_quantity").alias("q"))
-        )
-        agg.count()
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_li_agg_b")
 
 
 def test_row_aligned_merge_collect_is_exact_at_sf01(spark):

@@ -23,7 +23,8 @@ def first_sentence(doc: str | None) -> str:
     return text[:160]
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's content, from the live registry."""
     rows = []
     for name, q in sorted(REGISTRY.items()):
         fn = getattr(q.build, "__wrapped__", q.build)
@@ -36,19 +37,25 @@ def main() -> None:
             )
         )
     n_exact = sum(1 for r in rows if r[1] == "bit-exact")
+    out = [
+        "# QUERIES — registry index\n\n",
+        f"Generated by `python tools/gen_queries_md.py`. "
+        f"{len(rows)} queries: {n_exact} bit-exact vs the DuckDB "
+        f"oracle, {len(rows) - n_exact} rows-only (sketch/iterative "
+        f"variants with pytest-pinned invariants — see "
+        f"tests/test_driver_contract.py allowlist).\n\n",
+        "| query | check | bench | what it does |\n|---|---|---|---|\n",
+    ]
+    for name, chk, bench, desc in rows:
+        out.append(f"| `{name}` | {chk} | {bench} | {desc} |\n")
+    return "".join(out)
+
+
+def main() -> None:
+    text = render()
     with open("QUERIES.md", "w") as f:
-        f.write("# QUERIES — registry index\n\n")
-        f.write(
-            f"Generated by `python tools/gen_queries_md.py`. "
-            f"{len(rows)} queries: {n_exact} bit-exact vs the DuckDB "
-            f"oracle, {len(rows) - n_exact} rows-only (sketch/iterative "
-            f"variants with pytest-pinned invariants — see "
-            f"tests/test_driver_contract.py allowlist).\n\n"
-        )
-        f.write("| query | check | bench | what it does |\n|---|---|---|---|\n")
-        for name, chk, bench, desc in rows:
-            f.write(f"| `{name}` | {chk} | {bench} | {desc} |\n")
-    print(f"wrote QUERIES.md ({len(rows)} rows)")
+        f.write(text)
+    print(f"wrote QUERIES.md ({len(REGISTRY)} rows)")
 
 
 if __name__ == "__main__":

@@ -3,11 +3,9 @@ in order, stopping at the first failure.
 
     python tools/round_close.py <round-number>
 
-0. QUERIES.md freshness: regenerate from the live registry, fail on
-   drift (the registry index must never lag the registry)
 1. bench at sf0.1 — behind a load-average settle gate, so the
    recorded number measures the engine on an idle box, not the close
-   pipeline's own pytest/sweep load (VERDICT r7 #6, r8 #4); then the
+   pipeline's own pytest/sweep load; then the
    per-query comparison against the previous round's BENCH artifact
    (fails on >1.5x regressions or dropped queries)
 2. full pytest (tests/)
@@ -19,7 +17,7 @@ in order, stopping at the first failure.
    → SCALE_SMOKE_r<N>.json
 
 Artifacts land in the repo root; commit them LAST, after the round's
-code work (memory: round-workflow)."""
+code work."""
 
 from __future__ import annotations
 
@@ -46,7 +44,7 @@ def settle(threshold: float = 1.5, max_wait: int = 600) -> None:
     """Block until 1-min load average drops below *threshold* (or give
     up after *max_wait* s, loudly): a bench taken while a previous
     pytest/sweep JVM is still draining measures the box, not the
-    engine. Threshold 1.5, not 4.0 (r9): a close started right after
+    engine. Threshold 1.5, not 4.0: a close started right after
     a 32-thread Spark session recorded 22.4s where three isolated
     idle runs measured 17.2-17.5s — the 1-min loadavg lags JVM
     teardown by minutes, so a loose gate lets the tail contaminate
@@ -82,7 +80,7 @@ def steal_gate(threshold: float = 5.0, max_wait: int = 600) -> None:
             cwd=REPO, capture_output=True, text=True,
         )
         try:
-            # Last stdout line only (ADVICE r11): a stray numpy/BLAS
+            # Last stdout line only: a stray numpy/BLAS
             # warning on stdout must not fail the gate open.
             steal = json.loads(
                 probe.stdout.strip().splitlines()[-1]
@@ -109,23 +107,6 @@ def main() -> None:
         sys.exit(__doc__)
     n = int(sys.argv[1])
 
-    # 0. Registry-doc freshness gate (VERDICT r10 #8): QUERIES.md is
-    # generated from the live registry — regenerate it and FAIL if the
-    # committed copy had drifted (the regenerated file stays in the
-    # tree; review and commit it, then re-run). Cheap, so it runs
-    # before anything expensive.
-    run("regenerate QUERIES.md", [sys.executable, "tools/gen_queries_md.py"])
-    drift = subprocess.run(
-        ["git", "diff", "--name-only", "--", "QUERIES.md"],
-        cwd=REPO, capture_output=True, text=True,
-    ).stdout.strip()
-    if drift:
-        sys.exit(
-            "QUERIES.md was STALE vs the registry — regenerated in the "
-            "working tree; review `git diff QUERIES.md`, commit it, and "
-            "re-run round_close"
-        )
-
     settle()
     steal_gate()
     bench = run(
@@ -148,7 +129,7 @@ def main() -> None:
     # BENCH_r artifact for the same round: the local twin carries the
     # protocol stamp and was measured by this tool under the same
     # settle gate, so the comparison never crosses methodologies when
-    # a same-protocol baseline exists (code review r10).
+    # a same-protocol baseline exists.
     prev = sorted(
         (
             int(re.search(r"r(\d+)", p).group(1)),
